@@ -16,6 +16,10 @@ Invariants the callers must keep (ADVICE r13 #3):
   as arguments, which forces exactly that);
 - thunks submit Spark jobs but never mutate shared session state.
 
+Each thunk runs with the caller's Spark local properties (job group,
+job tags, scheduler pool), so its jobs stay attributable to, and
+cancellable with, the caller's group.
+
 On a thunk failure the remaining futures are cancelled where still
 queued, every already-running sibling is awaited, and the FIRST
 failure re-raises — a partial evaluation never keeps driving jobs
@@ -24,9 +28,12 @@ during unwind.
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Callable
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Any
+
+from pyspark import SparkContext, inheritable_thread_target
 
 _MAX_WORKERS = 4
 
@@ -37,6 +44,14 @@ def overlap(*thunks: Callable[[], Any]) -> list[Any]:
     fixed-order report from them is deterministic)."""
     if len(thunks) <= 1:
         return [t() for t in thunks]
+    if SparkContext._active_spark_context is not None:
+        # pool threads start with empty JVM local properties; copy the
+        # caller's, captured now, into each thunk's thread. The
+        # callable form warns that SparkSession tags are not carried;
+        # SparkContext job tags are local properties, so they are.
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", UserWarning)
+            thunks = tuple(inheritable_thread_target(t) for t in thunks)
     n = min(len(thunks), _MAX_WORKERS)
     with ThreadPoolExecutor(max_workers=n) as pool:
         futures = [pool.submit(t) for t in thunks]

@@ -137,7 +137,7 @@ FROM t JOIN g ON g.grank = t.ti
     "chi2_feature_selection": """
 WITH dtok AS MATERIALIZED (
   SELECT DISTINCT doc_id, lang AS l,
-         unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS tok
+         unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
   FROM documents),
 tk AS (SELECT * FROM dtok WHERE length(tok) > 0),
 a_df AS (SELECT l, tok, count(*) AS a FROM tk GROUP BY 1, 2),

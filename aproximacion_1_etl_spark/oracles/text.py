@@ -957,7 +957,7 @@ FROM fin
     "naive_bayes_lang": """
 WITH toks AS MATERIALIZED (
   SELECT doc_id, lang AS true_lang,
-         unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS tok
+         unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
   FROM documents),
 tk AS (SELECT * FROM toks WHERE length(tok) > 0),
 model AS MATERIALIZED (
@@ -997,7 +997,7 @@ FROM pred WHERE rn = 1 GROUP BY 1, 2
     "vocab_gini": """
 WITH toks AS (
   SELECT lang,
-         unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS tok
+         unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
   FROM documents),
 tk AS (SELECT * FROM toks WHERE length(tok) > 0),
 counts AS (SELECT lang, tok, count(*) AS c FROM tk GROUP BY 1, 2),

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
+from collections.abc import Callable
+from typing import Any
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -73,24 +76,115 @@ def _reclaimed_dist(df: DataFrame, *paths: str) -> DataFrame:
             shutil.rmtree(p, ignore_errors=True)
 
 
-def _artifact_key(sf_dir: str, table: str) -> tuple:
-    """Cache key for memoized model artifacts: (sf_dir, source-parquet
-    mtime) so a testdata regeneration inside one long-lived process
-    retrains instead of serving a stale model. A missing file keys on
-    -1 and lets the downstream read raise the real error."""
+# The artifact registry: the one memo for trained models and simulated
+# persisted stores. _ARTIFACTS holds one (stamp, value) slot per
+# (name, sf_dir); BUILD_SECS is the build ledger, artifact name -> wall
+# seconds of its latest build in this process.
+_ARTIFACTS: dict[tuple[str, str], tuple[tuple, Any]] = {}
+BUILD_SECS: dict[str, float] = {}
+
+
+def _table_mtime(sf_dir: str, table: str) -> float:
+    """Newest mtime of a source table's parquet files; -1 for a
+    missing table, so the build's own read raises the real error."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:
         if os.path.isdir(path):
-            mt = max(
+            return max(
                 (os.path.getmtime(os.path.join(path, f))
                  for f in os.listdir(path)),
                 default=os.path.getmtime(path),
             )
-        else:
-            mt = os.path.getmtime(path)
+        return os.path.getmtime(path)
     except OSError:
-        mt = -1.0
-    return (sf_dir, mt)
+        return -1.0
+
+
+def artifact(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    tables: list[str],
+    build: Callable[[], Any],
+) -> Any:
+    """Build-once artifact ``name`` over ``sf_dir``: a trained model
+    or a simulated persisted store, which production builds once per
+    corpus and ships to every consumer.
+
+    The memo keys on the mtime of every table in ``tables``, so a
+    regenerated table rebuilds instead of serving a stale artifact;
+    ``tables`` must list every table ``build`` reads, nested artifacts
+    included. It also keys on the application id: DataFrame artifacts
+    are checkpoints owned by one SparkContext, and a restarted session
+    must rebuild rather than touch a dead RDD. A hit returns the same
+    object. The build's Spark jobs carry the job tag ``build:<name>``
+    (a tag, so the caller's job group survives) and its wall seconds
+    land in ``BUILD_SECS``. Builds are deterministic, so the memo
+    never changes a result, and two threads that miss at once only
+    build twice."""
+    sc = spark.sparkContext
+    stamp = (
+        tuple(_table_mtime(sf_dir, t) for t in tables),
+        sc.applicationId,
+    )
+    slot = _ARTIFACTS.get((name, sf_dir))
+    if slot is not None and slot[0] == stamp:
+        return slot[1]
+    tag = f"build:{name}"
+    sc.addJobTag(tag)
+    t0 = time.perf_counter()
+    try:
+        value = build()
+    finally:
+        sc.removeJobTag(tag)
+    BUILD_SECS[name] = round(time.perf_counter() - t0, 3)
+    _ARTIFACTS[(name, sf_dir)] = (stamp, value)
+    return value
+
+
+def _embedding_corpus(
+    spark: SparkSession, sf_dir: str, corpus: str
+) -> DataFrame:
+    """The named embeddings slices the vector artifacts train on:
+
+    - ``full``: the whole table;
+    - ``history``: vec_id % 4 != 0, 'yesterday's index' that the
+      append keys add today's batch to;
+    - ``half``: vec_id % 2 == 0, the aging store slice of the retrain
+      keys;
+    - ``retrain``: the half slice plus the vec_id % 8 in {1,3,5}
+      backlog, the appended corpus whose drift flips
+      q_ivf_retrain_plan's verdict;
+    - ``drift``: _pq_drift_corpus, the PQ retrain pair's appended
+      corpus with negated waves."""
+    if corpus == "drift":
+        return _pq_drift_corpus(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    v = F.col("vec_id")
+    if corpus == "full":
+        return emb
+    if corpus == "history":
+        return emb.filter(v % 4 != 0)
+    if corpus == "half":
+        return emb.filter(v % 2 == 0)
+    if corpus == "retrain":
+        return emb.filter((v % 2 == 0) | (v % 8).isin(1, 3, 5))
+    raise ValueError(f"unknown embeddings corpus {corpus!r}")
+
+
+def _document_corpus(
+    spark: SparkSession, sf_dir: str, corpus: str
+) -> DataFrame:
+    """The named documents slices the text stores build over:
+    ``full``, or ``history`` (doc_id % 4 != 0), the existing corpus
+    that the incremental keys fold the daily batch (doc_id % 4 == 0)
+    into."""
+    docs = load_table(spark, sf_dir, "documents")
+    if corpus == "full":
+        return docs
+    if corpus == "history":
+        return docs.filter(F.col("doc_id") % 4 != 0)
+    raise ValueError(f"unknown documents corpus {corpus!r}")
 
 
 def _hist_bucket(value, lo: float, width: float, n_b: int):
@@ -207,32 +301,32 @@ def _histogram_quantile_report(
     )
 
 
-_IVF_CODEBOOK_CACHE: dict[tuple, dict[int, list[float]]] = {}
-
-
 def _trained_codebook(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, corpus: str = "full"
 ) -> dict[int, list[float]]:
-    """Train-once-per-corpus IVF codebook (memoized on (sf_dir, parquet
-    mtime) so a regenerated corpus retrains): the codebook is a model
-    artifact — in production it is trained once and shipped to every
-    consumer, so the ann and semantic-dedup catalog keys sharing one
-    training run is the honest cost model, not a bench trick.
-    Deterministic, so the cache never changes a result."""
-    key = _artifact_key(sf_dir, "embeddings")
-    cb = _IVF_CODEBOOK_CACHE.get(key)
-    if cb is None:
+    """Train-once-per-corpus IVF codebook over the named embeddings
+    slice (_embedding_corpus). The codebook is a model artifact: in
+    production it is trained once and shipped to every consumer, so
+    the ann and semantic-dedup keys sharing one training run is the
+    honest cost model, not a bench trick. The ``history`` codebook is
+    the index the append keys add to; ``half`` is the aging index
+    q_ivf_retrain_plan measures drift against; ``retrain`` is what
+    executing that retrain decision produces."""
+
+    def build() -> dict[int, list[float]]:
         from aproximacion_1_etl_spark.text.vector import (
             derive_n_centroids,
             train_ivf_centroids,
         )
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        cb = train_ivf_centroids(
+        emb = _embedding_corpus(spark, sf_dir, corpus)
+        return train_ivf_centroids(
             emb, n_centroids=derive_n_centroids(emb.count()), iterations=3
         )
-        _IVF_CODEBOOK_CACHE[key] = cb
-    return cb
+
+    return artifact(
+        spark, sf_dir, f"ivf_codebook_{corpus}", ["embeddings"], build
+    )
 
 
 def _orders_cdc(
@@ -263,136 +357,26 @@ def _orders_cdc(
     return inserts, updates, deletes
 
 
-_PQ_BOOKS_CACHE: dict[tuple, dict] = {}
+def _trained_pq_books(
+    spark: SparkSession, sf_dir: str, corpus: str = "full"
+) -> dict:
+    """Train-once-per-corpus PQ subspace codebooks over the named
+    embeddings slice (_embedding_corpus), seeded from that slice's own
+    first ids. ``half`` is the aging books ('yesterday's codes') whose
+    ADC ranking q_pq_retrain_execute measures against ``drift``, the
+    retrain over the drifted appended corpus."""
 
-
-def _trained_pq_books(spark: SparkSession, sf_dir: str) -> dict:
-    """Train-once-per-corpus PQ codebooks (memoized on (sf_dir, parquet
-    mtime) — same model-artifact reasoning as _trained_codebook)."""
-    key = _artifact_key(sf_dir, "embeddings")
-    books = _PQ_BOOKS_CACHE.get(key)
-    if books is None:
+    def build() -> dict:
         from aproximacion_1_etl_spark.text.vector import train_pq_codebooks
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        books = train_pq_codebooks(emb, m=8, n_centroids=16, iterations=3)
-        _PQ_BOOKS_CACHE[key] = books
-    return books
+        return train_pq_codebooks(
+            _embedding_corpus(spark, sf_dir, corpus),
+            m=8, n_centroids=16, iterations=3,
+        )
 
-
-_APPEND_CODEBOOK_CACHE: dict[tuple, dict[int, list[float]]] = {}
-
-
-def _trained_append_codebook(
-    spark: SparkSession, sf_dir: str
-) -> dict[int, list[float]]:
-    """Codebook trained on the HISTORICAL slice only (vec_id % 4 != 0)
-    — 'yesterday's index', the artifact q_ivf_index_append appends
-    today's batch into. Memoized on (sf_dir, parquet mtime) like every
-    model artifact."""
-    from aproximacion_1_etl_spark.text.vector import (
-        derive_n_centroids,
-        train_ivf_centroids,
+    return artifact(
+        spark, sf_dir, f"pq_books_{corpus}", ["embeddings"], build
     )
-
-    key = _artifact_key(sf_dir, "embeddings")
-    cb = _APPEND_CODEBOOK_CACHE.get(key)
-    if cb is None:
-        old = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") % 4 != 0
-        )
-        cb = train_ivf_centroids(
-            old, n_centroids=derive_n_centroids(old.count()), iterations=3
-        )
-        _APPEND_CODEBOOK_CACHE[key] = cb
-    return cb
-
-
-_HALF_CODEBOOK_CACHE: dict[tuple, dict[int, list[float]]] = {}
-
-
-def _trained_half_codebook(
-    spark: SparkSession, sf_dir: str
-) -> dict[int, list[float]]:
-    """Codebook trained on the retrain-plan key's STORE slice
-    (vec_id % 2 == 0) — the aging index whose drift
-    q_ivf_retrain_plan measures as successive waves append against
-    it. Memoized on (sf_dir, parquet mtime) like every model
-    artifact; benched as its own ``half_codebook_train_sec`` line
-    item."""
-    from aproximacion_1_etl_spark.text.vector import (
-        derive_n_centroids,
-        train_ivf_centroids,
-    )
-
-    key = _artifact_key(sf_dir, "embeddings")
-    cb = _HALF_CODEBOOK_CACHE.get(key)
-    if cb is None:
-        old = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") % 2 == 0
-        )
-        cb = train_ivf_centroids(
-            old, n_centroids=derive_n_centroids(old.count()), iterations=3
-        )
-        _HALF_CODEBOOK_CACHE[key] = cb
-    return cb
-
-
-_RETRAIN_CODEBOOK_CACHE: dict[tuple, dict[int, list[float]]] = {}
-
-
-def _trained_retrain_codebook(
-    spark: SparkSession, sf_dir: str
-) -> dict[int, list[float]]:
-    """The RETRAINED codebook over the appended corpus
-    (vec_id % 2 == 0 plus the vec_id % 8 in {1,3,5} backlog — exactly
-    the corpus whose drift flipped q_ivf_retrain_plan's verdict):
-    what executing the retrain decision produces.
-    q_ivf_retrain_execute measures its recall/cost against the aging
-    half-corpus codebook. Memoized + benched as
-    ``retrain_codebook_train_sec`` like every model artifact."""
-    from aproximacion_1_etl_spark.text.vector import (
-        derive_n_centroids,
-        train_ivf_centroids,
-    )
-
-    key = _artifact_key(sf_dir, "embeddings")
-    cb = _RETRAIN_CODEBOOK_CACHE.get(key)
-    if cb is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(
-            (F.col("vec_id") % 2 == 0)
-            | (F.col("vec_id") % 8).isin(1, 3, 5)
-        )
-        cb = train_ivf_centroids(
-            corpus,
-            n_centroids=derive_n_centroids(corpus.count()),
-            iterations=3,
-        )
-        _RETRAIN_CODEBOOK_CACHE[key] = cb
-    return cb
-
-
-_HALF_PQ_BOOKS_CACHE: dict[tuple, dict] = {}
-
-
-def _trained_half_pq_books(spark: SparkSession, sf_dir: str) -> dict:
-    """AGING PQ subspace codebooks — trained on the retrain family's
-    STORE slice (vec_id % 2 == 0), seeded from that slice's own first
-    ids: 'yesterday's codes', whose ADC ranking q_pq_retrain_execute
-    measures against a fresh retrain as the corpus grows. Memoized +
-    benched as ``half_pq_books_train_sec``."""
-    from aproximacion_1_etl_spark.text.vector import train_pq_codebooks
-
-    key = _artifact_key(sf_dir, "embeddings")
-    books = _HALF_PQ_BOOKS_CACHE.get(key)
-    if books is None:
-        old = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") % 2 == 0
-        )
-        books = train_pq_codebooks(old, m=8, n_centroids=16, iterations=3)
-        _HALF_PQ_BOOKS_CACHE[key] = books
-    return books
 
 
 def _pq_drift_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -418,51 +402,23 @@ def _pq_drift_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return store.filter(F.col("vec_id") % 2 == 0).unionByName(waves)
 
 
-_RETRAIN_PQ_BOOKS_CACHE: dict[tuple, dict] = {}
-
-
-def _trained_retrain_pq_books(spark: SparkSession, sf_dir: str) -> dict:
-    """The RETRAINED PQ codebooks over the DRIFTED appended corpus
-    (_pq_drift_corpus — the store plus negated-region waves) — what
-    executing the retrain decision produces on the PQ side. Memoized
-    + benched as ``retrain_pq_books_train_sec``."""
-    from aproximacion_1_etl_spark.text.vector import train_pq_codebooks
-
-    key = _artifact_key(sf_dir, "embeddings")
-    books = _RETRAIN_PQ_BOOKS_CACHE.get(key)
-    if books is None:
-        books = train_pq_codebooks(
-            _pq_drift_corpus(spark, sf_dir), m=8, n_centroids=16,
-            iterations=3,
-        )
-        _RETRAIN_PQ_BOOKS_CACHE[key] = books
-    return books
-
-
-_BPE_MERGES_CACHE: dict[tuple, list[tuple[str, str]]] = {}
-
-
 def _trained_bpe_merges(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[str, str]]:
-    """Train-once-per-corpus BPE merge table (memoized on (sf_dir,
-    parquet mtime) — the tokenizer is a model artifact trained once and
-    shipped to every consumer, same cost model as the IVF codebook).
-    Exposed as a named builder so bench warmup can pre-build it with
-    its own line item instead of charging training to the first
-    encode-pass sample."""
-    from aproximacion_1_etl_spark.text.analysis import bpe_train_merges
+    """Train-once-per-corpus BPE merge table: the tokenizer is a model
+    artifact trained once and shipped to every consumer, the same cost
+    model as the IVF codebook."""
 
-    key = _artifact_key(sf_dir, "documents")
-    merges = _BPE_MERGES_CACHE.get(key)
-    if merges is None:
+    def build() -> list[tuple[str, str]]:
+        from aproximacion_1_etl_spark.text.analysis import bpe_train_merges
+
         docs = load_table(spark, sf_dir, "documents")
-        merges = [
+        return [
             (r["p1"], r["p2"])
             for r in bpe_train_merges(docs, n_merges=8).collect()
         ]
-        _BPE_MERGES_CACHE[key] = merges
-    return merges
+
+    return artifact(spark, sf_dir, "bpe_merges", ["documents"], build)
 
 
 BLOCKLIST_DOMAINS = ["src3.example.com", "src7.example.com", "bad.example.org"]
@@ -732,9 +688,6 @@ def _run_streaming_max_concurrency(
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-_LOGREG_CACHE: dict[tuple, list[float]] = {}
-
-
 def _logreg_feats(spark: SparkSession, sf_dir: str):
     from aproximacion_1_etl_spark.text.vector import _as_double
 
@@ -749,25 +702,22 @@ def _logreg_feats(spark: SparkSession, sf_dir: str):
 
 
 def _trained_logreg_weights(spark: SparkSession, sf_dir: str) -> list[float]:
-    """Train-once-per-corpus logreg weight vector (memoized on (sf_dir,
-    parquet mtime)). Named builder so bench warmup can pre-build it
-    with its own line item (same cost model as the IVF codebook;
-    training cost is carried by the logreg_label_model key itself)."""
-    from aproximacion_1_etl_spark.operators.ml import (
-        logistic_regression_gd,
-    )
+    """Train-once-per-corpus logreg weight vector (the same cost model
+    as the IVF codebook)."""
 
-    key = _artifact_key(sf_dir, "embeddings")
-    w = _LOGREG_CACHE.get(key)
-    if w is None:
-        w = logistic_regression_gd(
+    def build() -> list[float]:
+        from aproximacion_1_etl_spark.operators.ml import (
+            logistic_regression_gd,
+        )
+
+        return logistic_regression_gd(
             _logreg_feats(spark, sf_dir).select("y", "x1", "x2", "x3"),
             ["x1", "x2", "x3"],
             iterations=12,
             lr=2.0,
         )
-        _LOGREG_CACHE[key] = w
-    return w
+
+    return artifact(spark, sf_dir, "logreg_weights", ["embeddings"], build)
 
 
 def _logreg_scored(spark: SparkSession, sf_dir: str):
@@ -1418,27 +1368,20 @@ __all__ = [
     "_ts_str",
     "_reclaimed",
     "_reclaimed_dist",
-    "_artifact_key",
+    "BUILD_SECS",
+    "artifact",
+    "_embedding_corpus",
+    "_document_corpus",
     "_hist_bucket",
     "_cum_hist",
     "_histogram_quantile_report",
-    "_IVF_CODEBOOK_CACHE",
     "_trained_codebook",
     "_orders_cdc",
-    "_PQ_BOOKS_CACHE",
     "_trained_pq_books",
-    "_trained_half_pq_books",
     "_pq_drift_corpus",
-    "_trained_retrain_pq_books",
-    "_APPEND_CODEBOOK_CACHE",
-    "_trained_append_codebook",
-    "_trained_half_codebook",
-    "_trained_retrain_codebook",
-    "_BPE_MERGES_CACHE",
     "_trained_bpe_merges",
     "BLOCKLIST_DOMAINS",
     "_run_streaming_max_concurrency",
-    "_LOGREG_CACHE",
     "_logreg_feats",
     "_trained_logreg_weights",
     "_logreg_scored",

@@ -8,6 +8,7 @@ import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from aproximacion_1_etl_spark.functions.concurrency import overlap
 from aproximacion_1_etl_spark.sources.tables import load_table
 from .common import *  # noqa: F401,F403
 
@@ -822,12 +823,9 @@ def q_forget_user_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     try:
         # the three tables touch disjoint snapshot dirs — overlap
-        # their write/delete/count chains (driver-blocking actions)
-        # in a small pool; map preserves the manifest's table order
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            rows = list(pool.map(_one, plan))
+        # their write/delete/count chains (driver-blocking actions);
+        # results keep the manifest's table order
+        rows = overlap(*[lambda e=entry: _one(e) for entry in plan])
         return spark.createDataFrame(
             rows,
             "table_name string, n_before bigint, n_deleted bigint, "
@@ -917,14 +915,11 @@ def q_rtbf_audit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aproximacion_1_etl_spark.operators.graph import (
         forget_graph_stats,
     )
-    from aproximacion_1_etl_spark.queries.common import (
-        _trained_append_codebook,
-    )
-    from aproximacion_1_etl_spark.queries.graph import _full_graph_store
+    from aproximacion_1_etl_spark.queries.graph import _graph_store
     from aproximacion_1_etl_spark.queries.text import (
+        _bm25_index_store,
         _chunk_vector_index,
-        _full_bm25_index_store,
-        _full_dup_cluster_store,
+        _dup_cluster_store,
     )
     from aproximacion_1_etl_spark.text.analysis import (
         forget_bm25_index,
@@ -958,12 +953,12 @@ def q_rtbf_audit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # touched ONCE here, before the task pool below, so the builds
     # stay single-threaded (the getters memoize per session) and each
     # audit task starts from checkpointed state.
-    sigs, store = _full_dup_cluster_store(spark, sf_dir)
-    postings, df0, stats = _full_bm25_index_store(spark, sf_dir)
+    sigs, store = _dup_cluster_store(spark, sf_dir, "full")
+    postings, df0, stats = _bm25_index_store(spark, sf_dir, "full")
     vecidx = _chunk_vector_index(spark, sf_dir)
-    edges, gstats = _full_graph_store(spark, sf_dir)
+    edges, gstats = _graph_store(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = _trained_append_codebook(spark, sf_dir)
+    cb = _trained_codebook(spark, sf_dir, "history")
     ws_store = _weighted_sample_reserve_store(spark, sf_dir)
     # ONE materialization of the projected event relation feeds every
     # sketch/histogram surface below (bucket extrema + 2 histogram
@@ -1240,11 +1235,7 @@ def q_rtbf_audit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t_cascade, _t_cluster_sig, _t_bm25, _t_chunk, _t_lm,
         _t_graph, _t_ivf, _t_ws, _t_profile, _t_hist, _t_hll, _t_cms,
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        results = list(pool.map(lambda t: t(), tasks))
-    rows: list[tuple] = [row for rs in results for row in rs]
+    rows: list[tuple] = [row for rs in overlap(*tasks) for row in rs]
 
     return spark.createDataFrame(
         rows,

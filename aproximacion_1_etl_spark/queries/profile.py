@@ -370,42 +370,35 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WEIGHTED_SAMPLE_STORE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _weighted_sample_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SIMULATED persisted A-ES weighted sample over the existing
     corpus (doc_id % 4 != 0): the per-language top-25 from
-    functions/sampling.py::weighted_sample_topk, memoized per
-    (corpus, session) and eagerly checkpointed like the other
-    simulated persisted stores (_dup_cluster_store / _bm25_index_store
-    — ADVICE r10 #4: rebuilding it inline charged the store build to
+    functions/sampling.py::weighted_sample_topk, a registry artifact
+    eagerly checkpointed like the other simulated persisted stores
+    (ADVICE r10 #4: rebuilding it inline charged the store build to
     the fold on every bench rep). In production this is a tiny
-    parquet relation maintained by fold_weighted_sample; the bench
-    times the build as ``weighted_sample_store_build_sec`` so the
+    parquet relation maintained by fold_weighted_sample, so the
     maintenance key's number is the FOLD's cost."""
-    from aproximacion_1_etl_spark.functions.sampling import (
-        weighted_sample_topk,
-    )
 
-    key = (
-        _artifact_key(sf_dir, "documents"),
-        spark.sparkContext.applicationId,
-    )
-    cached = _WEIGHTED_SAMPLE_STORE_CACHE.get(key)
-    if cached is None:
+    def build() -> DataFrame:
+        from aproximacion_1_etl_spark.functions.sampling import (
+            weighted_sample_topk,
+        )
+
         docs = load_table(spark, sf_dir, "documents").select(
             "lang", "doc_id", "n_chars"
         )
-        cached = weighted_sample_topk(
+        return weighted_sample_topk(
             docs.filter(F.col("doc_id") % 4 != 0),
             key_col="doc_id",
             weight_col="n_chars",
             k=25,
             strata_col="lang",
         ).localCheckpoint(eager=True)
-        _WEIGHTED_SAMPLE_STORE_CACHE[key] = cached
-    return cached
+
+    return artifact(
+        spark, sf_dir, "weighted_sample_store", ["documents"], build
+    )
 
 
 def q_incremental_weighted_sample(
@@ -442,8 +435,6 @@ def q_incremental_weighted_sample(
     )
 
 
-_WEIGHTED_SAMPLE_RESERVE_CACHE: dict[tuple, DataFrame] = {}
-
 # visible sample size / over-sample reserve of the maintained A-ES
 # store (k + reserve rows stored per stratum). Oracles import these
 # instead of re-typing the literals (the sampler-module convention).
@@ -458,32 +449,29 @@ def _weighted_sample_reserve_store(
     (r13): per-language top-(k+reserve) = top-40 over the FULL
     corpus — the store shape ``forget_weighted_sample`` needs to
     delete exactly (the reserve is what back-fills the visible top-25
-    after an eviction). Memoized per (corpus, session) + eagerly
-    checkpointed like every simulated persisted store; benched as
-    ``weighted_sample_reserve_build_sec`` so the deletion key's
+    after an eviction). A registry artifact, eagerly checkpointed
+    like every simulated persisted store, so the deletion key's
     number is the FORGET's cost."""
-    from aproximacion_1_etl_spark.functions.sampling import (
-        weighted_sample_topk,
-    )
 
-    key = (
-        _artifact_key(sf_dir, "documents"),
-        spark.sparkContext.applicationId,
-    )
-    cached = _WEIGHTED_SAMPLE_RESERVE_CACHE.get(key)
-    if cached is None:
+    def build() -> DataFrame:
+        from aproximacion_1_etl_spark.functions.sampling import (
+            weighted_sample_topk,
+        )
+
         docs = load_table(spark, sf_dir, "documents").select(
             "lang", "doc_id", "n_chars"
         )
-        cached = weighted_sample_topk(
+        return weighted_sample_topk(
             docs,
             key_col="doc_id",
             weight_col="n_chars",
             k=WEIGHTED_SAMPLE_K + WEIGHTED_SAMPLE_RESERVE,
             strata_col="lang",
         ).localCheckpoint(eager=True)
-        _WEIGHTED_SAMPLE_RESERVE_CACHE[key] = cached
-    return cached
+
+    return artifact(
+        spark, sf_dir, "weighted_sample_reserve_store", ["documents"], build
+    )
 
 
 def q_weighted_sample_forget(

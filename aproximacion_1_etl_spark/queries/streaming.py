@@ -1012,7 +1012,7 @@ def q_streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from aproximacion_1_etl_spark.text.vector import ivf_assign_cells
 
-    cb = _trained_append_codebook(spark, sf_dir)
+    cb = _trained_codebook(spark, sf_dir, "history")
     n_cells = len(cb)
     emb = load_table(spark, sf_dir, "embeddings")
     hist = emb.filter(F.col("vec_id") % 4 != 0)

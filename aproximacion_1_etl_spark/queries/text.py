@@ -400,42 +400,34 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(cands)
 
 
-_DUP_CLUSTER_STORE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _dup_cluster_store(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, corpus: str = "history"
 ) -> tuple[DataFrame, DataFrame]:
-    """The SIMULATED persisted dedup state over the existing corpus
-    (doc_id % 4 != 0, the incremental_near_dup batch scheme):
-    (signature store, converged cluster assignment). In production
-    both live on disk — signatures appended per accepted batch,
-    clusters maintained by the fold this store feeds; here they are
-    rebuilt once, memoized per (corpus, session) and eagerly
-    checkpointed, with the bench timing the build as its own
-    ``dup_cluster_store_build_sec`` line item (the
-    _persisted_graph_store device) so the maintenance key's number is
-    the FOLD's cost."""
-    key = (
-        _artifact_key(sf_dir, "documents"),
-        spark.sparkContext.applicationId,
-    )
-    cached = _DUP_CLUSTER_STORE_CACHE.get(key)
-    if cached is None:
-        old = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 4 != 0
-        )
+    """The SIMULATED persisted dedup state over a documents slice
+    (_document_corpus): (signature store, converged cluster
+    assignment). ``history`` is the 75% slice the incremental fold
+    starts from; ``full`` is the store the deletion key mutates. In
+    production both live on disk: signatures appended per accepted
+    batch, clusters maintained by the fold this store feeds. Here they
+    are a registry artifact, eagerly checkpointed, so the maintenance
+    keys' numbers are the fold's or the forget's cost, not the
+    history build a real deployment already has on disk."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        docs = _document_corpus(spark, sf_dir, corpus)
         sigs = minhash_signatures(
-            word_shingles(old, distinct=False)
+            word_shingles(docs, distinct=False)
         ).localCheckpoint(eager=True)
         store = (
             dedup_clusters(minhash_candidate_pairs(sigs, min_matching_bands=2))
             .select("doc_id", "cluster_id")
             .localCheckpoint(eager=True)
         )
-        cached = (sigs, store)
-        _DUP_CLUSTER_STORE_CACHE[key] = cached
-    return cached
+        return sigs, store
+
+    return artifact(
+        spark, sf_dir, f"dup_cluster_store_{corpus}", ["documents"], build
+    )
 
 
 def q_incremental_dup_clusters(
@@ -476,40 +468,6 @@ def q_incremental_dup_clusters(
     return fold_dup_clusters(store, vs_store.unionByName(within))
 
 
-_FULL_DUP_CLUSTER_STORE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
-def _full_dup_cluster_store(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """The SIMULATED persisted dedup state over the FULL corpus —
-    the store the deletion key mutates (the incremental twin's
-    _dup_cluster_store covers the 75% slice the append fold starts
-    from): (signature store, converged cluster assignment), memoized
-    per (corpus, session) + eagerly checkpointed; the bench times the
-    build as ``full_dup_cluster_store_build_sec`` so the forget key's
-    number is the rebuild-affected-components cost, not the history
-    build a real deployment already has on disk."""
-    key = (
-        _artifact_key(sf_dir, "documents"),
-        spark.sparkContext.applicationId,
-    )
-    cached = _FULL_DUP_CLUSTER_STORE_CACHE.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents")
-        sigs = minhash_signatures(
-            word_shingles(docs, distinct=False)
-        ).localCheckpoint(eager=True)
-        store = (
-            dedup_clusters(minhash_candidate_pairs(sigs, min_matching_bands=2))
-            .select("doc_id", "cluster_id")
-            .localCheckpoint(eager=True)
-        )
-        cached = (sigs, store)
-        _FULL_DUP_CLUSTER_STORE_CACHE[key] = cached
-    return cached
-
-
 def q_dup_clusters_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10 CLUSTER-STORE DELETION — the governance edge of the
     dedup-cluster trio (VERDICT r10 task 6), completing
@@ -527,7 +485,7 @@ def q_dup_clusters_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash equality proves forget == rebuild."""
     from aproximacion_1_etl_spark.text.dedup import forget_doc_clusters
 
-    sigs, store = _full_dup_cluster_store(spark, sf_dir)
+    sigs, store = _dup_cluster_store(spark, sf_dir, "full")
     deleted = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 7 == 0)
@@ -915,38 +873,33 @@ def q_chunk_retrieval_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BM25_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
 def _bm25_index_store(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, corpus: str = "history"
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The SIMULATED persisted BM25 index over the existing corpus
-    (doc_id % 4 != 0): (postings, df, stats) from
-    text/analysis.py::bm25_index, memoized per (corpus, session) and
-    eagerly checkpointed — in production these are parquet relations
-    (postings bucketed by term) maintained by fold_bm25_index; the
-    bench times the build as ``bm25_index_build_sec`` so the
-    maintenance key's number is the fold + scoring cost."""
-    from aproximacion_1_etl_spark.text.analysis import bm25_index
+    """The SIMULATED persisted BM25 index over a documents slice
+    (_document_corpus): (postings, df, stats) from
+    text/analysis.py::bm25_index. ``history`` is the slice the fold
+    key appends to; ``full`` is the index the deletion key shrinks. In
+    production these are parquet relations (postings bucketed by
+    term); here a registry artifact, eagerly checkpointed, so the
+    maintenance keys' numbers are the fold or forget + scoring
+    cost."""
 
-    key = (
-        _artifact_key(sf_dir, "documents"),
-        spark.sparkContext.applicationId,
-    )
-    cached = _BM25_INDEX_CACHE.get(key)
-    if cached is None:
-        old = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 4 != 0
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
+        from aproximacion_1_etl_spark.text.analysis import bm25_index
+
+        postings, df0, stats = bm25_index(
+            _document_corpus(spark, sf_dir, corpus)
         )
-        postings, df0, stats = bm25_index(old)
-        cached = (
+        return (
             postings.localCheckpoint(eager=True),
             df0.localCheckpoint(eager=True),
             stats.localCheckpoint(eager=True),
         )
-        _BM25_INDEX_CACHE[key] = cached
-    return cached
+
+    return artifact(
+        spark, sf_dir, f"bm25_index_{corpus}", ["documents"], build
+    )
 
 
 def q_incremental_bm25_index(
@@ -997,37 +950,6 @@ def q_incremental_bm25_index(
     return bm25_score_from_index(qtf, dfq, stats_fmt, qdf, k=10)
 
 
-_FULL_BM25_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
-def _full_bm25_index_store(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The SIMULATED persisted BM25 index over the FULL corpus — the
-    store the deletion key shrinks (the fold twin's _bm25_index_store
-    covers the 75% slice appends start from). Memoized per (corpus,
-    session) + eagerly checkpointed; benched as
-    ``full_bm25_index_build_sec`` so the forget key's number is the
-    wave-bounded shrink + scoring cost."""
-    from aproximacion_1_etl_spark.text.analysis import bm25_index
-
-    key = (
-        _artifact_key(sf_dir, "documents"),
-        spark.sparkContext.applicationId,
-    )
-    cached = _FULL_BM25_INDEX_CACHE.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents")
-        postings, df0, stats = bm25_index(docs)
-        cached = (
-            postings.localCheckpoint(eager=True),
-            df0.localCheckpoint(eager=True),
-            stats.localCheckpoint(eager=True),
-        )
-        _FULL_BM25_INDEX_CACHE[key] = cached
-    return cached
-
-
 def q_bm25_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10 BM25 INDEX DELETION — the RTBF edge of the maintained
     retrieval index (r11; pairs with incremental_bm25_index the way
@@ -1047,7 +969,7 @@ def q_bm25_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         forget_bm25_index,
     )
 
-    postings, df0, stats = _full_bm25_index_store(spark, sf_dir)
+    postings, df0, stats = _bm25_index_store(spark, sf_dir, "full")
     deleted = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 5 == 0)
@@ -1074,7 +996,6 @@ def q_bm25_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_score_from_index(qtf, dfq, stats_fmt, qdf, k=10)
 
 
-_CHUNK_INDEX_CACHE: dict[tuple, DataFrame] = {}
 _EMB_DIM = 64
 
 
@@ -1095,19 +1016,12 @@ def _chunk_vector_index(
     centroid-mean device of train_ivf_centroids). Sentence→chunk
     boundaries are the ONE shared assignment (_sentence_chunk_bins)
     with q_semantic_chunking / q_chunk_retrieval_spans, so spans
-    cannot drift between lexical and semantic hits. Memoized per
-    (corpus, session) + eagerly checkpointed like the other simulated
-    persisted stores; the bench times the build as its own
-    ``chunk_index_build_sec`` line item (in production this index is
-    written once per corpus and read by every retrieval)."""
-    key = (
-        _artifact_key(sf_dir, "documents"),
-        _artifact_key(sf_dir, "embeddings"),
-        budget,
-        spark.sparkContext.applicationId,
-    )
-    cached = _CHUNK_INDEX_CACHE.get(key)
-    if cached is None:
+    cannot drift between lexical and semantic hits. A registry
+    artifact, eagerly checkpointed like the other simulated persisted
+    stores (in production this index is written once per corpus and
+    read by every retrieval)."""
+
+    def build() -> DataFrame:
         from aproximacion_1_etl_spark.text.vector import (
             ivf_assign_cells,
         )
@@ -1121,16 +1035,19 @@ def _chunk_vector_index(
         # over the whole chunk corpus on every retrieval (measured
         # ~4 s per key at sf0.1, the dominant cost of each chunk-ANN
         # key). Same assignment expression, so every result is
-        # unchanged; the cost moves into chunk_index_build_sec where
+        # unchanged; the cost moves into the index build, where
         # production pays it.
         cells = ivf_assign_cells(
             pooled, _trained_codebook(spark, sf_dir), id_col="ckey"
         )
-        cached = pooled.join(cells, "ckey").repartition(
+        return pooled.join(cells, "ckey").repartition(
             spark.sparkContext.defaultParallelism, "ckey"
         ).localCheckpoint(eager=True)
-        _CHUNK_INDEX_CACHE[key] = cached
-    return cached
+
+    return artifact(
+        spark, sf_dir, f"chunk_vector_index_{budget}",
+        ["documents", "embeddings"], build,
+    )
 
 
 def _pooled_chunk_vectors(
@@ -1188,9 +1105,6 @@ def _pooled_chunk_vectors(
     )
 
 
-_CHUNK_STORE_CACHE: dict[tuple, tuple] = {}
-
-
 def _chunk_index_store(
     spark: SparkSession, sf_dir: str, budget: int = 25
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
@@ -1199,23 +1113,14 @@ def _chunk_index_store(
     plus the chunk-level BM25 inverted index (postings, df, stats —
     keyed by ckey), both built from the ONE shared sentence→chunk
     assignment. In production these are parquet relations maintained
-    by the incremental fold; here memoized per (corpus, session) +
-    eagerly checkpointed, with the build timed as its own
-    ``chunk_store_build_sec`` bench line item so the maintenance
-    key's number is the FOLD's cost."""
-    from aproximacion_1_etl_spark.text.analysis import bm25_index
+    by the incremental fold; here a registry artifact, eagerly
+    checkpointed, so the maintenance key's number is the FOLD's
+    cost."""
 
-    key = (
-        _artifact_key(sf_dir, "documents"),
-        _artifact_key(sf_dir, "embeddings"),
-        budget,
-        spark.sparkContext.applicationId,
-    )
-    cached = _CHUNK_STORE_CACHE.get(key)
-    if cached is None:
-        old = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 4 != 0
-        )
+    def build() -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+        from aproximacion_1_etl_spark.text.analysis import bm25_index
+
+        old = _document_corpus(spark, sf_dir, "history")
         vecidx = _pooled_chunk_vectors(
             spark, sf_dir, old, budget
         ).localCheckpoint(eager=True)
@@ -1223,17 +1128,17 @@ def _chunk_index_store(
             F.col("ckey").alias("doc_id"), "text"
         )
         postings, df0, stats = bm25_index(ct)
-        cached = (
+        return (
             vecidx,
             postings.localCheckpoint(eager=True),
             df0.localCheckpoint(eager=True),
             stats.localCheckpoint(eager=True),
         )
-        _CHUNK_STORE_CACHE[key] = cached
-    return cached
 
-
-_FULL_CHUNK_BM25_CACHE: dict[tuple, tuple] = {}
+    return artifact(
+        spark, sf_dir, f"chunk_index_store_{budget}",
+        ["documents", "embeddings"], build,
+    )
 
 
 def _full_chunk_bm25_store(
@@ -1246,33 +1151,30 @@ def _full_chunk_bm25_store(
     every chunk and rebuilt tf in-plan on each run; production writes
     the postings once per corpus and every retrieval reads them).
     Built by text/analysis.py::bm25_index over the shared
-    _chunk_texts reconstruction, memoized per (corpus, session) +
-    eagerly checkpointed; consumers score THROUGH the index via
+    _chunk_texts reconstruction, a registry artifact, eagerly
+    checkpointed; consumers score THROUGH the index via
     bm25_score_from_index — the exact scoring tail bm25_topk itself
     uses, with stored exact-integer totals, so ranked lists are
     bit-identical to the in-plan form (the incremental_bm25_index
     fold == rebuild equality, pinned by that key's oracle)."""
-    from aproximacion_1_etl_spark.text.analysis import bm25_index
 
-    key = (
-        _artifact_key(sf_dir, "documents"),
-        budget,
-        spark.sparkContext.applicationId,
-    )
-    cached = _FULL_CHUNK_BM25_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
+        from aproximacion_1_etl_spark.text.analysis import bm25_index
+
         docs = load_table(spark, sf_dir, "documents")
         ct = _chunk_texts(docs, budget).select(
             F.col("ckey").alias("doc_id"), "text"
         )
         postings, df0, stats = bm25_index(ct)
-        cached = (
+        return (
             postings.localCheckpoint(eager=True),
             df0.localCheckpoint(eager=True),
             stats.localCheckpoint(eager=True),
         )
-        _FULL_CHUNK_BM25_CACHE[key] = cached
-    return cached
+
+    return artifact(
+        spark, sf_dir, f"chunk_bm25_index_{budget}", ["documents"], build
+    )
 
 
 def _chunk_bm25_topk(
@@ -1944,31 +1846,22 @@ def q_lm_trigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm_trigram_score(docs)
 
 
-_LM_COUNTS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _lm_counts_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SIMULATED persisted trigram-LM state over the existing
     corpus (doc_id % 4 != 0): the (lang, tri, c3) exact-count relation
     from text/analysis.py::lm_counts — ONE relation is the whole
-    model (the prefix marginal derives from it). Memoized per
-    (corpus, session) + eagerly checkpointed; benched as
-    ``lm_counts_build_sec`` so the maintenance key's number is the
+    model (the prefix marginal derives from it). A registry artifact,
+    eagerly checkpointed, so the maintenance key's number is the
     fold + batch-scoring cost."""
-    from aproximacion_1_etl_spark.text.analysis import lm_counts
 
-    key = (
-        _artifact_key(sf_dir, "documents"),
-        spark.sparkContext.applicationId,
-    )
-    cached = _LM_COUNTS_CACHE.get(key)
-    if cached is None:
-        old = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 4 != 0
-        )
-        cached = lm_counts(old).localCheckpoint(eager=True)
-        _LM_COUNTS_CACHE[key] = cached
-    return cached
+    def build() -> DataFrame:
+        from aproximacion_1_etl_spark.text.analysis import lm_counts
+
+        return lm_counts(
+            _document_corpus(spark, sf_dir, "history")
+        ).localCheckpoint(eager=True)
+
+    return artifact(spark, sf_dir, "lm_counts_store", ["documents"], build)
 
 
 def _lm_store_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3111,7 +3004,6 @@ __all__ = [
     "q_near_dup_verified",
     "q_dup_clusters",
     "q_dup_clusters_forget",
-    "_full_dup_cluster_store",
     "q_incremental_dup_clusters",
     "_dup_cluster_store",
     "q_incremental_bm25_index",
@@ -3134,7 +3026,6 @@ __all__ = [
     "q_lm_index_forget",
     "_lm_counts_store",
     "_lm_store_ledger",
-    "_full_bm25_index_store",
     "q_pack_sequences",
     "q_token_entropy",
     "q_bigram_pmi",

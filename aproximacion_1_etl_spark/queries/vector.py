@@ -351,7 +351,7 @@ def q_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = _trained_append_codebook(spark, sf_dir)
+    cb = _trained_codebook(spark, sf_dir, "history")
     old = emb.filter(F.col("vec_id") % 4 != 0)
     baseline = (
         ivf_assign_cells(old, cb)
@@ -386,7 +386,7 @@ def q_ivf_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = _trained_append_codebook(spark, sf_dir)
+    cb = _trained_codebook(spark, sf_dir, "history")
     current = (
         ivf_assign_cells(emb, cb)
         .groupBy("cell")
@@ -401,8 +401,8 @@ def q_ivf_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ivf_retrain_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10 IVF CODEBOOK DRIFT TRIGGER (VERDICT r10 task 7) — the
     decision the recall gates feed: the maintained index's codebook
-    was trained on the store slice (vec_id % 2 == 0,
-    _trained_half_codebook); two successive append waves arrive
+    was trained on the store slice (vec_id % 2 == 0, the ``half``
+    codebook); two successive append waves arrive
     (wave 1: vec_id % 8 == 1 — a normal day; wave 2: the cumulative
     vec_id % 8 in {1,3,5} backlog) and for each the report folds the
     wave's cell populations into the store's counts and measures the
@@ -421,7 +421,7 @@ def q_ivf_retrain_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     store = emb.filter(F.col("vec_id") % 2 == 0)
-    cb = _trained_half_codebook(spark, sf_dir)
+    cb = _trained_codebook(spark, sf_dir, "half")
     qids = [0, 2, 4]
     # the maintained per-cell stats: assigned ONCE across both waves
     # (in production this relation is read from the index, not
@@ -477,9 +477,6 @@ def q_ivf_retrain_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_RETRAIN_EXACT_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _retrain_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The brute-force cosine top-10 ground truth over the APPENDED
     retrain corpus (store slice ∪ the cumulative %8∈{1,3,5} backlog)
@@ -488,28 +485,22 @@ def _retrain_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_ivf_retrain_execute's codebook evaluations measure against the
     ONE materialization instead of each re-running the |corpus|·|Q|
     brute pass (VERDICT r13 task 3: share the ground truths between
-    the plan/execute pair within a session). Memoized per (corpus,
-    session) + eagerly checkpointed like the codebook artifacts;
-    deterministic, so the cache never changes a result."""
-    from aproximacion_1_etl_spark.text.vector import ann_topk_bruteforce
+    the plan/execute pair within a session). A registry artifact,
+    eagerly checkpointed like the codebooks."""
 
-    key = (
-        _artifact_key(sf_dir, "embeddings"),
-        spark.sparkContext.applicationId,
-    )
-    cached = _RETRAIN_EXACT_CACHE.get(key)
-    if cached is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(
-            (F.col("vec_id") % 2 == 0) | (F.col("vec_id") % 8).isin(1, 3, 5)
-        )
-        cached = (
+    def build() -> DataFrame:
+        from aproximacion_1_etl_spark.text.vector import ann_topk_bruteforce
+
+        corpus = _embedding_corpus(spark, sf_dir, "retrain")
+        return (
             ann_topk_bruteforce(corpus, query_ids=[0, 2, 4], k=10)
             .select("query_id", "vec_id")
             .localCheckpoint(eager=True)
         )
-        _RETRAIN_EXACT_CACHE[key] = cached
-    return cached
+
+    return artifact(
+        spark, sf_dir, "retrain_exact_topk", ["embeddings"], build
+    )
 
 
 def q_ivf_retrain_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,8 +540,8 @@ def q_ivf_retrain_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.6). Both codebook memos are materialized HERE, before the
     # pool, per the memo-warm invariant; results slot by name.
     books = [
-        ("aging", _trained_half_codebook(spark, sf_dir)),
-        ("retrained", _trained_retrain_codebook(spark, sf_dir)),
+        ("aging", _trained_codebook(spark, sf_dir, "half")),
+        ("retrained", _trained_codebook(spark, sf_dir, "retrain")),
     ]
     rows_m = overlap(
         *[
@@ -641,7 +632,7 @@ def q_pq_retrain_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = emb.filter(F.col("vec_id") % 2 == 0).select(
         "vec_id", "embedding"
     )
-    books = _trained_half_pq_books(spark, sf_dir)
+    books = _trained_pq_books(spark, sf_dir, "half")
     qids = [0, 2, 1]
     drifted = _pq_drift_corpus(spark, sf_dir).join(
         store.select("vec_id"), "vec_id", "left_anti"
@@ -690,9 +681,9 @@ def q_pq_retrain_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     never tiled; negation is exact in IEEE so the shift is
     bit-portable), which is the drift PQ retraining exists for: the
     aging books (trained + seeded on the vec_id % 2 == 0 store
-    slice — _trained_half_pq_books) quantize the new region with
+    slice, the ``half`` books) quantize the new region with
     far-away codewords and their ADC distances stop discriminating,
-    while the retrained books (_trained_retrain_pq_books, trained on
+    while the retrained books (the ``drift`` books, trained on
     the drifted corpus) tile it. Both generations ADC-rank the SAME
     drifted corpus against ONE shared exact squared-L2 ground truth
     over store AND wave queries (text/vector.py::pq_recall_report /
@@ -711,8 +702,8 @@ def q_pq_retrain_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_recall_report(
         _pq_drift_corpus(spark, sf_dir),
         query_ids=[0, 2, 1, 3],
-        aging_books=_trained_half_pq_books(spark, sf_dir),
-        retrained_books=_trained_retrain_pq_books(spark, sf_dir),
+        aging_books=_trained_pq_books(spark, sf_dir, "half"),
+        retrained_books=_trained_pq_books(spark, sf_dir, "drift"),
         k=10,
     )
 

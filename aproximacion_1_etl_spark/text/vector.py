@@ -2170,8 +2170,9 @@ def ivf_nprobe_plan(
     cell assignment is the 6-dp argmin over the literal codebook (the
     ann_topk_ivf device — map-side, no shuffle), the probe order per
     query is the same rounded distance sort, the brute-force truth is
-    the existing exact top-k, and per-ladder aggregates run over
-    (|Q|·k)- and (|Q|·nprobe_max)-sized checkpointed relations."""
+    the existing exact top-k, and the whole ladder is one 1-row
+    aggregate of conditional sums (one per ladder point) over each of
+    the (|Q|·k)- and (|Q|·nprobe_max)-sized checkpointed relations."""
     from aproximacion_1_etl_spark.functions.concurrency import overlap
 
     emb = _as_double(embeddings, vec_col)
@@ -2189,7 +2190,7 @@ def ivf_nprobe_plan(
     # argmin assignment, the per-query probe order, the brute-force
     # ground truth) overlap through the driver pool (guide §2.6)
     # instead of running serially; everything downstream — pop, tot,
-    # capture, the per-ladder aggregates — is a cheap derivation of
+    # capture, the ladder aggregates — is a cheap derivation of
     # these checkpointed relations evaluated lazily in the final
     # action. The assignment itself is checkpointed ONCE where the
     # serial form evaluated the full-corpus argmin twice (the pop
@@ -2220,8 +2221,8 @@ def ivf_nprobe_plan(
     )
     # second overlapped wave: the two remaining corpus-touching
     # reductions (each one pass over the persisted assignment) — their
-    # tiny outputs are checkpointed so the 4 per-ladder aggregates
-    # never rescan anything corpus-sized
+    # tiny outputs are checkpointed so the ladder aggregates never
+    # rescan anything corpus-sized
     pop, capture = overlap(
         lambda: assigned.groupBy("cell")
         .agg(F.count("*").cast("bigint").alias("pop"))
@@ -2232,38 +2233,43 @@ def ivf_nprobe_plan(
         .agg(F.min("probe_rank").alias("captured_rank"))
         .localCheckpoint(eager=True),
     )
+    # the whole ladder in three 1-row aggregates: one conditional sum
+    # per ladder point over capture and over probes ⋈ pop, plus the
+    # corpus total; one explode then emits a row per nprobe
+    hits = capture.agg(*[
+        F.sum(F.when(F.col("captured_rank") <= p, 1).otherwise(0))
+        .cast("bigint").alias(f"h{i}")
+        for i, p in enumerate(ladder)
+    ])
+    scanned = probes.join(pop, "cell").agg(*[
+        F.sum(F.when(F.col("probe_rank") <= p, F.col("pop")))
+        .cast("bigint").alias(f"s{i}")
+        for i, p in enumerate(ladder)
+    ])
     tot = pop.agg(F.sum("pop").cast("bigint").alias("n_total"))
-    # scan is a |Q|·pmax ⋈ |cells| join of two checkpointed relations;
-    # re-deriving it per ladder step is cheaper than a 4th checkpoint
-    scan = probes.join(pop, "cell")
-    outs = []
-    for p in ladder:
-        hits = capture.agg(
-            F.sum(
-                F.when(F.col("captured_rank") <= p, 1).otherwise(0)
-            ).cast("bigint").alias("hits")
+    steps = F.array(*[
+        F.struct(
+            F.lit(p).cast("int").alias("nprobe"),
+            F.col(f"h{i}").alias("hits"),
+            F.col(f"s{i}").alias("scanned_rows"),
         )
-        scanned = scan.filter(F.col("probe_rank") <= p).agg(
-            F.sum("pop").cast("bigint").alias("scanned_rows")
+        for i, p in enumerate(ladder)
+    ])
+    return (
+        hits.crossJoin(scanned)
+        .crossJoin(tot)
+        .select("n_total", F.explode(steps).alias("l"))
+        .select(
+            "l.nprobe",
+            _fround(
+                F.col("l.hits") * F.lit(1.0) / F.lit(nq * k), 6
+            ).alias("recall_at_k"),
+            _fround(
+                F.col("l.scanned_rows")
+                * F.lit(1.0)
+                / (F.lit(nq) * F.col("n_total")),
+                6,
+            ).alias("scan_frac"),
+            "l.scanned_rows",
         )
-        outs.append(
-            hits.crossJoin(scanned)
-            .crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(p).cast("int").alias("nprobe"),
-                _fround(
-                    F.col("hits") * F.lit(1.0) / F.lit(nq * k), 6
-                ).alias("recall_at_k"),
-                _fround(
-                    F.col("scanned_rows")
-                    * F.lit(1.0)
-                    / (F.lit(nq) * F.col("n_total")),
-                    6,
-                ).alias("scan_frac"),
-                "scanned_rows",
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    )

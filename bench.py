@@ -32,30 +32,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from aproximacion_1_etl_spark.queries import (
-    ALL_QUERIES,
-    _bm25_index_store,
-    _chunk_index_store,
-    _full_chunk_bm25_store,
-    _chunk_vector_index,
-    _dup_cluster_store,
-    _full_bm25_index_store,
-    _full_dup_cluster_store,
-    _full_graph_store,
-    _lm_counts_store,
-    _persisted_graph_store,
-    _trained_append_codebook,
-    _trained_bpe_merges,
-    _trained_codebook,
-    _trained_half_codebook,
-    _trained_half_pq_books,
-    _trained_logreg_weights,
-    _trained_pq_books,
-    _trained_retrain_codebook,
-    _trained_retrain_pq_books,
-    _weighted_sample_reserve_store,
-    _weighted_sample_store,
-)
+from aproximacion_1_etl_spark.queries import ALL_QUERIES, BUILD_SECS
 from aproximacion_1_etl_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -323,7 +300,7 @@ HEADLINE = [
     "containment_dedup",
     # round-10: maintained dedup-cluster store and the chunk-level
     # semantic/hybrid retrieval pair (index build reported separately
-    # as chunk_index_build_sec)
+    # as chunk_vector_index_25_build_sec)
     "incremental_dup_clusters",
     "chunk_ann_retrieval",
     "chunk_hybrid_retrieval",
@@ -387,7 +364,7 @@ HEADLINE = [
 
 def _run_segment(keys: list[str]) -> dict:
     """Measure one contiguous segment of HEADLINE in THIS process's
-    JVM: warmup + model-artifact training + min-of-RUNS per key.
+    JVM: warmup + min-of-RUNS per key + the artifact build ledger.
     Returns the segment's timings/spreads/train-times/load readings.
 
     Segmentation rationale (round-7): per-key steady-state numbers in
@@ -397,9 +374,9 @@ def _run_segment(keys: list[str]) -> dict:
     9.1 s isolated — accumulated heap/GC pressure from everything that
     ran before it). Running each ~50-key segment in a FRESH JVM bounds
     that contamination at a segment's width, so per-key numbers stay
-    comparable round-over-round as the suite grows. Training repeats
-    per segment (fresh process => cold memo) but stays its own line
-    item, never charged to a query."""
+    comparable round-over-round as the suite grows. Builds repeat per
+    segment (fresh process => cold memo) but stay their own line
+    items, never charged to a query's min."""
     spark = get_spark(
         "bench",
         master=f"local[{CPUS}]",
@@ -416,107 +393,6 @@ def _run_segment(keys: list[str]) -> dict:
     # reused (spark.python.worker.reuse) for every later Arrow stage.
     ALL_QUERIES["flagship_order_lifecycle"](spark, SF_DIR).count()
     ALL_QUERIES["grouped_pandas_stats"](spark, SF_DIR).count()
-
-    # Model-artifact training, each timed as its own line item: one-off
-    # distributed model builds whose artifacts downstream queries
-    # consume — charging training to whichever query happens to run
-    # first would misstate both (and poison spread_pct as a noise
-    # signal: min-of-3 would record steady-state but max would carry
-    # first-run training, e.g. model_calibration_ece "spread" 512% in
-    # r4 was logreg training, not noise).
-    # SEGMENT-AWARE training (round-10): each builder runs only when a
-    # key in THIS segment consumes its artifact — with 9 builders
-    # (~35 s), an adjudication child measuring two flagged analytics
-    # keys was paying every codebook and store build for nothing.
-    # Under-mapping is benign (the consumer's first rep pays the
-    # memoized build; min-of-RUNS still reads steady state) — only the
-    # train_secs attribution would move, never a key's reported time.
-    seg = set(keys)
-    train_secs: dict[str, float] = {}
-    for label, builder, consumers in [
-        ("ivf_codebook_train_sec", _trained_codebook,
-         {"ann_topk_ivf", "ann_topk_ivfpq", "ivf_nprobe_plan",
-          "kmeans_cluster_profile", "semantic_dedup",
-          "chunk_ann_retrieval", "chunk_hybrid_retrieval",
-          "chunk_ann_recall"}),
-        ("pq_codebook_train_sec", _trained_pq_books,
-         {"ann_topk_pq", "ann_topk_ivfpq", "embedding_quantize_int8"}),
-        ("logreg_train_sec", _trained_logreg_weights,
-         {"model_auc", "model_calibration_ece", "isotonic_calibration"}),
-        ("bpe_merges_train_sec", _trained_bpe_merges,
-         {"bpe_encode_corpus", "bpe_fertility_stats",
-          "padding_efficiency_report", "bpe_train_merges"}),
-        ("append_codebook_train_sec", _trained_append_codebook,
-         {"ivf_index_append", "streaming_ivf_append", "ann_topk_ivfpq",
-          "ivf_index_forget", "rtbf_audit_report"}),
-        # the aging store-slice codebook whose drift the retrain-plan
-        # key measures
-        ("half_codebook_train_sec", _trained_half_codebook,
-         {"ivf_retrain_plan", "ivf_retrain_execute"}),
-        # the retrained codebook the execute key measures the payoff of
-        ("retrain_codebook_train_sec", _trained_retrain_codebook,
-         {"ivf_retrain_execute"}),
-        # the PQ retrain pair's two book generations (r12 task 7)
-        ("half_pq_books_train_sec", _trained_half_pq_books,
-         {"pq_retrain_execute", "pq_retrain_plan"}),
-        ("retrain_pq_books_train_sec", _trained_retrain_pq_books,
-         {"pq_retrain_execute"}),
-        # the simulated persisted graph store (VERDICT r9 #4): in
-        # production a parquet read, here a bulk census — timed as its
-        # own line item so incremental_graph_stats' number is the
-        # FOLD's cost, not 3x it
-        ("graph_store_build_sec", _persisted_graph_store,
-         {"incremental_graph_stats"}),
-        # the full-graph store the deletion key shrinks
-        ("full_graph_store_build_sec", _full_graph_store,
-         {"graph_stats_forget", "rtbf_audit_report"}),
-        # simulated persisted dedup state (signature store + converged
-        # cluster assignment) — its build is the history the fold key
-        # exists to avoid re-running, so it's a store line item too
-        ("dup_cluster_store_build_sec", _dup_cluster_store,
-         {"incremental_dup_clusters"}),
-        # the pooled chunk-vector index (written once per corpus in
-        # production, read by every chunk retrieval)
-        ("chunk_index_build_sec", _chunk_vector_index,
-         {"chunk_ann_retrieval", "chunk_hybrid_retrieval",
-          "chunk_ann_recall", "rtbf_audit_report"}),
-        # the persisted BM25 inverted index the fold key maintains
-        ("bm25_index_build_sec", _bm25_index_store,
-         {"incremental_bm25_index"}),
-        # the persisted RAG chunk state (vector index + chunk-BM25
-        # postings over the existing corpus) the chunk fold maintains
-        ("chunk_store_build_sec", _chunk_index_store,
-         {"incremental_chunk_index", "chunk_index_forget"}),
-        # the FULL-corpus chunk-level BM25 postings the lexical chunk
-        # retrievals score through (r14: additive line item so the
-        # once-per-corpus build cost the hybrid/spans keys no longer
-        # pay per run stays visible next to their deltas)
-        ("chunk_bm25_index_build_sec", _full_chunk_bm25_store,
-         {"chunk_retrieval_spans", "chunk_hybrid_retrieval"}),
-        # the full-corpus BM25 index the deletion key shrinks
-        ("full_bm25_index_build_sec", _full_bm25_index_store,
-         {"bm25_index_forget", "rtbf_audit_report"}),
-        # the persisted trigram-LM state the LM fold/forget maintain
-        ("lm_counts_build_sec", _lm_counts_store,
-         {"incremental_lm_index", "lm_index_forget"}),
-        # the persisted A-ES weighted sample (ADVICE r10 #4: the key
-        # used to rebuild + checkpoint this inline on every rep)
-        ("weighted_sample_store_build_sec", _weighted_sample_store,
-         {"incremental_weighted_sample"}),
-        # the over-sample reserve store (top-(k+reserve) over the full
-        # corpus) the sample-deletion key shrinks
-        ("weighted_sample_reserve_build_sec", _weighted_sample_reserve_store,
-         {"weighted_sample_forget", "rtbf_audit_report"}),
-        # full-corpus dedup state (signatures + clusters) the deletion
-        # key mutates — on disk in production, a line item here
-        ("full_dup_cluster_store_build_sec", _full_dup_cluster_store,
-         {"dup_clusters_forget", "rtbf_audit_report"}),
-    ]:
-        if not (consumers & seg):
-            continue
-        t0 = time.time()
-        builder(spark, SF_DIR)
-        train_secs[label] = round(time.time() - t0, 3)
 
     # drift probes FIRST (clean head-of-segment position, matching how
     # their baseline was captured): min-of-RUNS on three untouched
@@ -568,6 +444,15 @@ def _run_segment(keys: list[str]) -> dict:
         timings[name] = round(min(samples), 3)
         spread_pct[name] = round(_spread(steady), 1)
 
+    # Model and store builds, each its own line item read from the
+    # artifact registry's ledger: one-off builds whose artifacts
+    # downstream keys consume. The first rep of the first consumer
+    # pays the memoized build; min-of-RUNS and the steady spread
+    # exclude that rep, so no key's reported time carries a build
+    # (unless RUNS=1, where the one rep is also the first).
+    train_secs = {
+        f"{name}_build_sec": secs for name, secs in BUILD_SECS.items()
+    }
     load_end = os.getloadavg()[0]
     spark.stop()
     return {
@@ -1254,10 +1139,9 @@ def main() -> None:
             probe_ratio_median = round(
                 _median(seg_medians), 3
             )
-    # training repeats per segment THAT NEEDS IT (fresh memo per JVM;
-    # segment-aware since r10, so a label may appear in any subset of
-    # segments); report the steady-state min across the segments that
-    # actually built it
+    # builds repeat in every segment whose keys consume the artifact
+    # (fresh memo per JVM, so a label may appear in any subset of
+    # segments); report the min across the segments that built it
     all_labels = {lb for r in results for lb in r["train_secs"]}
     train_secs = {
         label: min(
@@ -1362,7 +1246,7 @@ def main() -> None:
         # per-wave fold costs of the maintained-state streaming twins
         # (fold compute + store swap per micro-batch; wave 1 is the
         # bootstrap build) — the streaming counterpart of the
-        # *_store_build_sec / fold split on the batch side
+        # *_build_sec / fold split on the batch side
         "stream_folds": stream_folds,
         **train_secs,
         "loadavg_start": round(load_start, 2),

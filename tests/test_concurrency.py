@@ -51,3 +51,18 @@ def test_overlap_awaits_siblings_and_reraises_first_failure():
 
 def test_overlap_single_thunk_runs_inline():
     assert overlap(lambda: 42) == [42]
+
+
+def test_overlap_threads_keep_the_callers_job_group(spark):
+    # pool threads must see the caller's job group, so their jobs stay
+    # attributable to it and cancellable with it
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup("overlap-caller", "overlap-caller")
+    try:
+        def group():
+            return sc.getLocalProperty("spark.jobGroup.id")
+
+        assert overlap(group, group) == ["overlap-caller", "overlap-caller"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)

@@ -416,9 +416,10 @@ def test_r7_session_plan_contracts(spark, sf_dir):
         # r9: chunk rebuild (one doc_id window chain) + chunk-level
         # bm25 over the checkpointed chunk relation
         "chunk_retrieval_spans": 14,
-        # r9: map-side codebook assignment + per-ladder aggregates
-        # over two checkpointed micro-relations
-        "ivf_nprobe_plan": 20,
+        # map-side codebook assignment + the whole ladder as one
+        # conditional-sum aggregate over each of two checkpointed
+        # micro-relations, then one explode
+        "ivf_nprobe_plan": 6,
         # r10: the cluster fold's visible plan is the contracted-root
         # relabel + append over checkpointed store/label relations —
         # the min-label loop lives behind its per-round cuts

@@ -588,10 +588,10 @@ def test_ivf_index_append_flags_hot_cells_and_retrain(spark):
 
 
 def test_artifact_cache_retrains_on_corpus_regen(spark, tmp_path):
-    """The memoized model artifacts key on (sf_dir, parquet mtime):
-    regenerating the corpus inside one long-lived process must retrain
-    instead of serving the stale model; an unchanged corpus must serve
-    the cached artifact (same object)."""
+    """The artifact registry keys on the mtime of every source table an
+    artifact reads: regenerating any of them inside one long-lived
+    process must rebuild instead of serving the stale artifact; an
+    unchanged corpus must serve the cached artifact (same object)."""
     import os
 
     from aproximacion_1_etl_spark.queries import _trained_codebook
@@ -625,6 +625,42 @@ def test_artifact_cache_retrains_on_corpus_regen(spark, tmp_path):
         for va, vb in zip(cb1.values(), cb2.values())
         for a, b in zip(va, vb)
     )
+
+    # a DataFrame artifact over two tables: the full graph store reads
+    # orders AND lineitem (through the capped baskets), so regenerating
+    # only lineitem must rebuild it, not serve the stale store
+    from aproximacion_1_etl_spark.queries import _graph_store
+
+    def write_table(name: str, rows, schema: str, stamp: float) -> None:
+        tpath = os.path.join(sf, f"{name}.parquet")
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tpath)
+        for f in os.listdir(tpath):
+            os.utime(os.path.join(tpath, f), (stamp, stamp))
+        os.utime(tpath, (stamp, stamp))
+
+    write_table(
+        "orders", [(o, "2000-01-01") for o in range(4)],
+        "o_orderkey BIGINT, o_orderdate STRING", 1_000_000.0,
+    )
+    # orders 0-2 each hold parts {1, 2, 3}: one triangle
+    basket = [(o, p) for o in range(3) for p in (1, 2, 3)]
+    write_table(
+        "lineitem", basket, "l_orderkey BIGINT, l_partkey BIGINT",
+        1_000_000.0,
+    )
+    edges1, _stats1 = _graph_store(spark, sf)
+    assert _graph_store(spark, sf)[0] is edges1  # cache hit
+    assert edges1.count() == 3
+    # order 3 joins part 4 to parts 1-3: three more edges
+    write_table(
+        "lineitem", basket + [(3, p) for p in (1, 2, 3, 4)],
+        "l_orderkey BIGINT, l_partkey BIGINT", 2_000_000.0,
+    )
+    edges2, _stats2 = _graph_store(spark, sf)
+    assert edges2 is not edges1
+    assert edges2.count() == 6
 
 
 def test_real_decode_ppm_bmp_roundtrip_and_guards(spark):
