@@ -23,6 +23,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# local[N] executors are driver threads: a file-listing job only adds scheduling
+LOCAL_PARTITION_DISCOVERY_THRESHOLD = 1_000_000
+
 
 def get_spark(
     app_name: str = "aproximacion-1-etl-spark",
@@ -83,6 +86,12 @@ def get_spark(
         "spark.sql.ansi.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
     }
+    if master and master.startswith("local"):
+        # cluster masters keep Spark's default: distributed listing
+        # helps on object stores with many paths
+        conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = str(
+            LOCAL_PARTITION_DISCOVERY_THRESHOLD
+        )
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -10,8 +10,15 @@ files and drop anything whose name contains ``metadata`` (reference
 Spark-first translation:
 - one ``spark.read.json(multiLine=True)`` over the whole glob replaces
   the per-file Beam branches (S8) — Spark parallelizes by file natively;
-- ``pathGlobFilter`` + an ``input_file_name()`` predicate replace the
-  driver-side listing/filter loop;
+- Spark's file index lists the glob, in place of the reference's
+  listing loop. Past ``spark.sql.sources.parallelPartitionDiscovery.
+  threshold`` paths (32 by default; a 150-day glob expands to 150) Spark
+  lists them with a distributed job, one task per path. Under
+  ``local[N]`` that job's executors are driver threads, so it is pure
+  scheduling cost, and ``session.get_spark`` raises the threshold to
+  list in the driver; cluster masters keep the distributed listing.
+  ``pathGlobFilter`` keeps non-JSON files out, and an
+  ``input_file_name()`` predicate drops the sidecars by file name;
 - PERMISSIVE mode + ``columnNameOfCorruptRecord`` replaces the
   try/except-skip (F6) while keeping a countable record of corruption
   for the metadata sidecar (S4).

@@ -66,3 +66,24 @@ def test_overlap_threads_keep_the_callers_job_group(spark):
         assert overlap(group, group) == ["overlap-caller", "overlap-caller"]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev)
+
+
+def test_overlap_cancels_running_siblings_on_failure(spark):
+    # a failure must not wait out a sibling's long Spark job: the call's
+    # job tag cancels it, so the failure re-raises within seconds
+    sc = spark.sparkContext
+
+    def long_job():
+        sc.setInterruptOnCancel(True)  # lets the cancel stop the sleep
+        spark.range(1, numPartitions=1).selectExpr(
+            "reflect('java.lang.Thread', 'sleep', 30000L)"
+        ).collect()
+
+    def boom():
+        time.sleep(1)  # let the sibling's job start first
+        raise RuntimeError("wave failed")
+
+    t0 = time.time()
+    with pytest.raises(RuntimeError, match="wave failed"):
+        overlap(long_job, boom)
+    assert time.time() - t0 < 10

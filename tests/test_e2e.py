@@ -54,11 +54,29 @@ def test_streaming_available_now(spark, sf_dir):
     )
 
 
-def test_run_daily_job_lands_outputs(spark, sf_dir, tmp_path):
+def test_run_daily_job_lands_outputs(spark, sf_dir, tmp_path, monkeypatch):
+    from pyspark.sql import SparkSession
+
     from aproximacion_1_etl_spark.plans.runner import run_daily_job
 
+    def no_python_rows(*args, **kwargs):
+        raise AssertionError("createDataFrame starts a Python worker")
+
     out = str(tmp_path / "daily")
-    summary = run_daily_job(spark, sf_dir, out)
+    sc = spark.sparkContext
+    group = "run-daily-job"
+    sc.setJobGroup(group, group)
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(SparkSession, "createDataFrame", no_python_rows)
+            summary = run_daily_job(spark, sf_dir, out)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # 19 jobs as measured: the post-publish metadata and DQ each scan
+    # the landed table once; a rescan or a Python-row round-trip would
+    # push the count back up
+    assert len(jobs) <= 19
     assert summary["rows"] > 0
     landed = spark.read.parquet(os.path.join(out, "delivery_order_work"))
     assert landed.count() == summary["rows"]

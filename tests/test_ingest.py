@@ -10,6 +10,7 @@ but through the engine's real readers.
 
 import json
 import os
+from datetime import date, timedelta
 
 import pyspark.sql.functions as F
 
@@ -28,9 +29,10 @@ ORDER_DDL = (
 )
 
 
-def _write_day_layout(tmp_path):
+def _write_day_layout(tmp_path, n_days=2):
     """Reference layout: {day}/{day}.json (one JSON array per file) +
-    metadata sidecar that must be excluded + one corrupt file."""
+    metadata sidecar that must be excluded + one corrupt file. Days past
+    the second hold one more order each, with its sidecar."""
     day1 = tmp_path / "2024-03-01"
     day1.mkdir()
     orders = [
@@ -66,6 +68,15 @@ def _write_day_layout(tmp_path):
     day2 = tmp_path / "2024-03-02"
     day2.mkdir()
     (day2 / "2024-03-02.json").write_text("{ this is not valid json !!")
+    for n in range(3, n_days + 1):
+        day = (date(2024, 3, 1) + timedelta(days=n - 1)).isoformat()
+        (tmp_path / day).mkdir()
+        (tmp_path / day / f"{day}.json").write_text(
+            json.dumps([{"delivery_order_id": f"DO-{n}", "code": f"C-{n}"}])
+        )
+        (tmp_path / day / f"{day}_metadata.json").write_text(
+            json.dumps({"fecha": day, "total_ordenes": 1, "fallos": 0})
+        )
     return tmp_path
 
 
@@ -80,6 +91,24 @@ def test_multiline_array_read_excludes_metadata(spark, tmp_path):
     assert rows["DO-1"]["destination"]["geo_location"]["lat"] == -33.45
     assert rows["DO-2"]["destination"]["geo_location"] is None
     # corrupt file skipped but counted (F6)
+    assert corrupt.count() == 1
+
+
+def test_read_day_files_lists_many_days_without_a_job(spark, tmp_path):
+    # 40 day directories exceed Spark's default parallel-listing
+    # threshold (32); under local[N] the listing must stay in the driver
+    root = _write_day_layout(tmp_path, n_days=40)
+    sc = spark.sparkContext
+    group = "read-day-files-listing"
+    sc.setJobGroup(group, group)
+    try:
+        df = read_day_files(spark, f"{root}/*", schema_ddl=ORDER_DDL)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    clean, corrupt = split_corrupt(df)
+    # day 1 holds 2 orders, day 2 is the corrupt file, days 3-40 one each
+    assert clean.count() == 2 + 38
     assert corrupt.count() == 1
 
 
