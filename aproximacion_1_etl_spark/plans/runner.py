@@ -20,12 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _fround(col, n: int = 2):
-    """Engine-portable rounding (see queries._fround)."""
-    f = float(10 ** n)
-    return F.floor(col * F.lit(f) + F.lit(0.5)) / F.lit(f)
-
+from aproximacion_1_etl_spark.functions.rounding import _fround
 from aproximacion_1_etl_spark.operators.refine import (
     child_rollup,
     dedup_latest,

@@ -5,27 +5,22 @@ monolithic queries.py — every segment below is verbatim)."""
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 from collections.abc import Callable
 from typing import Any
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from aproximacion_1_etl_spark.functions.rounding import _fround
 from aproximacion_1_etl_spark.sources.tables import load_table
+from aproximacion_1_etl_spark.streaming.harness import (
+    run_to_end,
+    scratch_dir,
+    wave_stream,
+)
 
 
 _fmt = "yyyy-MM-dd HH:mm:ss"
-
-
-def _fround(col, n: int = 2):
-    """Engine-portable deterministic rounding: floor(x*10^n + 0.5)/10^n
-    in IEEE double — identical in any engine. Native round() half-way
-    semantics differ (Spark rounds the shortest decimal repr HALF_UP,
-    DuckDB rounds the binary value numerically), which breaks oracle
-    hash-matching whenever a value lands exactly on .xx5."""
-    f = float(10 ** n)
-    return F.floor(col * F.lit(f) + F.lit(0.5)) / F.lit(f)
 
 
 def _dsum(expr, scale: int = 2):
@@ -41,14 +36,18 @@ def _ts_str(col) -> F.Column:
 
 def _reclaimed(df: DataFrame, *paths: str) -> DataFrame:
     """Materialize a bounded result locally and reclaim the temp dirs
-    its plan reads from. Roundtrip/streaming keys write to mkdtemp and
-    would otherwise return a LAZY frame that still scans the dir,
+    its plan reads from. Roundtrip and streaming keys write to mkdtemp
+    and would otherwise return a LAZY frame that still scans the dir,
     pinning it forever (one leaked dir per invocation). Every caller's
     result is small by construction (|days|-, |statuses|-,
     |collision-pair|-bounded aggregates — never a fact relation), so
     collecting it onto the driver is safe; the rebuilt local relation
-    has no file dependency, and rmtree in ``finally`` runs even when
-    the collect itself fails."""
+    has no file dependency.
+
+    ``paths``: the roundtrip keys' own mkdtemp dirs, removed in
+    ``finally`` even when the collect itself fails. Streaming keys pass
+    none: they call this inside ``streaming/harness.py::scratch_dir``,
+    which removes their one root when the block exits."""
     import shutil
 
     try:
@@ -429,13 +428,6 @@ def _run_streaming_max_concurrency(
 ) -> DataFrame:
     """Two-wave foreachBatch sweep-line maintenance over ``ev``
     (event_id, ts, event_type); see q_streaming_max_concurrency."""
-    import shutil
-    import time as _time
-    base = tempfile.mkdtemp(prefix="graft_smc_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_smc_")
-    src = os.path.join(base, "src")
-    summary_log = os.path.join(base, "summary")
-    tail_log = os.path.join(base, "tail")
 
     def _latest_summary(bspark):
         if not os.path.isdir(summary_log):
@@ -597,30 +589,17 @@ def _run_streaming_max_concurrency(
             "append"
         ).parquet(tail_log)
 
-    try:
-        ev.filter(
-            F.col("ts").cast("date") < split_day
-        ).coalesce(1).write.parquet(os.path.join(src, "w1"))
-        ev.filter(
-            F.col("ts").cast("date") >= split_day
-        ).coalesce(1).write.parquet(os.path.join(src, "w2"))
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "event_id BIGINT, ts TIMESTAMP, event_type STRING"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+    with scratch_dir("graft_smc_") as base:
+        summary_log = os.path.join(base, "summary")
+        tail_log = os.path.join(base, "tail")
+        waves = [
+            ev.filter(F.col("ts").cast("date") < split_day),
+            ev.filter(F.col("ts").cast("date") >= split_day),
+        ]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        q.awaitTermination()
 
         # end-of-stream flush: fold the remaining tail (cutoff = inf)
         summ = _latest_summary(spark)
@@ -682,10 +661,7 @@ def _run_streaming_max_concurrency(
             )
             .orderBy("event_type")
         )
-        return spark.createDataFrame(final.collect(), final.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(final)
 
 
 def _logreg_feats(spark: SparkSession, sf_dir: str):

@@ -4,12 +4,17 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from aproximacion_1_etl_spark.sources.tables import load_table
 from aproximacion_1_etl_spark.streaming.events import run_available_now
+from aproximacion_1_etl_spark.streaming.harness import (
+    drain,
+    run_to_end,
+    scratch_dir,
+    wave_stream,
+)
 from aproximacion_1_etl_spark.text.dedup import (
     dedup_clusters,
     exact_dedup,
@@ -97,9 +102,6 @@ def q_streaming_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     store. Per-batch cost is O(|batch| + state); no batch ever
     rescans another. The final rendered profile must equal a full
     recompute — the oracle is the full-table profile."""
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.functions.profile import (
         distinct_state,
         merge_profile_states,
@@ -116,11 +118,6 @@ def q_streaming_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
     ]
     o = load_table(spark, sf_dir, "orders").select(*cols)
-    base = tempfile.mkdtemp(prefix="graft_spf_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_spf_")
-    src = os.path.join(base, "src")
-    mom_log = os.path.join(base, "moments")
-    val_store = os.path.join(base, "values")
 
     def handle_batch(batch, batch_id: int) -> None:
         bspark = batch.sparkSession
@@ -135,44 +132,23 @@ def q_streaming_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         folded.write.mode("overwrite").parquet(mom_log)
         distinct_state(batch, cols).write.mode("append").parquet(val_store)
 
-    try:
-        o.filter(F.col("o_orderdate") < "1998-01-01").coalesce(1).write.parquet(
-            os.path.join(src, "w1")
+    with scratch_dir("graft_spf_") as base:
+        mom_log = os.path.join(base, "moments")
+        val_store = os.path.join(base, "values")
+        waves = [
+            o.filter(F.col("o_orderdate") < "1998-01-01"),
+            o.filter(F.col("o_orderdate") >= "1998-01-01"),
+        ]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        o.filter(
-            F.col("o_orderdate") >= "1998-01-01"
-        ).coalesce(1).write.parquet(os.path.join(src, "w2"))
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        schema = (
-            "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
-            "o_totalprice DOUBLE, o_orderdate TIMESTAMP, "
-            "o_orderpriority STRING"
-        )
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
         out = profile_from_states(
             spark.read.parquet(mom_log),
             spark.read.parquet(val_store).distinct(),
             cols,
         )
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,9 +168,6 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-flight micro-batch skips it instead of double-counting (the
     count fold is NOT idempotent), and publish is one atomic manifest
     flip — no torn two-step overwrite window."""
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.sources.versioned import (
         committed_metas,
         current_version,
@@ -212,11 +185,6 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     lo, hi = float(b["_lo"]), float(b["_hi"])
     width = (hi - lo) / n_b if hi > lo else 1.0
-
-    base = tempfile.mkdtemp(prefix="graft_sq_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sq_")
-    src = os.path.join(base, "src")
-    hist_log = os.path.join(base, "hist")
 
     def handle_batch(batch, batch_id: int) -> None:
         if str(batch_id) in committed_metas(hist_log):
@@ -239,31 +207,16 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         write_snapshot(part, hist_log, meta=str(batch_id))
 
-    try:
+    with scratch_dir("graft_sq_") as base:
+        hist_log = os.path.join(base, "hist")
         # events are 2024-dated; mid-month cut makes BOTH waves carry
         # rows so the second batch folds into a non-trivial prior state
         cut = "2024-01-16"
-        ev.filter(F.col("ts") < cut).coalesce(1).write.parquet(
-            os.path.join(src, "w1")
+        waves = [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        ev.filter(F.col("ts") >= cut).coalesce(1).write.parquet(
-            os.path.join(src, "w2")
-        )
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema("value DOUBLE, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
 
         # the folded state carries the exact total as sum(n) — no
         # rescan of the source after the stream
@@ -273,12 +226,7 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = _histogram_quantile_report(
             _cum_hist(merged), ev, lo, width, total
         )
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,11 +246,8 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides watermarked (state bounded by watermark + interval). The
     matched pair set is deterministic, so it oracle-checks against the
     batch interval join."""
-    import uuid
-
     from aproximacion_1_etl_spark.streaming.events import read_events_stream
 
-    table = f"stream_ij_{uuid.uuid4().hex[:8]}"
     s1 = (
         read_events_stream(spark, sf_dir, "events.parquet")
         .filter(F.col("event_type") == "click")
@@ -332,22 +277,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             < F.col("click_ts") + F.expr("INTERVAL 24 HOURS")
         ),
     ).select("click_id", "purchase_id", "user_id")
-    import shutil
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ij_")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(table)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return drain(joined, "append")
 
 
 def q_streaming_interval_join_outer(
@@ -365,13 +295,8 @@ def q_streaming_interval_join_outer(
     watermark is min(max click_ts, max purchase_ts) - 1h — the
     cross-stream minimum Spark maintains. State stays bounded by
     watermark + interval at any stream length."""
-    import shutil
-    import uuid
-
     from aproximacion_1_etl_spark.streaming.events import read_events_stream
 
-    table = f"stream_oj_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_oj_")
     s1 = (
         read_events_stream(spark, sf_dir, "events.parquet")
         .filter(F.col("event_type") == "click")
@@ -402,19 +327,7 @@ def q_streaming_interval_join_outer(
         ),
         "left_outer",
     ).select("click_id", "purchase_id", "user_id")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(table)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return drain(joined, "append")
 
 
 def q_streaming_interval_join_full(
@@ -434,13 +347,8 @@ def q_streaming_interval_join_full(
     whose windows are still open when the stream ends are correctly
     withheld on BOTH sides. user_id coalesces across sides so
     purchase-only rows keep their user."""
-    import shutil
-    import uuid
-
     from aproximacion_1_etl_spark.streaming.events import read_events_stream
 
-    table = f"stream_foj_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_foj_")
     s1 = (
         read_events_stream(spark, sf_dir, "events.parquet")
         .filter(F.col("event_type") == "click")
@@ -475,19 +383,7 @@ def q_streaming_interval_join_full(
         "purchase_id",
         F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("user_id"),
     )
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(table)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return drain(joined, "append")
 
 
 def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -495,34 +391,14 @@ def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type) key set surviving a streamed dedup equals the batch
     DISTINCT (survivor choice varies with arrival order, key set does
     not, so only keys are emitted)."""
-    import uuid
-
     from aproximacion_1_etl_spark.streaming.events import read_events_stream
 
-    table = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     stream = (
         read_events_stream(spark, sf_dir, "events.parquet")
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    import shutil
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_dd_")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        # memory sink holds rows driver-side; the checkpoint is dead
-        # once the AvailableNow run terminates
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(table)
+    return drain(stream, "append")
 
 
 def q_streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -546,13 +422,8 @@ def q_streaming_session_window(
     boundary end-EXCLUSIVE (an event exactly gap seconds after the
     last starts a new session), matching session_window's [start,
     end) semantics."""
-    import shutil
-    import uuid
-
     from aproximacion_1_etl_spark.streaming.events import read_events_stream
 
-    table = f"stream_sw_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sw_")
     s = (
         read_events_stream(spark, sf_dir, "events.parquet")
         .withWatermark("ts", "1 hour")
@@ -569,19 +440,7 @@ def q_streaming_session_window(
             F.col("n_events").cast("bigint").alias("n_events"),
         )
     )
-    try:
-        q = (
-            s.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(table)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return drain(s, "append")
 
 
 def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -611,42 +470,24 @@ def q_streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     streaming dropDuplicates whose key state grows forever). Key set
     equals batch DISTINCT because the full span fits one AvailableNow
     batch; at scale the watermark is the state-size knob."""
-    import uuid
-
     from aproximacion_1_etl_spark.streaming.events import (
         read_events_stream,
     )
 
-    table = f"stream_ddw_{uuid.uuid4().hex[:8]}"
     stream = (
         read_events_stream(spark, sf_dir, "events.parquet")
         .withWatermark("ts", "30 days")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    import shutil
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ddw_")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(table)
+    return drain(stream, "append")
 
 
 def q_streaming_incremental_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """§2.9 + §2.10: incremental near-dup AS A STREAM — documents
-    arrive in two waves (maxFilesPerTrigger=1 makes each wave its own
+    arrive in two waves (the streaming harness makes each wave its own
     micro-batch); foreachBatch screens the incoming batch against the
     persisted minhash signature store, appends collisions to the
     result table, then appends the batch's own signatures to the
@@ -656,9 +497,6 @@ def q_streaming_incremental_dedup(
     the result is value-checked against a batch oracle: every
     odd-doc x even-doc LSH collision — wave 1 (even ids) seeds the
     store, wave 2 (odd ids) screens against it."""
-    import os
-    import time as _time
-
     from aproximacion_1_etl_spark.text.dedup import (
         incremental_minhash_dedup,
         minhash_signatures,
@@ -668,22 +506,6 @@ def q_streaming_incremental_dedup(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    base = tempfile.mkdtemp(prefix="graft_sid_")
-    src = os.path.join(base, "src")
-    store = os.path.join(base, "store")
-    result = os.path.join(base, "result")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        os.path.join(src, "w1")
-    )
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        os.path.join(src, "w2")
-    )
-    # file source picks up oldest-mtime first: pin the wave order
-    now = _time.time()
-    for d, ts in (("w1", now - 120), ("w2", now - 60)):
-        p = os.path.join(src, d)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (ts, ts))
 
     def handle_batch(batch, batch_id: int) -> None:
         if os.path.isdir(store):
@@ -694,28 +516,24 @@ def q_streaming_incremental_dedup(
             word_shingles(batch, distinct=False)
         ).write.mode("append").parquet(store)
 
-    import shutil
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sid_")
-    q = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "*"))
-        .writeStream.foreachBatch(handle_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    if not os.path.isdir(result):
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        return spark.createDataFrame(
-            [],
-            "doc_new BIGINT, doc_old BIGINT, matching_bands BIGINT, "
-            "est_jaccard DOUBLE",
+    with scratch_dir("graft_sid_") as base:
+        store = os.path.join(base, "store")
+        result = os.path.join(base, "result")
+        waves = [
+            docs.filter(F.col("doc_id") % 2 == 0),
+            docs.filter(F.col("doc_id") % 2 == 1),
+        ]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-    return _reclaimed(spark.read.parquet(result), base, ckpt)
+        if not os.path.isdir(result):
+            return spark.createDataFrame(
+                [],
+                "doc_new BIGINT, doc_old BIGINT, matching_bands BIGINT, "
+                "est_jaccard DOUBLE",
+            )
+        return _reclaimed(spark.read.parquet(result))
 
 
 def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -726,14 +544,10 @@ def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the orders-x-customer view with maintain_join_view (the view
     side moves through broadcast joins only), publishing each batch
     atomically via write_snapshot. Deterministic wave pickup
-    (mtime-ordered, maxFilesPerTrigger=1), so the final snapshot is
+    (one micro-batch per wave, in order), so the final snapshot is
     value-checked against a from-scratch batch oracle. This is the
     production topology for keeping a denormalized serving table
     current under a CDC feed without nightly re-joins."""
-    import os
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.operators.refine import (
         maintain_join_view,
     )
@@ -752,22 +566,7 @@ def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("c_custkey", "o_custkey")
     )
     old_facts = o.filter(F.col("o_orderdate") < cut)
-
-    base = tempfile.mkdtemp(prefix="graft_sivm_")
-    src = os.path.join(base, "src")
-    vpath = os.path.join(base, "view")
-    write_snapshot(old_facts.join(dim, "o_custkey"), vpath)
-
     inserts, updates, deletes = _orders_cdc(o, cut)
-    wave1 = inserts.unionByName(deletes)
-    wave2 = updates
-    wave1.coalesce(1).write.parquet(os.path.join(src, "w1"))
-    wave2.coalesce(1).write.parquet(os.path.join(src, "w2"))
-    now = _time.time()
-    for d, ts in (("w1", now - 120), ("w2", now - 60)):
-        p = os.path.join(src, d)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (ts, ts))
 
     dim_schema = (
         "o_custkey BIGINT, c_name STRING, "
@@ -807,32 +606,28 @@ def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_snapshot(new, vpath, meta=str(batch_id))
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sivm_")
-    q = (
-        spark.readStream.schema(
-            "o_orderkey BIGINT, o_custkey BIGINT, "
-            "o_orderdate TIMESTAMP, o_totalprice DOUBLE, op STRING"
+    with scratch_dir("graft_sivm_") as base:
+        vpath = os.path.join(base, "view")
+        write_snapshot(old_facts.join(dim, "o_custkey"), vpath)
+        waves = [inserts.unionByName(deletes), updates]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "*"))
-        .writeStream.foreachBatch(handle_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    out = read_snapshot(spark, vpath).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderdate",
-        _fround(F.col("o_totalprice").cast("double"), 2).alias(
-            "o_totalprice"
-        ),
-        "c_name",
-        "c_mktsegment",
-        _fround(F.col("c_acctbal").cast("double"), 2).alias("c_acctbal"),
-    )
-    return _reclaimed_dist(out, base, ckpt)
+        out = read_snapshot(spark, vpath).select(
+            "o_orderkey",
+            "o_custkey",
+            "o_orderdate",
+            _fround(F.col("o_totalprice").cast("double"), 2).alias(
+                "o_totalprice"
+            ),
+            "c_name",
+            "c_mktsegment",
+            _fround(F.col("c_acctbal").cast("double"), 2).alias(
+                "c_acctbal"
+            ),
+        )
+        return _reclaimed_dist(out)
 
 
 def q_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -848,15 +643,13 @@ def q_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     it when the committed offset reaches the window end."""
     import ast as _ast
     import json as _json
-    import shutil
     import time as _time
 
     from aproximacion_1_etl_spark.sources.rest_datasource import register
 
     register(spark)
-    sink = tempfile.mkdtemp(prefix="graft_rsi_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_rsi_")
-    try:
+    with scratch_dir("graft_rsi_") as base:
+        sink = os.path.join(base, "sink")
         q = (
             spark.readStream.format("rest_orders")
             .option("start_date", "2024-01-01")
@@ -865,11 +658,11 @@ def q_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load()
             .writeStream.format("parquet")
             .option("path", sink)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", os.path.join(base, "_ckpt"))
             .trigger(processingTime="0 seconds")
             .start()
         )
-        # the stream MUST be stopped before the finally rmtree runs —
+        # the stream MUST be stopped before scratch_dir's rmtree runs —
         # an exception escaping the poll loop would otherwise leave a
         # zombie query triggering against deleted dirs for the rest of
         # the session, so the stop lives in its own finally
@@ -922,12 +715,7 @@ def q_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("bigint").alias("sum_amount_cents"),
             )
         )
-        return _reclaimed(out, sink, ckpt)
-    finally:
-        if os.path.isdir(sink):
-            shutil.rmtree(sink, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -941,41 +729,19 @@ def q_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. State is |distinct keys|-bounded and the sink is
     append-only; contrast the foreachBatch signature-store dedup
     (streaming_incremental_dedup), which owns its state explicitly."""
-    import shutil
-    import time as _time
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="graft_sdw_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sdw_")
-    src = os.path.join(base, "src")
-    sink = os.path.join(base, "sink")
-    try:
-        ev.coalesce(1).write.parquet(os.path.join(src, "w1"))
-        ev.coalesce(1).write.parquet(os.path.join(src, "w2"))
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        schema = (
-            "event_id BIGINT, ts TIMESTAMP, event_type STRING, "
-            "value DOUBLE"
-        )
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
+    with scratch_dir("graft_sdw_") as base:
+        sink = os.path.join(base, "sink")
+        run_to_end(
+            wave_stream(base, [ev, ev])
             .withWatermark("ts", "365 days")
             .dropDuplicatesWithinWatermark(["event_id"])
             .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("path", sink),
+            base,
         )
-        q.awaitTermination()
         out = (
             spark.read.parquet(sink)
             .groupBy("event_type")
@@ -987,12 +753,7 @@ def q_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("bigint").alias("sum_value_cents"),
             )
         )
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,9 +768,6 @@ def q_streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is the |cells|-sized stats relation. The final report (cell
     populations + the exact-integer hot/retrain_due policy flags) must
     equal the one-shot batch append — same oracle SQL."""
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.text.vector import ivf_assign_cells
 
     cb = _trained_codebook(spark, sf_dir, "history")
@@ -1017,11 +775,6 @@ def q_streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     hist = emb.filter(F.col("vec_id") % 4 != 0)
     new = emb.filter(F.col("vec_id") % 4 == 0)
-
-    base = tempfile.mkdtemp(prefix="graft_siv_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_siv_")
-    src = os.path.join(base, "src")
-    store = os.path.join(base, "stats")
 
     def handle_batch(batch, batch_id: int) -> None:
         inc = (
@@ -1031,7 +784,8 @@ def q_streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         inc.write.mode("append").parquet(store)
 
-    try:
+    with scratch_dir("graft_siv_") as base:
+        store = os.path.join(base, "stats")
         # seed the persisted index stats from the historical slice
         # (the one-time cost the standing index already paid)
         baseline = (
@@ -1041,29 +795,14 @@ def q_streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         baseline.write.parquet(os.path.join(base, "baseline"))
 
-        new.filter(F.col("vec_id") % 8 == 0).coalesce(1).write.parquet(
-            os.path.join(src, "w1")
+        waves = [
+            new.filter(F.col("vec_id") % 8 == 0),
+            new.filter(F.col("vec_id") % 8 == 4),
+        ]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        new.filter(F.col("vec_id") % 8 == 4).coalesce(1).write.parquet(
-            os.path.join(src, "w2")
-        )
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
 
         from aproximacion_1_etl_spark.text.vector import (
             ivf_merge_cell_stats,
@@ -1079,13 +818,7 @@ def q_streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             new_counts,
             n_cells,
         )
-        return _reclaimed(out, base, ckpt)
-    finally:
-        # _reclaimed removes on success; this covers mid-build failures
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_fingerprint_maintenance(
@@ -1102,32 +835,12 @@ def q_streaming_fingerprint_maintenance(
     any corpus size. The final level relation is value-checked against
     the BATCH oracle (one digest pass over the whole corpus): any
     divergence in the maintenance path breaks hash parity."""
-    import os
-    import time as _time
-
-    from pyspark.sql import Window
-
     from aproximacion_1_etl_spark.functions.profile import (
         row_bucket_hashes,
     )
 
     cols = ["text", "lang", "source", "n_chars"]
     docs = load_table(spark, sf_dir, "documents").select("doc_id", *cols)
-    base = tempfile.mkdtemp(prefix="graft_sfm_")
-    src = os.path.join(base, "src")
-    rows_store = os.path.join(base, "rows")
-    level_log = os.path.join(base, "level")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        os.path.join(src, "w1")
-    )
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        os.path.join(src, "w2")
-    )
-    now = _time.time()
-    for d, ts in (("w1", now - 120), ("w2", now - 60)):
-        pdir = os.path.join(src, d)
-        for f in os.listdir(pdir):
-            os.utime(os.path.join(pdir, f), (ts, ts))
 
     def handle_batch(batch, batch_id: int) -> None:
         bh = row_bucket_hashes(batch, "doc_id", cols, prefix_len=2).select(
@@ -1151,30 +864,27 @@ def q_streaming_fingerprint_maintenance(
             "append"
         ).parquet(level_log)
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sfm_")
-    q = (
-        spark.readStream.schema(
-            "doc_id BIGINT, text STRING, lang STRING, source STRING, "
-            "n_chars BIGINT"
+    with scratch_dir("graft_sfm_") as base:
+        rows_store = os.path.join(base, "rows")
+        level_log = os.path.join(base, "level")
+        waves = [
+            docs.filter(F.col("doc_id") % 2 == 0),
+            docs.filter(F.col("doc_id") % 2 == 1),
+        ]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "*"))
-        .writeStream.foreachBatch(handle_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    log = spark.read.parquet(level_log)
-    w = Window.partitionBy("pfx").orderBy(F.col("batch_id").desc())
-    out = (
-        log.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.substring("pfx", 2, 2).alias("prefix"), "digest", "n_rows"
+        log = spark.read.parquet(level_log)
+        w = Window.partitionBy("pfx").orderBy(F.col("batch_id").desc())
+        out = (
+            log.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(
+                F.substring("pfx", 2, 2).alias("prefix"), "digest", "n_rows"
+            )
         )
-    )
-    return _reclaimed(out, base, ckpt)
+        return _reclaimed(out)
 
 
 def q_streaming_cusum_monitor(
@@ -1198,17 +908,10 @@ def q_streaming_cusum_monitor(
     identity, and the final state value-checks against the one-pass
     frozen-baseline oracle. Drift snaps to 6 dp at comparison like
     the batch key."""
-    import shutil
-    import time as _time
-
     split_day = "2024-01-16"
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
     )
-    base = tempfile.mkdtemp(prefix="graft_scm_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_scm_")
-    src = os.path.join(base, "src")
-    state_log = os.path.join(base, "state")
 
     def handle_batch(batch, batch_id: int) -> None:
         bspark = batch.sparkSession
@@ -1324,33 +1027,16 @@ def q_streaming_cusum_monitor(
             "batch_id", F.lit(batch_id)
         ).write.mode("append").parquet(state_log)
 
-    try:
-        ev.filter(
-            F.col("ts").cast("date") < split_day
-        ).coalesce(1).write.parquet(os.path.join(src, "w1"))
-        ev.filter(
-            F.col("ts").cast("date") >= split_day
-        ).coalesce(1).write.parquet(os.path.join(src, "w2"))
-        # wave order: the file source processes files in modification-
-        # time order, so pin w1 strictly older than w2 (maxFilesPerTrigger
-        # keeps them in separate micro-batches)
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "event_id BIGINT, ts TIMESTAMP, event_type STRING"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+    with scratch_dir("graft_scm_") as base:
+        state_log = os.path.join(base, "state")
+        waves = [
+            ev.filter(F.col("ts").cast("date") < split_day),
+            ev.filter(F.col("ts").cast("date") >= split_day),
+        ]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        q.awaitTermination()
         final = (
             spark.read.parquet(state_log)
             .withColumn(
@@ -1369,13 +1055,7 @@ def q_streaming_cusum_monitor(
             _fround(F.col("best_drift"), 4).alias("max_drift"),
             _fround(F.col("mu"), 4).alias("mean_daily"),
         )
-        # materialize the |types|-bounded final state so the temp dirs
-        # can be reclaimed here instead of leaking per invocation (the
-        # returned frame must not depend on the deleted state parquet)
-        return spark.createDataFrame(sel.collect(), sel.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(sel)
 
 
 def q_streaming_max_concurrency(
@@ -1437,9 +1117,6 @@ def q_streaming_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_registry_still_visible which MUST be 0. Deterministic end
     state, so the key value-checks against a DuckDB replay of the
     registry/visibility spec."""
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.sources.versioned import (
         delete_rows,
         read_snapshot_with_dv,
@@ -1451,11 +1128,6 @@ def q_streaming_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "event_type", "user_id"
     )
     band_sql = "substring(md5(cast(user_id as string)), 1, 4) < '0800'"
-    base = tempfile.mkdtemp(prefix="graft_sfu_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sfu_")
-    src = os.path.join(base, "src")
-    store = os.path.join(base, "store")
-    reg_dir = os.path.join(base, "registry")
 
     def handle_batch(batch, batch_id: int) -> None:
         bspark = batch.sparkSession
@@ -1476,35 +1148,19 @@ def q_streaming_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).distinct().write.mode("overwrite").parquet(reg_dir)
             delete_rows(bspark, store, "event_id", band_sql)
 
-    try:
-        write_snapshot(
-            ev.filter(F.col("ts").cast("date") < w2_start), store
+    with scratch_dir("graft_sfu_") as base:
+        store = os.path.join(base, "store")
+        reg_dir = os.path.join(base, "registry")
+        day = F.col("ts").cast("date")
+        write_snapshot(ev.filter(day < w2_start), store)
+        waves = [
+            ev.filter((day >= w2_start) & (day < w3_start)),
+            ev.filter(day >= w3_start),
+        ]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        ev.filter(
-            (F.col("ts").cast("date") >= w2_start)
-            & (F.col("ts").cast("date") < w3_start)
-        ).coalesce(1).write.parquet(os.path.join(src, "w2"))
-        ev.filter(
-            F.col("ts").cast("date") >= w3_start
-        ).coalesce(1).write.parquet(os.path.join(src, "w3"))
-        now = _time.time()
-        for d, ts in (("w2", now - 120), ("w3", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "event_id BIGINT, ts TIMESTAMP, event_type STRING, "
-                "user_id BIGINT"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
         final = read_snapshot_with_dv(spark, store)
         reg = spark.read.parquet(reg_dir).distinct()
         vis = (
@@ -1534,12 +1190,7 @@ def q_streaming_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("n_registry_still_visible"),
             )
         )
-        # |event_types|-bounded: materialize so the temp store can be
-        # reclaimed here instead of leaking per invocation
-        return spark.createDataFrame(sel.collect(), sel.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(sel)
 
 
 def q_streaming_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1555,9 +1206,6 @@ def q_streaming_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-deterministic producer would double-apply). Per-batch cost =
     the delta write alone (kilobytes); the base relation is only ever
     scanned at read time."""
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.sources.versioned import (
         committed_delta_metas,
         current_version,
@@ -1572,10 +1220,6 @@ def q_streaming_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").cast("int").alias("c_nationkey"),
         "c_acctbal",
     )
-    base = tempfile.mkdtemp(prefix="graft_smor_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_smor_")
-    src = os.path.join(base, "cdc")
-    path = os.path.join(base, "customer")
 
     def handle_batch(batch, batch_id: int) -> None:
         v = current_version(path)
@@ -1585,41 +1229,21 @@ def q_streaming_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         write_delta(batch, path, op_col="op", meta=str(batch_id))
 
-    try:
+    with scratch_dir("graft_smor_") as base:
+        path = os.path.join(base, "customer")
         write_snapshot(c, path)
-        w1, w2 = _customer_cdc_waves(c)
-        w1.coalesce(1).write.parquet(os.path.join(src, "w1"))
-        w2.coalesce(1).write.parquet(os.path.join(src, "w2"))
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "c_custkey BIGINT, c_name STRING, c_nationkey INT, "
-                "c_acctbal DOUBLE, op STRING"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+        waves = list(_customer_cdc_waves(c))
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        q.awaitTermination()
         out = read_merged(spark, path, ["c_custkey"]).select(
             "c_custkey",
             "c_name",
             "c_nationkey",
             _fround(F.col("c_acctbal"), 2).alias("c_acctbal"),
         )
-        return _reclaimed_dist(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed_dist(out)
 
 
 def q_streaming_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1636,9 +1260,6 @@ def q_streaming_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     but a recovered stream may re-deliver a RESHAPED batch; the guard
     makes the question moot). Per-batch cost O(|batch| + |state|);
     the raw facts are never rescanned."""
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.sources.versioned import (
         committed_metas,
         current_version,
@@ -1649,10 +1270,6 @@ def q_streaming_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.col("ts"), "user_id"
     )
-    base = tempfile.mkdtemp(prefix="graft_shll_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_shll_")
-    src = os.path.join(base, "src")
-    state_log = os.path.join(base, "state")
 
     def handle_batch(batch, batch_id: int) -> None:
         if str(batch_id) in committed_metas(state_log):
@@ -1670,44 +1287,22 @@ def q_streaming_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         write_snapshot(part, state_log, meta=str(batch_id))
 
-    try:
+    with scratch_dir("graft_shll_") as base:
+        state_log = os.path.join(base, "state")
         # mid-DAY cut: day 16's sketch must merge across two batches
         cut = "2024-01-16 12:00:00"
-        ev.filter(F.col("ts") < cut).coalesce(1).write.parquet(
-            os.path.join(src, "w1")
+        waves = [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        ev.filter(F.col("ts") >= cut).coalesce(1).write.parquet(
-            os.path.join(src, "w2")
-        )
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "event_type STRING, ts TIMESTAMP, user_id BIGINT"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
 
         daily = read_snapshot(spark, state_log)
         evd = ev.select(
             "event_type", F.to_date("ts").alias("day"), "user_id"
         )
         out = _hll_trailing_report(daily, evd)
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_cms_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1721,9 +1316,6 @@ def q_streaming_cms_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch ids (a CMS fold double-counts on replay). The final
     estimates must satisfy the one-sided CMS contract against exact
     counts — the same oracle as heavy_hitters_cms by construction."""
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.sources.versioned import (
         committed_metas,
         current_version,
@@ -1732,10 +1324,6 @@ def q_streaming_cms_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
-    base = tempfile.mkdtemp(prefix="graft_scms_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_scms_")
-    src = os.path.join(base, "src")
-    state_log = os.path.join(base, "state")
     EPS, CONF, SEED = 0.001, 0.99, 42
 
     def _read_cms(bspark, blob):
@@ -1775,29 +1363,14 @@ def q_streaming_cms_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             meta=str(batch_id),
         )
 
-    try:
+    with scratch_dir("graft_scms_") as base:
+        state_log = os.path.join(base, "state")
         cut = "2024-01-16"
-        ev.filter(F.col("ts") < cut).coalesce(1).write.parquet(
-            os.path.join(src, "w1")
+        waves = [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        ev.filter(F.col("ts") >= cut).coalesce(1).write.parquet(
-            os.path.join(src, "w2")
-        )
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema("event_type STRING, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
 
         merged = _read_cms(
             spark, read_snapshot(spark, state_log).collect()[0]["sk"]
@@ -1831,12 +1404,7 @@ def q_streaming_cms_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("est_ok"),
             )
         )
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1851,9 +1419,6 @@ def q_streaming_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     versioned snapshot table whose meta carries the batch id, so a
     replayed micro-batch (crash between state write and checkpoint
     commit) is a no-op instead of double-counting the moments."""
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.sources.versioned import (
         committed_metas,
         current_version,
@@ -1871,10 +1436,6 @@ def q_streaming_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("value").isNotNull())
     )
-    base = tempfile.mkdtemp(prefix="graft_scp_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_scp_")
-    src = os.path.join(base, "src")
-    state_log = os.path.join(base, "state")
 
     def handle_batch(batch, batch_id: int) -> None:
         if str(batch_id) in committed_metas(state_log):
@@ -1890,39 +1451,16 @@ def q_streaming_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             part = _merge_changepoint_states(prior.unionByName(part))
         write_snapshot(part, state_log, meta=str(batch_id))
 
-    try:
-        ev.filter(F.col("ts") < "2024-01-16").coalesce(1).write.parquet(
-            os.path.join(src, "w1")
+    with scratch_dir("graft_scp_") as base:
+        state_log = os.path.join(base, "state")
+        cut = "2024-01-16"
+        waves = [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        ev.filter(F.col("ts") >= "2024-01-16").coalesce(1).write.parquet(
-            os.path.join(src, "w2")
-        )
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        schema = (
-            "event_id BIGINT, ts TIMESTAMP, event_type STRING, "
-            "value DOUBLE"
-        )
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
         out = _changepoint_render(read_snapshot(spark, state_log))
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_ewma_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1935,9 +1473,6 @@ def q_streaming_ewma_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     render is the SAME _ewma_chart helper the batch key uses, so
     capacity monitoring never rescans raw history and the oracle is
     ewma_control_chart's SQL by construction."""
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.sources.versioned import (
         committed_metas,
         current_version,
@@ -1948,10 +1483,6 @@ def q_streaming_ewma_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
     )
-    base = tempfile.mkdtemp(prefix="graft_sewma_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sewma_")
-    src = os.path.join(base, "src")
-    state_log = os.path.join(base, "state")
 
     def handle_batch(batch, batch_id: int) -> None:
         if str(batch_id) in committed_metas(state_log):
@@ -1969,39 +1500,17 @@ def q_streaming_ewma_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         write_snapshot(part, state_log, meta=str(batch_id))
 
-    try:
+    with scratch_dir("graft_sewma_") as base:
+        state_log = os.path.join(base, "state")
         # mid-DAY cut: day 16's count must merge across two batches
         cut = "2024-01-16 12:00:00"
-        ev.filter(F.col("ts") < cut).coalesce(1).write.parquet(
-            os.path.join(src, "w1")
+        waves = [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        ev.filter(F.col("ts") >= cut).coalesce(1).write.parquet(
-            os.path.join(src, "w2")
-        )
-        now = _time.time()
-        for d, ts in (("w1", now - 120), ("w2", now - 60)):
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "event_id BIGINT, ts TIMESTAMP, event_type STRING"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
         out = _ewma_chart(read_snapshot(spark, state_log))
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2028,9 +1537,6 @@ def q_streaming_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical eviction equals the latest filter and the batch oracle
     can mirror it per wave: a collision survives iff the old doc's
     day is inside the new doc's wave watermark window."""
-    import shutil
-    import time as _time
-
     from aproximacion_1_etl_spark.text.dedup import (
         assert_watermark_monotone,
         ttl_window_dedup_fold,
@@ -2042,12 +1548,6 @@ def q_streaming_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         (F.col("doc_id") % 30).cast("bigint").alias("event_day"),
     )
-    base = tempfile.mkdtemp(prefix="graft_std_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_std_")
-    src = os.path.join(base, "src")
-    store = os.path.join(base, "store")
-    store_next = os.path.join(base, "_store_next")
-    result = os.path.join(base, "result")
 
     def handle_batch(batch, batch_id: int) -> None:
         bspark = batch.sparkSession
@@ -2067,41 +1567,28 @@ def q_streaming_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             store
         )
 
-    try:
-        now = _time.time()
-        for i in range(3):
+    with scratch_dir("graft_std_") as base:
+        store = os.path.join(base, "store")
+        store_next = os.path.join(base, "_store_next")
+        result = os.path.join(base, "result")
+        waves = [
             docs.filter(
                 (F.col("event_day") >= 10 * i)
                 & (F.col("event_day") < 10 * (i + 1))
-            ).coalesce(1).write.parquet(os.path.join(src, f"w{i + 1}"))
-            pdir = os.path.join(src, f"w{i + 1}")
-            ts = now - 60 * (3 - i)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "doc_id BIGINT, text STRING, event_day BIGINT"
             )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+            for i in range(3)
+        ]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        q.awaitTermination()
         if not os.path.isdir(result):
             return spark.createDataFrame(
                 [],
                 "doc_new BIGINT, doc_old BIGINT, matching_bands BIGINT, "
                 "est_jaccard DOUBLE",
             )
-        return _reclaimed(spark.read.parquet(result), base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(spark.read.parquet(result))
 
 
 def q_streaming_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2123,7 +1610,6 @@ def q_streaming_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming_profile device: the fold READS the store it replaces;
     new edges are eagerly checkpointed before the append for the same
     reason."""
-    import shutil
     import time as _time
 
     from aproximacion_1_etl_spark.operators.graph import (
@@ -2137,12 +1623,6 @@ def q_streaming_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     op = _capped_order_parts(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="graft_sgs_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sgs_")
-    src = os.path.join(base, "src")
-    edge_store = os.path.join(base, "edges")
-    stats_store = os.path.join(base, "stats")
-    stats_next = os.path.join(base, "_stats_next")
 
     def handle_batch(batch, batch_id: int) -> None:
         t0 = _time.time()
@@ -2166,43 +1646,25 @@ def q_streaming_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         new.write.mode("append").parquet(edge_store)
         _record_fold("streaming_graph_stats", t0)
 
-    try:
+    with scratch_dir("graft_sgs_") as base:
+        edge_store = os.path.join(base, "edges")
+        stats_store = os.path.join(base, "stats")
+        stats_next = os.path.join(base, "_stats_next")
+        day = F.col("o_orderdate")
         waves = [
-            ("w1", F.col("o_orderdate") < "1998-01-01"),
-            (
-                "w2",
-                (F.col("o_orderdate") >= "1998-01-01")
-                & (F.col("o_orderdate") < "2001-01-01"),
-            ),
-            ("w3", F.col("o_orderdate") >= "2001-01-01"),
+            op.filter(cond).select("l_orderkey", "l_partkey")
+            for cond in (
+                day < "1998-01-01",
+                (day >= "1998-01-01") & (day < "2001-01-01"),
+                day >= "2001-01-01",
+            )
         ]
-        now = _time.time()
-        for i, (d, cond) in enumerate(waves):
-            op.filter(cond).select(
-                "l_orderkey", "l_partkey"
-            ).coalesce(1).write.parquet(os.path.join(src, d))
-            ts = now - 60 * (len(waves) - i)
-            pdir = os.path.join(src, d)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema("l_orderkey BIGINT, l_partkey BIGINT")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        q.awaitTermination()
-
         out = _graph_stats_top20(spark.read.parquet(stats_store))
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2223,7 +1685,6 @@ def q_streaming_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared with the batch twin), so hash equality proves the
     multi-wave fold converges to the rebuild whatever the wave
     boundaries."""
-    import shutil
     import time as _time
 
     from aproximacion_1_etl_spark.text.dedup import (
@@ -2235,12 +1696,6 @@ def q_streaming_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="graft_sdc_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sdc_")
-    src = os.path.join(base, "src")
-    sig_store = os.path.join(base, "sigs")
-    cl_store = os.path.join(base, "clusters")
-    cl_next = os.path.join(base, "_clusters_next")
 
     def handle_batch(batch, batch_id: int) -> None:
         t0 = _time.time()
@@ -2293,37 +1748,21 @@ def q_streaming_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         bsigs.write.mode("append").parquet(sig_store)
         _record_fold("streaming_dup_clusters", t0)
 
-    try:
-        now = _time.time()
-        for i in range(3):
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-                os.path.join(src, f"w{i + 1}")
-            )
-            pdir = os.path.join(src, f"w{i + 1}")
-            ts = now - 60 * (3 - i)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema("doc_id BIGINT, text STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+    with scratch_dir("graft_sdc_") as base:
+        sig_store = os.path.join(base, "sigs")
+        cl_store = os.path.join(base, "clusters")
+        cl_next = os.path.join(base, "_clusters_next")
+        waves = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        q.awaitTermination()
         out = spark.read.parquet(cl_store).select(
             "doc_id",
             "cluster_id",
             (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
         )
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2340,7 +1779,6 @@ def q_streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch BM25 over the full corpus (bm25_topk SQL, shared with the
     batch twin) — hash equality proves the multi-wave fold reproduces
     the one-shot statistics bit-for-bit."""
-    import shutil
     import time as _time
 
     from aproximacion_1_etl_spark.text.analysis import (
@@ -2351,14 +1789,6 @@ def q_streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="graft_sbi_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sbi_")
-    src = os.path.join(base, "src")
-    post_store = os.path.join(base, "postings")
-    df_store = os.path.join(base, "df")
-    df_next = os.path.join(base, "_df_next")
-    stats_store = os.path.join(base, "stats")
-    stats_next = os.path.join(base, "_stats_next")
 
     def handle_batch(batch, batch_id: int) -> None:
         t0 = _time.time()
@@ -2410,26 +1840,17 @@ def q_streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _record_fold("streaming_bm25_index", t0)
 
-    try:
-        now = _time.time()
-        for i in range(3):
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-                os.path.join(src, f"w{i + 1}")
-            )
-            pdir = os.path.join(src, f"w{i + 1}")
-            ts = now - 60 * (3 - i)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema("doc_id BIGINT, text STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+    with scratch_dir("graft_sbi_") as base:
+        post_store = os.path.join(base, "postings")
+        df_store = os.path.join(base, "df")
+        df_next = os.path.join(base, "_df_next")
+        stats_store = os.path.join(base, "stats")
+        stats_next = os.path.join(base, "_stats_next")
+        waves = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        q.awaitTermination()
         qrows = [
             (qid, t)
             for qid, terms in sorted(BM25_QUERIES.items())
@@ -2452,12 +1873,7 @@ def q_streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             qdf,
             k=10,
         )
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_lm_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2481,7 +1897,6 @@ def q_streaming_lm_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring tail. Oracle = the one-shot ``lm_trigram_score`` SQL over
     the full corpus — hash equality proves the multi-wave guarded
     fold reproduces the from-scratch model bit-for-bit."""
-    import shutil
     import time as _time
 
     from aproximacion_1_etl_spark.text.analysis import (
@@ -2493,9 +1908,6 @@ def q_streaming_lm_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    base = tempfile.mkdtemp(prefix="graft_sli_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sli_")
-    src = os.path.join(base, "src")
 
     def handle_batch(batch, batch_id: int) -> None:
         t0 = _time.time()
@@ -2531,39 +1943,18 @@ def q_streaming_lm_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         _mark_batch_committed(base, batch_id)
         _record_fold("streaming_lm_index", t0)
 
-    try:
-        now = _time.time()
-        for i in range(3):
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-                os.path.join(src, f"w{i + 1}")
-            )
-            pdir = os.path.join(src, f"w{i + 1}")
-            ts = now - 60 * (3 - i)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "doc_id BIGINT, lang STRING, text STRING"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+    with scratch_dir("graft_sli_") as base:
+        waves = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        q.awaitTermination()
         last = _committed_batch_ids(base)[-1]
         counts = spark.read.parquet(os.path.join(base, f"counts_b{last}"))
         out = lm_score_from_counts(_doc_tri_counts(docs), counts)
         # per-doc scores are corpus-sized: distributed reclaim, never
         # a driver collect
-        return _reclaimed_dist(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed_dist(out)
 
 
 def q_streaming_weighted_sample(
@@ -2591,7 +1982,6 @@ def q_streaming_weighted_sample(
     ``weighted_sample`` SQL over the full corpus — hash equality
     proves the multi-wave fold reproduces the from-scratch sample
     bit-for-bit."""
-    import shutil
     import time as _time
 
     from aproximacion_1_etl_spark.functions.sampling import (
@@ -2601,9 +1991,6 @@ def q_streaming_weighted_sample(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    base = tempfile.mkdtemp(prefix="graft_sws_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sws_")
-    src = os.path.join(base, "src")
 
     def handle_batch(batch, batch_id: int) -> None:
         t0 = _time.time()
@@ -2635,28 +2022,12 @@ def q_streaming_weighted_sample(
         _mark_batch_committed(base, batch_id)
         _record_fold("streaming_weighted_sample", t0)
 
-    try:
-        now = _time.time()
-        for i in range(3):
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-                os.path.join(src, f"w{i + 1}")
-            )
-            pdir = os.path.join(src, f"w{i + 1}")
-            ts = now - 60 * (3 - i)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "doc_id BIGINT, lang STRING, n_chars BIGINT"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+    with scratch_dir("graft_sws_") as base:
+        waves = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        q.awaitTermination()
         last = _committed_batch_ids(base)[-1]
         out = spark.read.parquet(
             os.path.join(base, f"store_b{last}")
@@ -2666,12 +2037,7 @@ def q_streaming_weighted_sample(
             F.expr("floor(sample_score * 1000000.0 + 0.5) / 1000000.0")
             .alias("score"),
         )
-        return _reclaimed(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed(out)
 
 
 def q_streaming_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2700,7 +2066,6 @@ def q_streaming_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk — the ``incremental_chunk_index`` output shape, sharing its
     from-scratch rebuild oracle: hash equality proves the multi-wave
     fold == rebuild for both halves."""
-    import shutil
     import time as _time
 
     from aproximacion_1_etl_spark.queries.text import (
@@ -2717,9 +2082,6 @@ def q_streaming_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    base = tempfile.mkdtemp(prefix="graft_sci_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sci_")
-    src = os.path.join(base, "src")
 
     def handle_batch(batch, batch_id: int) -> None:
         t0 = _time.time()
@@ -2780,28 +2142,12 @@ def q_streaming_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         _mark_batch_committed(base, batch_id)
         _record_fold("streaming_chunk_index", t0)
 
-    try:
-        now = _time.time()
-        for i in range(3):
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-                os.path.join(src, f"w{i + 1}")
-            )
-            pdir = os.path.join(src, f"w{i + 1}")
-            ts = now - 60 * (3 - i)
-            for f in os.listdir(pdir):
-                os.utime(os.path.join(pdir, f), (ts, ts))
-        q = (
-            spark.readStream.schema(
-                "doc_id BIGINT, lang STRING, text STRING"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-            .writeStream.foreachBatch(handle_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+    with scratch_dir("graft_sci_") as base:
+        waves = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+        run_to_end(
+            wave_stream(base, waves).writeStream.foreachBatch(handle_batch),
+            base,
         )
-        q.awaitTermination()
         committed = _committed_batch_ids(base)
         vecidx = spark.read.parquet(
             *[os.path.join(base, f"vec_b{i}") for i in committed]
@@ -2826,12 +2172,7 @@ def q_streaming_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("vv"),
         )
         # per-chunk digest is corpus-sized: distributed reclaim
-        return _reclaimed_dist(out, base, ckpt)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _reclaimed_dist(out)
 
 
 __all__ = [

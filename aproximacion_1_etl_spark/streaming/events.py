@@ -13,12 +13,10 @@ watermark bounds the window state store; the windowed agg shuffles on
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from aproximacion_1_etl_spark.streaming.harness import drain
 
 EVENTS_DDL_NANOS = (
     "event_id BIGINT, ts BIGINT, user_id BIGINT, "
@@ -142,7 +140,6 @@ def stream_static_enrich(
     At scale this is the canonical streaming enrichment shape: the
     stream side stays partitioned by its source; only the rolled-up
     (|segments|-sized) state lives in the state store."""
-    table = f"events_enriched_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, source_dir, glob)
     dim = customer.select(
         F.col("c_custkey"), F.col("c_mktsegment")
@@ -161,22 +158,7 @@ def stream_static_enrich(
             / F.lit(100.0)
         ).alias("sum_value"),
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        # memory sink holds rows driver-side; the checkpoint is dead
-        # once the AvailableNow run terminates
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(table)
+    return drain(agg, "complete")
 
 
 def run_available_now(
@@ -193,22 +175,8 @@ def run_available_now(
     (each event lands in window_duration/slide overlapping windows;
     state per open window is bounded by the watermark).
     """
-    table = f"events_windowed_{uuid.uuid4().hex[:8]}"
     stream = windowed_event_counts(
         read_events_stream(spark, source_dir, glob), window_duration,
         slide=slide,
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(table)
+    return drain(stream, "complete")

@@ -26,9 +26,6 @@ would put a watermark-sorted window upstream).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
 from typing import Any, Iterable, Iterator
 
 import pandas as pd
@@ -38,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from aproximacion_1_etl_spark.streaming.events import read_events_stream
+from aproximacion_1_etl_spark.streaming.harness import drain
 
 _OUT_DDL = "user_id BIGINT, n_sessions BIGINT, n_events BIGINT"
 _STATE_DDL = "last_sec DOUBLE, n_sessions BIGINT, n_events BIGINT"
@@ -189,25 +187,11 @@ def run_stateful_sessions(
     are superseded by taking the max totals per user (both counters are
     monotone), so the result is batch-equivalent regardless of how the
     source splits into batches."""
-    table = f"stateful_sessions_{uuid.uuid4().hex[:8]}"
     stream = sessionize_stateful(
         read_events_stream(spark, source_dir, glob), gap_seconds
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_state_")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return (
-        spark.table(table)
+        drain(stream, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_sessions").alias("n_sessions"),

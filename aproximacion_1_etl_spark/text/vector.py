@@ -23,11 +23,7 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-
-def _fround(col: Column, n: int) -> Column:
-    """Engine-portable rounding (see queries._fround)."""
-    f = float(10 ** n)
-    return F.floor(col * F.lit(f) + F.lit(0.5)) / F.lit(f)
+from aproximacion_1_etl_spark.functions.rounding import _fround
 
 
 def _dot(a: Column, b: Column) -> Column:

@@ -7,6 +7,7 @@ import os
 import tempfile
 
 import pyspark.sql.functions as F
+import pytest
 
 from aproximacion_1_etl_spark.operators.refine import merge_upsert
 from aproximacion_1_etl_spark.sources.tables import load_table
@@ -426,3 +427,86 @@ def test_ttl_window_watermark_monotonicity_guard(spark):
     # out-of-order wave fails loud
     with pytest.raises(RuntimeError, match="out-of-order"):
         assert_watermark_monotone(w0, store)
+
+
+def test_wave_stream_replays_each_wave_as_one_batch_in_order(spark):
+    """The harness contract: wave i is micro-batch i with exactly that
+    wave's rows, whatever the wave sizes (the first wave is the
+    largest, the middle one is empty), and the scratch root is gone
+    after the ``with`` block, on success and on a failing handler."""
+    from aproximacion_1_etl_spark.streaming.harness import (
+        run_to_end,
+        scratch_dir,
+        wave_stream,
+    )
+
+    waves = [
+        spark.range(0, 50).select(F.col("id").alias("x")),
+        spark.range(0).select(F.col("id").alias("x")),
+        spark.range(100, 103).select(F.col("id").alias("x")),
+    ]
+    seen = []
+
+    def record(batch, batch_id):
+        seen.append((batch_id, sorted(r["x"] for r in batch.collect())))
+
+    with scratch_dir("graft_wave_t_") as root:
+        run_to_end(
+            wave_stream(root, waves).writeStream.foreachBatch(record), root
+        )
+    assert seen == [(0, list(range(50))), (1, []), (2, [100, 101, 102])]
+    assert not os.path.exists(root)
+
+    def fail(batch, batch_id):
+        raise RuntimeError("injected handler failure")
+
+    with pytest.raises(Exception, match="injected handler failure"):
+        with scratch_dir("graft_wave_t_") as root:
+            run_to_end(
+                wave_stream(root, waves).writeStream.foreachBatch(fail),
+                root,
+            )
+    assert not os.path.exists(root)
+
+
+@pytest.mark.parametrize(
+    "key, module, name",
+    [
+        (
+            "streaming_incremental_dedup",
+            "aproximacion_1_etl_spark.text.dedup",
+            "incremental_minhash_dedup",
+        ),
+        (
+            "streaming_ivm_join",
+            "aproximacion_1_etl_spark.operators.refine",
+            "maintain_join_view",
+        ),
+        (
+            "streaming_fingerprint_maintenance",
+            "aproximacion_1_etl_spark.functions.profile",
+            "row_bucket_hashes",
+        ),
+    ],
+)
+def test_streaming_key_reclaims_temp_dirs_when_a_batch_fails(
+    spark, sf_dir, tmp_path, monkeypatch, key, module, name
+):
+    """A micro-batch that raises must propagate its error and leave no
+    scratch directory behind. Each key imports the patched function
+    inside its body, so the module-attribute patch reaches its
+    foreachBatch handler."""
+    import importlib
+
+    from aproximacion_1_etl_spark.queries import ALL_QUERIES
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected fold failure")
+
+    temp_root = tmp_path / "tmp"
+    temp_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp_root))
+    monkeypatch.setattr(importlib.import_module(module), name, boom)
+    with pytest.raises(Exception, match="injected fold failure"):
+        ALL_QUERIES[key](spark, sf_dir)
+    assert os.listdir(temp_root) == []
