@@ -563,30 +563,19 @@ def q_quantile_normalize_scores(
 
 
 def q_logreg_label_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 iterative model fitting: full-batch gradient-descent
-    logistic regression (operators/ml.py::logistic_regression_gd)
+    """§2.10 iterative model fitting: evaluates the registry's
+    full-batch gradient-descent logistic regression
+    (``_trained_logreg_weights``, operators/ml.py::logistic_regression_gd)
     predicting label < 5 from the first three embedding dimensions —
     the general pattern for ANY differentiable fixed-width model: one
     distributed aggregation per iteration, weights driver-held and
     9-dp-snapped so the DuckDB oracle replays the identical recurrence
-    as unrolled CTEs. The final scoring pass emits weights, accuracy
-    (decided on z >= 0 — exact arithmetic, no exp at the boundary) and
-    logloss in ONE more aggregation."""
-    from aproximacion_1_etl_spark.operators.ml import (
-        logistic_regression_gd,
-    )
-    from aproximacion_1_etl_spark.text.vector import _as_double
-
-    emb = _as_double(load_table(spark, sf_dir, "embeddings"), "embedding")
-    feats = emb.select(
-        F.when(F.col("label") < 5, 1.0).otherwise(0.0).alias("y"),
-        F.element_at("embedding", 1).alias("x1"),
-        F.element_at("embedding", 2).alias("x2"),
-        F.element_at("embedding", 3).alias("x3"),
-    )
-    w = logistic_regression_gd(
-        feats, ["x1", "x2", "x3"], label_col="y", iterations=12, lr=2.0
-    )
+    as unrolled CTEs. The model is fitted once per corpus and shared
+    with every key that scores it; this key adds ONE aggregation that
+    emits weights, accuracy (decided on z >= 0 — exact arithmetic, no
+    exp at the boundary) and logloss."""
+    feats = _logreg_feats(spark, sf_dir)
+    w = _trained_logreg_weights(spark, sf_dir)
     z = (
         F.lit(0.0)
         + F.lit(w[0]) * F.lit(1.0)

@@ -207,6 +207,23 @@ def test_logreg_descends_loss_and_matches_numpy_direction(spark, sf_dir):
     assert np.allclose(wv, np.array(w), atol=1e-8)
 
 
+def test_logreg_label_model_reuses_the_registry_model(spark, sf_dir):
+    """The key evaluates the registry's logreg model: once it is
+    fitted, a call runs only its scoring aggregate, not the 12-round
+    GD fit again (29 jobs when it refitted)."""
+    rows = ALL_QUERIES["logreg_label_model"](spark, sf_dir).collect()
+    sc = spark.sparkContext
+    group = "logreg-label-model-warm"
+    sc.setJobGroup(group, group)
+    try:
+        again = ALL_QUERIES["logreg_label_model"](spark, sf_dir).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again == rows
+    assert len(jobs) <= 3
+
+
 def test_naive_bayes_beats_priors_and_rows_consistent(spark, sf_dir):
     rows = ALL_QUERIES["naive_bayes_lang"](spark, sf_dir).collect()
     n_docs = load_table(spark, sf_dir, "documents").count()

@@ -72,3 +72,53 @@ def test_one_fround_and_the_daily_runner_skips_the_catalog():
         check=True,
     )
     assert out.stdout.strip() == "False"
+
+
+def _call_sites(func: str) -> set[str]:
+    """Where the query catalog calls ``func``: the artifact name when
+    the call sits in a builder passed to ``artifact(...)``, else the
+    name of the enclosing top-level function."""
+    import ast
+
+    def calls(node, name):
+        return [
+            n for n in ast.walk(node)
+            if isinstance(n, ast.Call)
+            and getattr(n.func, "id", getattr(n.func, "attr", None)) == name
+        ]
+
+    sites = set()
+    for path in sorted((PKG / "queries").glob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for top in tree.body:
+            if not isinstance(top, ast.FunctionDef):
+                continue
+            builders = {
+                c.args[4].id: ast.literal_eval(c.args[2])
+                if isinstance(c.args[2], ast.Constant)
+                else ast.unparse(c.args[2])
+                for c in calls(top, "artifact")
+                if len(c.args) == 5 and isinstance(c.args[4], ast.Name)
+            }
+            in_builder = set()
+            for d in ast.walk(top):
+                if isinstance(d, ast.FunctionDef) and d.name in builders:
+                    for c in calls(d, func):
+                        sites.add(builders[d.name])
+                        in_builder.add(id(c))
+            if any(id(c) not in in_builder for c in calls(top, func)):
+                sites.add(top.name)
+    return sites
+
+
+def test_models_and_exact_truths_are_built_only_in_the_registry():
+    """A model or exact ground truth that more than one key needs is
+    an artifact(): the GD trainer runs only in the logreg_weights
+    builder, and the brute-force top-k only in the two exact-truth
+    builders and in the operator's own key."""
+    assert _call_sites("logistic_regression_gd") == {"logreg_weights"}
+    assert _call_sites("ann_topk_bruteforce") == {
+        "exact_topk_full",
+        "retrain_exact_topk",
+        "q_ann_cosine_topk",
+    }

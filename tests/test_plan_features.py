@@ -272,8 +272,13 @@ def test_round4_analytics_invariant_under_shuffle_partitioning(
     rests on decimal sums / snapped recurrences: PCA power iteration,
     GD logistic regression, triangle counting, the Poisson bootstrap
     and quantile normalization must return identical VALUES at any
-    shuffle width."""
-    from aproximacion_1_etl_spark.queries import ALL_QUERIES
+    shuffle width. logreg_label_model reads the registry's model,
+    which a second width serves from the memo, so the GD fit itself is
+    also run at both widths."""
+    from aproximacion_1_etl_spark.operators.ml import (
+        logistic_regression_gd,
+    )
+    from aproximacion_1_etl_spark.queries import ALL_QUERIES, _logreg_feats
 
     keys = [
         "embedding_pca_power",
@@ -295,6 +300,11 @@ def test_round4_analytics_invariant_under_shuffle_partitioning(
                 results.setdefault(k, []).append(
                     sorted(tuple(r) for r in rows)
                 )
+            results.setdefault("logistic_regression_gd", []).append(
+                logistic_regression_gd(
+                    _logreg_feats(spark, sf_dir), ["x1", "x2", "x3"]
+                )
+            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
     for k, (a, b) in results.items():

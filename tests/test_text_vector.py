@@ -982,6 +982,36 @@ def test_ann_recall_perfect_when_lsh_probes_everything(spark, sf_dir):
         assert r["recall"] == 1.0
 
 
+def test_exact_topk_is_a_prefix_of_one_artifact_build(
+    spark, sf_dir, monkeypatch
+):
+    """Every (query ids, k) within the artifact's range reads the one
+    exact_topk_full materialization, and equals the brute pass at the
+    same arguments row for row: each query's ranking stands alone, so
+    the top-k of the top-20 is the top-k."""
+    import aproximacion_1_etl_spark.queries.vector as qv
+    from aproximacion_1_etl_spark.queries.common import _ARTIFACTS
+
+    monkeypatch.delitem(
+        _ARTIFACTS, ("exact_topk_full", sf_dir), raising=False
+    )
+    builds = []
+
+    def counted(*args, **kwargs):
+        builds.append(kwargs)
+        return ann_topk_bruteforce(*args, **kwargs)
+
+    monkeypatch.setattr(qv, "ann_topk_bruteforce", counted)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    order = ["query_id", "rank"]
+    for qids, k in (([0, 1, 2], 5), ([0, 1, 2, 3, 4], 10)):
+        got = qv._exact_topk(spark, sf_dir, qids, k)
+        want = ann_topk_bruteforce(emb, query_ids=qids, k=k)
+        assert got.columns == want.columns
+        assert got.orderBy(order).collect() == want.orderBy(order).collect()
+    assert len(builds) == 1
+
+
 def test_bpe_train_merges_learns_greedy_merges(spark):
     from aproximacion_1_etl_spark.text.analysis import bpe_train_merges
 
