@@ -1901,13 +1901,13 @@ def quantization_error(
 def ann_recall_at_k(
     embeddings: DataFrame,
     query_ids: list[int],
+    exact: DataFrame,
     k: int = 10,
     planes: int = 4,
     tables: int = 2,
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact: DataFrame | None = None,
 ) -> DataFrame:
     """Retrieval-quality evaluation: per-query recall@k of the LSH
     approximate top-k against the exact brute-force top-k ground truth
@@ -1926,16 +1926,11 @@ def ann_recall_at_k(
     exact (count <= k over a small integer), so the key value-checks.
 
     ``exact``: the (query_id, <id_col>) exact top-k of ``query_ids``
-    when the caller already materialized it (a session shares one
-    brute-force truth across keys); when omitted it is derived here
-    with one brute pass.
+    (``ann_topk_bruteforce`` at the same k), materialized by the
+    caller so a session shares one brute-force truth across keys.
 
     Output: (query_id, n_exact, n_hit, recall).
     """
-    if exact is None:
-        exact = ann_topk_bruteforce(
-            embeddings, query_ids, k=k, id_col=id_col, vec_col=vec_col
-        )
     approx = ann_topk_lsh(
         embeddings,
         query_ids,
@@ -2152,11 +2147,11 @@ def ivf_nprobe_plan(
     embeddings: DataFrame,
     query_ids: list[int],
     centroids: dict[int, list[float]],
+    exact: DataFrame,
     ladder: tuple[int, ...] = (1, 2, 4, 8),
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact: DataFrame | None = None,
 ) -> DataFrame:
     """IVF nprobe-LADDER PLANNER — the sizing report for the probe
     lever, completing the planner family next to the LSH banding
@@ -2179,10 +2174,8 @@ def ivf_nprobe_plan(
     the (|Q|·k)- and (|Q|·nprobe_max)-sized checkpointed relations.
 
     ``exact``: the (query_id, <id_col>) exact top-k of ``query_ids``
-    when the caller already materialized it (it is codebook-
-    independent, so a session shares one); when omitted it is derived
-    here with one brute pass, overlapped with the assignment — the
-    ivf_recall_cost contract."""
+    (``ann_topk_bruteforce`` at the same k), materialized by the
+    caller; it is codebook-independent, so a session shares one."""
     from aproximacion_1_etl_spark.functions.concurrency import overlap
 
     emb = _as_double(embeddings, vec_col)
@@ -2196,9 +2189,8 @@ def ivf_nprobe_plan(
     dist_structs = F.expr(
         _dist_structs_sql(centroids, cdots, vec_col, "_vv", 6)
     )
-    # the independent driver-blocking materializations (the corpus
-    # argmin assignment, the per-query probe order and, unless the
-    # caller supplied it, the brute-force ground truth) overlap
+    # the two independent driver-blocking materializations (the
+    # corpus argmin assignment, the per-query probe order) overlap
     # through the driver pool (guide §2.6) instead of running
     # serially; everything downstream — pop, tot, capture, the ladder
     # aggregates — is a cheap derivation of these checkpointed
@@ -2206,7 +2198,7 @@ def ivf_nprobe_plan(
     # itself is checkpointed ONCE where the serial form evaluated the
     # full-corpus argmin twice (the pop checkpoint and the capture
     # checkpoint each re-ran it).
-    jobs = [
+    assigned, probes = overlap(
         lambda: with_vv.select(
             id_col,
             F.array_min(dist_structs).getField("cid").alias("cell"),
@@ -2224,18 +2216,8 @@ def ivf_nprobe_plan(
             F.col("p.cid").alias("cell"),
         )
         .localCheckpoint(eager=True),
-    ]
-    if exact is None:
-        jobs.append(
-            lambda: ann_topk_bruteforce(
-                emb, query_ids=query_ids, k=k, id_col=id_col,
-                vec_col=vec_col,
-            )
-            .select("query_id", id_col)
-            .localCheckpoint(eager=True)
-        )
-    assigned, probes, *built = overlap(*jobs)
-    truth = built[0] if built else exact.select("query_id", id_col)
+    )
+    truth = exact.select("query_id", id_col)
     # second overlapped wave: the two remaining corpus-touching
     # reductions (each one pass over the persisted assignment) — their
     # tiny outputs are checkpointed so the ladder aggregates never

@@ -974,7 +974,13 @@ def test_ann_recall_perfect_when_lsh_probes_everything(spark, sf_dir):
     # planes=0 => every vector lands in bucket 0 of each table, so the
     # LSH candidate set is the full corpus and recall must be exactly 1
     out = ann_recall_at_k(
-        emb, query_ids=[0, 1, 2], k=5, planes=0, tables=1, dim=64
+        emb,
+        query_ids=[0, 1, 2],
+        k=5,
+        planes=0,
+        tables=1,
+        dim=64,
+        exact=ann_topk_bruteforce(emb, query_ids=[0, 1, 2], k=5),
     ).collect()
     assert len(out) == 3
     for r in out:
