@@ -8,18 +8,22 @@ ranks re-aggregate — a join + groupBy per step, shuffling on the node
 key both times.
 
 Scale posture: the edge list is the big table (100 TB-class) and is
-reused every iteration — cache it, and co-partition both shuffles on
-the same key so AQE reuses the exchange. Lineage grows linearly with
-iterations, so iterations are cut with ``localCheckpoint`` — without
-it, plan size (and task serialization time) grows without bound and
-long loops eventually stack-overflow the optimizer. The node count
-enters the plan as a broadcast 1-row aggregate, never as a driver-side
-``.count()`` — the driver holds only conf, never data, and the whole
-setup fuses into the first checkpoint job instead of running 2-3
-separate driver-blocking jobs.
+reused every iteration, so PageRank is two steps. ``pagerank_graph``
+prepares the graph once: the degree-annotated edges, the node sets,
+|V| and the depth-1 flag, each eagerly checkpointed. ``pagerank``
+then runs only the rank loop over them, so a caller that persists
+the graph (the catalog's ``supplier_graph`` artifact) pays only for
+the iterations on every call. Lineage grows linearly with iterations,
+so iterations are cut with ``localCheckpoint`` — without it, plan
+size (and task serialization time) grows without bound and long
+loops eventually stack-overflow the optimizer. The node count enters
+the plan as a broadcast 1-row relation, never as a driver-side
+``.count()`` — the driver holds only conf, never data.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -32,18 +36,98 @@ from pyspark.sql import DataFrame
 TRIANGLE_DELTA_BROADCAST_MAX = 10_000_000
 
 
+class PageRankGraph(NamedTuple):
+    """The loop invariants of PageRank over one edge list, each an
+    eagerly checkpointed relation: ``e_deg`` (src, dst, out_deg),
+    ``nodes`` (node), ``non_receivers`` (node: no inbound edge),
+    ``n_nodes`` (the 1-row |V| relation) and ``sender_receives``
+    (False when no node both sends and receives: rank flow has depth
+    1)."""
+
+    e_deg: DataFrame
+    nodes: DataFrame
+    non_receivers: DataFrame
+    n_nodes: DataFrame
+    sender_receives: bool
+
+
+def pagerank_graph(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> PageRankGraph:
+    """Prepare ``edges`` for ``pagerank``: everything the rank loop
+    reads that does not depend on the ranks, built once and eagerly
+    checkpointed, so a caller that persists the result (the catalog's
+    ``supplier_graph`` artifact) pays only for the iterations on every
+    later call. Damping and the iteration count are not inputs: one
+    graph serves every loop over it."""
+    # the raw edge relation is scanned by nodes, e_deg, non_receivers
+    # and the depth probe — cache it for the build, or the upstream
+    # plan (often a join+distinct) runs once per scan. An edge with a
+    # null endpoint joins no vertex, so it is dropped.
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .dropna()
+        .cache()
+    )
+    try:
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        # |V| as an in-plan broadcast scalar: a 1-row relation
+        # cross-joined (broadcast) wherever 1/n or the teleport term is
+        # needed. No .count() on the driver, and the constant stays
+        # inside Catalyst's reach.
+        n_nodes = nodes.agg(F.count("*").alias("n_nodes")).localCheckpoint(
+            eager=True
+        )
+        out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
+        e_deg = e.join(out_deg, "src").localCheckpoint(eager=True)
+        # Nodes with no inbound edge never receive contributions —
+        # their rank is the constant teleport term every iteration, so
+        # the loop unions them in instead of left-joining every node
+        # (contribs' node set is exactly the distinct-dst set, so
+        # contribs ∪ non_receivers covers every node exactly once).
+        non_receivers = nodes.join(
+            e.select(F.col("dst").alias("node")).distinct(),
+            "node",
+            "left_anti",
+        ).localCheckpoint(eager=True)
+        # Depth-1 probe: if NO node both sends and receives (the graph
+        # is pure-sources -> pure-sinks, e.g. any bipartite interaction
+        # graph), every sender's rank is the constant teleport term
+        # from iteration 1 onward, so the vector reaches its EXACT
+        # fixed point at iteration 2. One small semi-join probe.
+        sender_receives = bool(
+            e.select(F.col("dst").alias("node"))
+            .join(e.select(F.col("src").alias("node")), "node", "left_semi")
+            .limit(1)
+            .count()
+        )
+    finally:
+        e.unpersist()
+    return PageRankGraph(e_deg, nodes, non_receivers, n_nodes, sender_receives)
+
+
 def pagerank(
-    edges: DataFrame,
+    graph: PageRankGraph,
     iterations: int = 5,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
     detect_fixed_point: bool = False,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over an edge list; returns
-    (node, rank). Dangling nodes (no out-edges) keep receiving rank
-    but distribute nothing; the per-iteration teleport term keeps the
-    total finite without a driver-side normalization pass.
+    """Fixed-iteration PageRank over a graph prepared by
+    ``pagerank_graph``; returns (node, rank). Only the rank loop runs
+    here: the degree-annotated edges, the node sets, |V| and the
+    depth-1 flag are read from ``graph``. Dangling nodes (no
+    out-edges) keep receiving rank but distribute nothing; the
+    per-iteration teleport term keeps the total finite without a
+    driver-side normalization pass.
+
+    On a depth-1 graph (``graph.sender_receives`` False) the loop
+    stops after 2 iterations: further iterations are the identity, so
+    the result is bit-identical to running all ``iterations``.
 
     ``detect_fixed_point=True`` adds a per-iteration bit-exact
     convergence probe: when ranks_i == ranks_{i-1} for every node
@@ -57,58 +141,19 @@ def pagerank(
     (~0.5 s at sf0.1, see PERF.md) that only pays off when the loop is
     long enough, or the graph converged enough, to skip iterations.
     Default off: the catalog's fixed-iteration oracle runs the exact
-    advertised count; the structural depth-1 early stop below is free
-    and stays always-on."""
-    # the raw edge relation is scanned by nodes, e_deg AND non_receivers
-    # — cache it or the upstream plan (often a join+distinct) runs 3×
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).cache()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .cache()
-    )
-    # |V| as an in-plan broadcast scalar: a 1-row aggregate cross-joined
-    # (broadcast) wherever 1/n or the teleport term is needed. No
-    # .count() on the driver => no extra blocking job, and the constant
-    # stays inside Catalyst's reach.
-    nsc = nodes.agg(F.count("*").alias("n_nodes"))
-    out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # the edge relation with out-degree attached is loop-invariant:
-    # compute once, cache, reuse each iteration
-    e_deg = e.join(out_deg, "src").cache()
-    # Nodes with no inbound edge never receive contributions — their
-    # rank is the constant teleport term every iteration. That set is
-    # loop-invariant, so computing it once replaces the per-iteration
-    # nodes-left-join (one whole shuffle join removed from the loop:
-    # contribs' node set is exactly the distinct-dst set, so
-    # contribs ∪ non_receivers covers every node exactly once).
+    advertised count; the structural depth-1 early stop is free and
+    stays always-on."""
+    e_deg, nodes, non_receivers, nsc, sender_receives = graph
+    # The build dropped null endpoints, so this filter keeps every
+    # edge. The optimizer infers it for every iteration's edges but
+    # the last (their dst feeds the next join key); stating it makes
+    # all iterations broadcast the same e_deg plan, which a checkpoint
+    # query then broadcasts once instead of once per iteration.
+    e_deg = e_deg.where(F.col("dst").isNotNull())
     teleport = F.lit(1.0 - damping) / F.col("n_nodes")
-    non_receivers = (
-        nodes.join(
-            e.select(F.col("dst").alias("node")).distinct(),
-            "node",
-            "left_anti",
-        )
-        .crossJoin(F.broadcast(nsc))
+    fixed = (
+        non_receivers.crossJoin(F.broadcast(nsc))
         .select("node", teleport.alias("rank"))
-        .cache()
-    )
-
-    # Fixed-point early stop: if NO node both sends and receives (the
-    # graph is pure-sources -> pure-sinks, e.g. any bipartite
-    # interaction graph), rank flow has depth 1 — every sender's rank
-    # is the constant teleport term from iteration 1 onward, so the
-    # whole vector reaches its EXACT fixed point at iteration 2 and
-    # further iterations are the identity. Detecting this costs one
-    # small semi-join probe; on deep/cyclic graphs it's a no-op tax and
-    # the full iteration count runs. Results are bit-identical to the
-    # un-shortened loop (same operands in every surviving iteration).
-    sender_receives = (
-        e.select(F.col("dst").alias("node"))
-        .join(e.select(F.col("src").alias("node")), "node", "left_semi")
-        .limit(1)
-        .count()
     )
     effective_iters = iterations if sender_receives else min(iterations, 2)
 
@@ -143,7 +188,7 @@ def pagerank(
                     "rank"
                 ),
             )
-            .unionByName(non_receivers)
+            .unionByName(fixed)
         )
         # Eager checkpoint every 2nd (and the last) iteration: lineage
         # stays bounded at depth 2 and each checkpoint is its own
@@ -169,12 +214,6 @@ def pagerank(
             prev = ranks
         elif i % 2 == 1 or i == effective_iters - 1:
             ranks = ranks.localCheckpoint(eager=True)
-    # loop-invariant caches are only needed during the iterations; the
-    # returned ranks are checkpointed, so free executor storage now
-    e.unpersist()
-    nodes.unpersist()
-    e_deg.unpersist()
-    non_receivers.unpersist()
     return ranks
 
 

@@ -68,19 +68,38 @@ def _exact_topk(
     )
 
 
+def _ivf_index_full(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The IVF index of the full embeddings table over the
+    ``ivf_codebook_full`` codebook: (vec_id, embedding, cell), the
+    one corpus assignment (text/vector.py::ivf_index), eagerly
+    checkpointed. A registry artifact, so ann_topk_ivf and
+    ivf_nprobe_plan probe it instead of re-running the full-corpus
+    argmin on every call (in production an IVF index persists its
+    cell assignment once per codebook)."""
+
+    def build() -> DataFrame:
+        from aproximacion_1_etl_spark.text.vector import ivf_index
+
+        emb = load_table(spark, sf_dir, "embeddings")
+        cb = _trained_codebook(spark, sf_dir)
+        return ivf_index(emb, cb).localCheckpoint(eager=True)
+
+    return artifact(spark, sf_dir, "ivf_index_full", ["embeddings"], build)
+
+
 def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10: IVF approximate top-k over a TRAINED codebook — k-means
     centroids (corpus-size-derived count, so cells stay balanced as the
-    corpus grows) baked as plan literals for map-side cell assignment,
-    nprobe cells probed. The oracle unrolls the identical training
-    recurrence, so the key stays fully value-checked."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    corpus grows) baked as plan literals, nprobe cells probed. The
+    corpus's cell assignment is the ``ivf_index_full`` artifact, so a
+    call assigns only the queries. The oracle unrolls the identical
+    training recurrence, so the key stays fully value-checked."""
     return ann_topk_ivf(
-        emb,
+        _ivf_index_full(spark, sf_dir),
         query_ids=[0, 1, 2, 3, 4],
+        centroids=_trained_codebook(spark, sf_dir),
         k=10,
         nprobe=4,
-        centroids=_trained_codebook(spark, sf_dir),
     )
 
 
@@ -293,13 +312,13 @@ def q_ivf_nprobe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     until two final one-division ratios; oracle recomputes the
     codebook in-engine (the _ivf_cent_ctes device) and mirrors every
     rounding. The exact top-10 is a prefix of the session's one
-    exact_topk_full artifact."""
+    exact_topk_full artifact, and the cells are read from the
+    ivf_index_full artifact."""
     from aproximacion_1_etl_spark.text.vector import ivf_nprobe_plan
 
-    emb = load_table(spark, sf_dir, "embeddings")
     qids = [0, 1, 2, 3, 4]
     return ivf_nprobe_plan(
-        emb,
+        _ivf_index_full(spark, sf_dir),
         query_ids=qids,
         centroids=_trained_codebook(spark, sf_dir),
         exact=_exact_topk(spark, sf_dir, qids, 10),
@@ -871,7 +890,7 @@ def q_kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     label with its count. The go/no-go stats for every IVF/SemDeDup
     consumer: ballooning cells or rising mean distance mean the
     codebook no longer fits the corpus. Assignment is the same
-    map-side codebook-literal argmin as ann_topk_ivf (no shuffle);
+    map-side codebook-literal argmin as ivf_index (no shuffle);
     the two keyed aggregations run over |corpus| and |cells x labels|
     rows. Mean distance sums in decimal so the report value-checks
     against the in-engine training recurrence oracle."""

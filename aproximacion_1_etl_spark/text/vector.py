@@ -291,67 +291,104 @@ def _first_n_codebook(
     }
 
 
-def ann_topk_ivf(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
+def ivf_index(
+    df: DataFrame,
+    centroids: dict[int, list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: dict[int, list[float]] | None = None,
 ) -> DataFrame:
-    """IVF-style approximate top-k: coarse-quantize the corpus to its
-    nearest centroid (inverted lists), probe only the ``nprobe`` cells
-    nearest each query, exact cosine within probed cells.
+    """The IVF index of ``df`` over a driver-held codebook: every row's
+    cell, the 6-dp literal-array argmin (no shuffle for the
+    assignment, no join — one distance fold per centroid per row,
+    ties to the lower cell id). The ONE definition of the corpus
+    assignment: ``ivf_assign_cells`` is its (id, cell) view, so every
+    IVF consumer and the oracle share one assignment semantic.
 
-    ``centroids`` is the codebook (pass ``train_ivf_centroids(...)``
-    output — the catalog path does, sized by ``derive_n_centroids`` so
-    cells stay balanced as the corpus grows); when omitted, the first
-    ``n_centroids`` vectors serve as a deterministic stand-in (the plan
-    shape is identical either way). The codebook is driver-side
-    (bounded, it IS the model) and baked into the plan as literals, so
-    cell assignment is pure codegen: NO shuffle, no join — each corpus
-    row computes ``n_centroids`` distances map-side and takes the
-    lexicographic argmin. At 100 TB the corpus is scanned once; only
-    probed-cell candidates reach the (broadcast) query join and the
-    top-k window.
-    """
-    emb = _as_double(embeddings, vec_col)
-    cents = centroids or _first_n_codebook(emb, n_centroids, id_col, vec_col)
-    cdots = {cid: sum(x * x for x in v) for cid, v in cents.items()}
-    # rebalance before the per-row n_centroids-distance projection
-    # (single-file inputs scan as one partition; same rule as
-    # semantic_dedup / the minhash shingle explode)
+    The codebook is baked into the plan as literals. The input is
+    spread over ``defaultParallelism`` partitions first (single-file
+    inputs scan as one partition). Returns (id_col, vec_col as
+    array<double>, cell int); a caller that probes the same corpus
+    more than once persists it (the catalog's ``ivf_index_full``
+    artifact) instead of re-running the argmin per probe."""
+    emb = _as_double(df, vec_col)
+    cdots = {cid: sum(x * x for x in v) for cid, v in centroids.items()}
     spread = emb.repartition(
         emb.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
     )
-    with_vv = spread.withColumn("_vv", F.expr(_sql_dot(vec_col, vec_col)))
     dist_structs = F.expr(
-        _dist_structs_sql(cents, cdots, vec_col, "_vv", 6)
+        _dist_structs_sql(centroids, cdots, vec_col, "_vv", 6)
     )
-    assigned = with_vv.select(
+    return spread.withColumn(
+        "_vv", F.expr(_sql_dot(vec_col, vec_col))
+    ).select(
         id_col,
         vec_col,
-        F.array_min(dist_structs).getField("cid").alias("cell"),
+        F.array_min(dist_structs).getField("cid").cast("int").alias("cell"),
     )
-    probes = (
-        with_vv.filter(F.col(id_col).isin(query_ids))
+
+
+def _ivf_probes(
+    index: DataFrame,
+    query_ids: list[int],
+    centroids: dict[int, list[float]],
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The ``nprobe`` cells nearest each query row of ``index``, in the
+    index's own 6-dp distance order (ties to the lower cell id):
+    (query_id, qvec, probe_rank 1..nprobe, cell)."""
+    cdots = {cid: sum(x * x for x in v) for cid, v in centroids.items()}
+    dist_structs = F.expr(
+        _dist_structs_sql(centroids, cdots, vec_col, "_vv", 6)
+    )
+    return (
+        index.filter(F.col(id_col).isin(query_ids))
+        .withColumn("_vv", F.expr(_sql_dot(vec_col, vec_col)))
         .select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qvec"),
-            F.explode(
+            F.posexplode(
                 F.slice(F.array_sort(dist_structs), 1, nprobe)
-            ).alias("p"),
+            ).alias("_i", "p"),
         )
-        .select("query_id", "qvec", F.col("p.cid").alias("cell"))
+        .select(
+            "query_id",
+            "qvec",
+            (F.col("_i") + 1).alias("probe_rank"),
+            F.col("p.cid").alias("cell"),
+        )
     )
+
+
+def ann_topk_ivf(
+    index: DataFrame,
+    query_ids: list[int],
+    centroids: dict[int, list[float]],
+    k: int = 10,
+    nprobe: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF-style approximate top-k: probe only the ``nprobe`` cells
+    nearest each query, exact cosine within probed cells.
+
+    ``index`` is the persisted cell assignment of the corpus,
+    ``ivf_index(corpus, centroids)`` over the same ``centroids`` (the
+    trained codebook: pass ``train_ivf_centroids(...)`` output, sized
+    by ``derive_n_centroids`` so cells stay balanced as the corpus
+    grows). The corpus is not assigned here: only the query rows
+    compute their distances to the codebook (plan literals), so a
+    call reads the index once, and only probed-cell candidates reach
+    the (broadcast) query join and the top-k window.
+    """
+    probes = _ivf_probes(index, query_ids, centroids, nprobe, id_col, vec_col)
     cand = (
-        assigned.join(
+        index.join(
             F.broadcast(probes),
             on=[
-                assigned["cell"] == probes["cell"],
-                assigned[id_col] != probes["query_id"],
+                index["cell"] == probes["cell"],
+                index[id_col] != probes["query_id"],
             ],
         )
         .select("query_id", id_col, vec_col, "qvec")
@@ -479,7 +516,7 @@ def semantic_dedup(
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): coarse-
     cluster every embedding to its nearest IVF centroid map-side (same
-    literal-codebook assignment as ann_topk_ivf — no shuffle, no join),
+    literal-codebook assignment as ivf_index — no shuffle, no join),
     then WITHIN each cell drop any vector that has a lower-id neighbor
     at cosine >= ``threshold``. Returns per-cell (n_vectors, n_dropped,
     n_kept).
@@ -768,7 +805,8 @@ def train_ivf_centroids(
     vec_col: str = "embedding",
 ) -> dict[int, list[float]]:
     """Distributed Lloyd's k-means for the IVF codebook (the trained
-    replacement for ann_topk_ivf's first-N stand-in).
+    replacement for the first-N stand-in, ``_first_n_codebook``, which
+    is also its init).
 
     Each iteration is one distributed pass: assign every vector to its
     nearest centroid map-side (centroids are plan literals — no join,
@@ -848,27 +886,11 @@ def ivf_assign_cells(
     centroids: dict[int, list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    decimals: int = 6,
 ) -> DataFrame:
     """Map-side cell assignment against a driver-held codebook: the
-    same literal-array argmin every IVF consumer uses (no shuffle, no
-    join — one distance fold per centroid per row), factored out so
-    index-maintenance operators share the exact expression (and so the
-    oracle mirrors ONE assignment semantic). Returns (id_col, cell)."""
-    emb = _as_double(df, vec_col)
-    cdots = {cid: sum(x * x for x in v) for cid, v in centroids.items()}
-    spread = emb.repartition(
-        emb.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
-    dist_structs = F.expr(
-        _dist_structs_sql(centroids, cdots, vec_col, "_vv", decimals)
-    )
-    return spread.withColumn(
-        "_vv", F.expr(_sql_dot(vec_col, vec_col))
-    ).select(
-        F.col(id_col),
-        F.array_min(dist_structs).getField("cid").cast("int").alias("cell"),
-    )
+    (id_col, cell) view of ``ivf_index``, for the index-maintenance
+    operators that need only the cells."""
+    return ivf_index(df, centroids, id_col, vec_col).select(id_col, "cell")
 
 
 def ivf_index_append(
@@ -1051,11 +1073,11 @@ def ivf_recall_cost(
     corpus: DataFrame,
     query_ids: list[int],
     centroids: dict[int, list[float]],
+    exact: DataFrame,
     k: int = 10,
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact: DataFrame | None = None,
 ) -> DataFrame:
     """ONE-ROW measured (hits, scanned_rows, n_total) of a codebook on
     a corpus — the recall-vs-cost observables every IVF sizing /
@@ -1063,51 +1085,31 @@ def ivf_recall_cost(
     ivf_nprobe_plan factored into a reusable single measurement):
     hits = |exact top-k ∩ nprobe-probed IVF top-k| over the probe
     query set, scanned_rows = the probed cells' total population
-    (the fraction-of-corpus price those probes pay). ``exact`` lets
-    the caller share one brute-force ground truth across codebooks
-    (it is codebook-independent). Exact integers; callers derive the
-    two ratio forms."""
-    emb = _as_double(corpus, vec_col)
-    cdots = {cid: sum(x * x for x in v) for cid, v in centroids.items()}
-    spread = emb.repartition(
-        emb.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
-    with_vv = spread.withColumn("_vv", F.expr(_sql_dot(vec_col, vec_col)))
-    dist_structs = F.expr(
-        _dist_structs_sql(centroids, cdots, vec_col, "_vv", 6)
-    )
-    assigned = with_vv.select(
-        id_col,
-        F.array_min(dist_structs).getField("cid").alias("cell"),
-    )
-    pop = assigned.groupBy("cell").agg(
+    (the fraction-of-corpus price those probes pay). The corpus is
+    assigned once (``ivf_index``); the cell populations and the IVF
+    search both read that assignment. ``exact`` is the (query_id,
+    <id_col>) exact top-k of ``query_ids`` over ``corpus``
+    (``ann_topk_bruteforce`` at the same k), materialized by the
+    caller: it is codebook-independent, so one truth serves every
+    codebook. Exact integers; callers derive the two ratio forms."""
+    index = ivf_index(corpus, centroids, id_col, vec_col)
+    pop = index.groupBy("cell").agg(
         F.count("*").cast("bigint").alias("pop")
     )
     tot = pop.agg(F.sum("pop").cast("bigint").alias("n_total"))
-    probes = (
-        with_vv.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.explode(
-                F.slice(F.array_sort(dist_structs), 1, nprobe)
-            ).alias("p")
-        )
-        .select(F.col("p.cid").alias("cell"))
-    )
+    probes = _ivf_probes(
+        index, query_ids, centroids, nprobe, id_col, vec_col
+    ).select("cell")
     scanned = (
         probes.join(pop, "cell")
         .agg(F.sum("pop").cast("bigint").alias("scanned_rows"))
     )
-    if exact is None:
-        exact = ann_topk_bruteforce(
-            corpus, query_ids=query_ids, k=k, id_col=id_col,
-            vec_col=vec_col,
-        ).select("query_id", id_col)
     approx = ann_topk_ivf(
-        corpus,
+        index,
         query_ids=query_ids,
+        centroids=centroids,
         k=k,
         nprobe=nprobe,
-        centroids=centroids,
         id_col=id_col,
         vec_col=vec_col,
     ).select("query_id", id_col)
@@ -1434,10 +1436,11 @@ def ivf_retrain_report(
 
     Every comparison is a product of exact integers, so the report
     value-checks bit-for-bit against the DuckDB oracle; the two
-    one-division ratios round 6 dp. Scale shape: two map-side
-    assignment scans (store, batch — the literal-codebook argmin, no
-    shuffle), a |cells|-sized merge, one brute probe pass bounded by
-    |Q| broadcast queries, and 1-row aggregates cross-joined into the
+    one-division ratios round 6 dp. Scale shape: map-side assignment
+    scans (store, batch, and the IVF index of store ∪ batch that the
+    recall probe searches — the literal-codebook argmin, no shuffle),
+    a |cells|-sized merge, one brute probe pass bounded by |Q|
+    broadcast queries, and 1-row aggregates cross-joined into the
     fixed 4-row report (eager-cut to 1 row so the report rows share
     ONE evaluation of the evidence subtrees instead of four).
     ``baseline_counts``: the maintained (cell, n_baseline) stats
@@ -1447,8 +1450,8 @@ def ivf_retrain_report(
     ``exact``: the (query_id, <id_col>) brute-force ground truth over
     store ∪ batch when the caller already materialized it (it is
     codebook-independent, so the plan/execute pair shares one); when
-    omitted it is derived here with one brute pass — the ivf_recall_
-    cost contract."""
+    omitted it is derived here with one brute pass (the drift
+    trigger's wave 1, whose corpus no other key shares)."""
     n_cells = len(centroids)
     nq = len(query_ids)
     if baseline_counts is not None:
@@ -1476,11 +1479,11 @@ def ivf_retrain_report(
             vec_col=vec_col,
         ).select("query_id", id_col)
     approx = ann_topk_ivf(
-        corpus,
+        ivf_index(corpus, centroids, id_col, vec_col),
         query_ids=query_ids,
+        centroids=centroids,
         k=k,
         nprobe=nprobe,
-        centroids=centroids,
         id_col=id_col,
         vec_col=vec_col,
     ).select("query_id", id_col)
@@ -2144,7 +2147,7 @@ def pca_top_component(
 
 
 def ivf_nprobe_plan(
-    embeddings: DataFrame,
+    index: DataFrame,
     query_ids: list[int],
     centroids: dict[int, list[float]],
     exact: DataFrame,
@@ -2166,62 +2169,33 @@ def ivf_nprobe_plan(
 
     Everything is exact integers until two final divisions (hits/(|Q|·k)
     and scanned/(|Q|·N) — one double division each, engine-identical):
-    cell assignment is the 6-dp argmin over the literal codebook (the
-    ann_topk_ivf device — map-side, no shuffle), the probe order per
-    query is the same rounded distance sort, the brute-force truth is
-    the existing exact top-k, and the whole ladder is one 1-row
-    aggregate of conditional sums (one per ladder point) over each of
-    the (|Q|·k)- and (|Q|·nprobe_max)-sized checkpointed relations.
+    the cells are the index's 6-dp argmin over the literal codebook,
+    the probe order per query is the same rounded distance sort, the
+    brute-force truth is the existing exact top-k, and the whole
+    ladder is one 1-row aggregate of conditional sums (one per ladder
+    point) over each of the (|Q|·k)- and (|Q|·nprobe_max)-sized
+    checkpointed relations.
 
-    ``exact``: the (query_id, <id_col>) exact top-k of ``query_ids``
-    (``ann_topk_bruteforce`` at the same k), materialized by the
-    caller; it is codebook-independent, so a session shares one."""
+    ``index``: the persisted cell assignment of the corpus,
+    ``ivf_index(corpus, centroids)`` over the same ``centroids``; the
+    corpus is not assigned here. ``exact``: the (query_id, <id_col>)
+    exact top-k of ``query_ids`` (``ann_topk_bruteforce`` at the same
+    k), materialized by the caller; it is codebook-independent, so a
+    session shares one."""
     from aproximacion_1_etl_spark.functions.concurrency import overlap
 
-    emb = _as_double(embeddings, vec_col)
-    cdots = {cid: sum(x * x for x in v) for cid, v in centroids.items()}
     nq = len(query_ids)
-    pmax = max(ladder)
-    spread = emb.repartition(
-        emb.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+    probes = (
+        _ivf_probes(index, query_ids, centroids, max(ladder), id_col, vec_col)
+        .select("query_id", "probe_rank", "cell")
+        .localCheckpoint(eager=True)
     )
-    with_vv = spread.withColumn("_vv", F.expr(_sql_dot(vec_col, vec_col)))
-    dist_structs = F.expr(
-        _dist_structs_sql(centroids, cdots, vec_col, "_vv", 6)
-    )
-    # the two independent driver-blocking materializations (the
-    # corpus argmin assignment, the per-query probe order) overlap
-    # through the driver pool (guide §2.6) instead of running
-    # serially; everything downstream — pop, tot, capture, the ladder
-    # aggregates — is a cheap derivation of these checkpointed
-    # relations evaluated lazily in the final action. The assignment
-    # itself is checkpointed ONCE where the serial form evaluated the
-    # full-corpus argmin twice (the pop checkpoint and the capture
-    # checkpoint each re-ran it).
-    assigned, probes = overlap(
-        lambda: with_vv.select(
-            id_col,
-            F.array_min(dist_structs).getField("cid").alias("cell"),
-        ).localCheckpoint(eager=True),
-        lambda: with_vv.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.posexplode(
-                F.slice(F.array_sort(dist_structs), 1, pmax)
-            ).alias("_i", "p"),
-        )
-        .select(
-            "query_id",
-            (F.col("_i") + 1).alias("probe_rank"),
-            F.col("p.cid").alias("cell"),
-        )
-        .localCheckpoint(eager=True),
-    )
+    assigned = index.select(id_col, "cell")
     truth = exact.select("query_id", id_col)
-    # second overlapped wave: the two remaining corpus-touching
-    # reductions (each one pass over the persisted assignment) — their
-    # tiny outputs are checkpointed so the ladder aggregates never
-    # rescan anything corpus-sized
+    # the two corpus-touching reductions (each one pass over the
+    # persisted assignment) overlap through the driver pool (guide
+    # §2.6); their tiny outputs are checkpointed so the ladder
+    # aggregates never rescan anything corpus-sized
     pop, capture = overlap(
         lambda: assigned.groupBy("cell")
         .agg(F.count("*").cast("bigint").alias("pop"))

@@ -22,6 +22,28 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def warm_call(spark, sf_dir):
+    """Call a catalog key twice; return (first rows, second rows, the
+    Spark jobs the second call submitted). The jobs are counted under
+    a fresh job group, which the overlap pool's threads inherit."""
+    from aproximacion_1_etl_spark.queries import ALL_QUERIES
+
+    def call(key):
+        rows = ALL_QUERIES[key](spark, sf_dir).collect()
+        sc = spark.sparkContext
+        group = f"{key}-warm"
+        sc.setJobGroup(group, group)
+        try:
+            again = ALL_QUERIES[key](spark, sf_dir).collect()
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return rows, again, jobs
+
+    return call
+
+
 def _owner_state(root: str) -> str:
     """'alive' | 'dead' | 'unknown' for the session that created
     ``root``.

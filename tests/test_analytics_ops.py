@@ -207,19 +207,11 @@ def test_logreg_descends_loss_and_matches_numpy_direction(spark, sf_dir):
     assert np.allclose(wv, np.array(w), atol=1e-8)
 
 
-def test_logreg_label_model_reuses_the_registry_model(spark, sf_dir):
+def test_logreg_label_model_reuses_the_registry_model(warm_call):
     """The key evaluates the registry's logreg model: once it is
     fitted, a call runs only its scoring aggregate, not the 12-round
     GD fit again (29 jobs when it refitted)."""
-    rows = ALL_QUERIES["logreg_label_model"](spark, sf_dir).collect()
-    sc = spark.sparkContext
-    group = "logreg-label-model-warm"
-    sc.setJobGroup(group, group)
-    try:
-        again = ALL_QUERIES["logreg_label_model"](spark, sf_dir).collect()
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows, again, jobs = warm_call("logreg_label_model")
     assert again == rows
     assert len(jobs) <= 3
 

@@ -112,11 +112,15 @@ def _call_sites(func: str) -> set[str]:
 
 
 def test_models_and_exact_truths_are_built_only_in_the_registry():
-    """A model or exact ground truth that more than one key needs is
-    an artifact(): the GD trainer runs only in the logreg_weights
-    builder, and the brute-force top-k only in the two exact-truth
-    builders and in the operator's own key."""
+    """A model, exact ground truth or loop-invariant structure that a
+    key reuses across calls is an artifact(): the GD trainer runs only
+    in the logreg_weights builder, the brute-force top-k only in the
+    two exact-truth builders and in the operator's own key, the
+    PageRank graph only in the supplier_graph builder, and the
+    full-corpus IVF index only in the ivf_index_full builder."""
     assert _call_sites("logistic_regression_gd") == {"logreg_weights"}
+    assert _call_sites("pagerank_graph") == {"supplier_graph"}
+    assert _call_sites("ivf_index") == {"ivf_index_full"}
     assert _call_sites("ann_topk_bruteforce") == {
         "exact_topk_full",
         "retrain_exact_topk",

@@ -426,10 +426,13 @@ def test_r7_session_plan_contracts(spark, sf_dir):
         # r9: chunk rebuild (one doc_id window chain) + chunk-level
         # bm25 over the checkpointed chunk relation
         "chunk_retrieval_spans": 14,
-        # map-side codebook assignment + the whole ladder as one
-        # conditional-sum aggregate over each of two checkpointed
-        # micro-relations, then one explode
+        # the whole ladder as one conditional-sum aggregate over each
+        # of two checkpointed micro-relations, then one explode; the
+        # cells come from the checkpointed ivf_index_full artifact
         "ivf_nprobe_plan": 6,
+        # the rank loop's output is checkpointed, so the visible plan
+        # is the filter + top-20 over it
+        "pagerank_suppliers": 0,
         # r10: the cluster fold's visible plan is the contracted-root
         # relabel + append over checkpointed store/label relations —
         # the min-label loop lives behind its per-round cuts

@@ -1911,6 +1911,7 @@ def test_ann_topk_ivf_queries_consistent_with_corpus_query_form(
     from aproximacion_1_etl_spark.text.vector import (
         ann_topk_ivf,
         ann_topk_ivf_queries,
+        ivf_index,
     )
     import pyspark.sql.functions as F
 
@@ -1920,7 +1921,8 @@ def test_ann_topk_ivf_queries_consistent_with_corpus_query_form(
     a = {
         (r.query_id, r.vec_id): r.cos_sim
         for r in ann_topk_ivf(
-            emb, query_ids=qids, k=12, nprobe=4, centroids=cents
+            ivf_index(emb, cents), query_ids=qids, centroids=cents, k=12,
+            nprobe=4,
         ).collect()
     }
     queries = emb.filter(F.col("vec_id").isin(qids)).select(

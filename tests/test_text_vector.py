@@ -3,6 +3,7 @@ search, text analysis, multimodal plumbing — semantic properties on
 micro-fixtures (exact expectations), plus shape checks on testdata."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from aproximacion_1_etl_spark.text.analysis import lang_id, token_count
 from aproximacion_1_etl_spark.text.dedup import (
@@ -437,12 +438,15 @@ def test_ivf_recall_cost_exact_observables(spark):
          (3, [11.0, 0.2])],
         "vec_id BIGINT, embedding ARRAY<DOUBLE>",
     )
+    exact = ann_topk_bruteforce(corpus, query_ids=[0], k=2).select(
+        "query_id", "vec_id"
+    )
     narrow = ivf_recall_cost(
-        corpus, [0], cents, k=2, nprobe=1
+        corpus, [0], cents, exact, k=2, nprobe=1
     ).collect()[0]
     assert (narrow.hits, narrow.scanned_rows, narrow.n_total) == (0, 2, 4)
     wide = ivf_recall_cost(
-        corpus, [0], cents, k=2, nprobe=2
+        corpus, [0], cents, exact, k=2, nprobe=2
     ).collect()[0]
     assert (wide.hits, wide.scanned_rows, wide.n_total) == (2, 4, 4)
 
@@ -1016,6 +1020,18 @@ def test_exact_topk_is_a_prefix_of_one_artifact_build(
         assert got.columns == want.columns
         assert got.orderBy(order).collect() == want.orderBy(order).collect()
     assert len(builds) == 1
+
+
+@pytest.mark.parametrize(
+    "key, max_jobs", [("ann_topk_ivf", 5), ("ivf_nprobe_plan", 15)]
+)
+def test_ivf_keys_probe_the_registry_index(warm_call, key, max_jobs):
+    """Both keys read the ivf_index_full artifact: once the corpus is
+    assigned, a call assigns only its queries (6 and 18 jobs when each
+    call re-ran the full-corpus argmin)."""
+    rows, again, jobs = warm_call(key)
+    assert sorted(again) == sorted(rows)
+    assert len(jobs) <= max_jobs
 
 
 def test_bpe_train_merges_learns_greedy_merges(spark):
