@@ -34,47 +34,6 @@ def _ts_str(col) -> F.Column:
     return F.date_format(col, _fmt)
 
 
-def _reclaimed(df: DataFrame, *paths: str) -> DataFrame:
-    """Materialize a bounded result locally and reclaim the temp dirs
-    its plan reads from. Roundtrip and streaming keys write to mkdtemp
-    and would otherwise return a LAZY frame that still scans the dir,
-    pinning it forever (one leaked dir per invocation). Every caller's
-    result is small by construction (|days|-, |statuses|-,
-    |collision-pair|-bounded aggregates — never a fact relation), so
-    collecting it onto the driver is safe; the rebuilt local relation
-    has no file dependency.
-
-    ``paths``: the roundtrip keys' own mkdtemp dirs, removed in
-    ``finally`` even when the collect itself fails. Streaming keys pass
-    none: they call this inside ``streaming/harness.py::scratch_dir``,
-    which removes their one root when the block exits."""
-    import shutil
-
-    try:
-        return df.sparkSession.createDataFrame(df.collect(), df.schema)
-    finally:
-        for p in paths:
-            shutil.rmtree(p, ignore_errors=True)
-
-
-def _reclaimed_dist(df: DataFrame, *paths: str) -> DataFrame:
-    """``_reclaimed`` for FACT-SIZED results: ``localCheckpoint(eager)``
-    materializes the partitions in the executors' block manager —
-    distributed, never on the driver — which cuts the plan's lineage to
-    the temp dirs so they can be reclaimed immediately. Keys whose
-    result is a maintained view / full relation (streaming_ivm_join,
-    cdf_join_maintenance) must use THIS one: collect()-and-rebuild
-    would pull the whole relation through the driver (an OOM at scale
-    and a double serialization at any size)."""
-    import shutil
-
-    try:
-        return df.localCheckpoint(eager=True)
-    finally:
-        for p in paths:
-            shutil.rmtree(p, ignore_errors=True)
-
-
 # The artifact registry: the one memo for trained models and simulated
 # persisted stores. _ARTIFACTS holds one (stamp, value) slot per
 # (name, sf_dir); BUILD_SECS is the build ledger, artifact name -> wall
@@ -661,7 +620,7 @@ def _run_streaming_max_concurrency(
             )
             .orderBy("event_type")
         )
-        return _reclaimed(final)
+        return final.localCheckpoint(eager=True)
 
 
 def _logreg_feats(spark: SparkSession, sf_dir: str):
@@ -1342,8 +1301,6 @@ __all__ = [
     "_fround",
     "_dsum",
     "_ts_str",
-    "_reclaimed",
-    "_reclaimed_dist",
     "BUILD_SECS",
     "artifact",
     "_embedding_corpus",

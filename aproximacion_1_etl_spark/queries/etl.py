@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -38,6 +37,7 @@ from aproximacion_1_etl_spark.sources.json_ingest import (
 )
 from aproximacion_1_etl_spark.sources.rest import fetch_distributed, task_grid
 from aproximacion_1_etl_spark.sources.tables import load_table
+from aproximacion_1_etl_spark.streaming.harness import scratch_dir
 from .common import *  # noqa: F401,F403
 
 
@@ -315,20 +315,20 @@ def q_s3_s6_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("o_totalprice", 2).alias("totalprice"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("ingest_date"),
     )
-    path = tempfile.mkdtemp(prefix="graft_json_")
-    day_df.write.mode("overwrite").partitionBy("ingest_date").json(path)
-    back = read_day_files(
-        spark,
-        path,
-        schema_ddl="o_orderkey BIGINT, o_orderstatus STRING, totalprice DOUBLE",
-        multiline=False,
-    )
-    clean, _corrupt = split_corrupt(back)
-    out = clean.groupBy("ingest_date").agg(
-        F.count("*").alias("n_orders"),
-        _dsum(F.col("totalprice")).alias("day_total"),
-    )
-    return _reclaimed(out, path)
+    with scratch_dir("graft_json_") as path:
+        day_df.write.mode("overwrite").partitionBy("ingest_date").json(path)
+        back = read_day_files(
+            spark,
+            path,
+            schema_ddl="o_orderkey BIGINT, o_orderstatus STRING, totalprice DOUBLE",
+            multiline=False,
+        )
+        clean, _corrupt = split_corrupt(back)
+        out = clean.groupBy("ingest_date").agg(
+            F.count("*").alias("n_orders"),
+            _dsum(F.col("totalprice")).alias("day_total"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 def q_s9_enrichment_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,8 +393,6 @@ def q_s4_metadata_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERMISSIVE read with corrupt-record capture, per-day metadata
     sidecar {ingest_date, total_ordenes, fallos} written + read back —
     the reference's extraction-metadata contract (app.py:166-171)."""
-    import os
-
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= "2001-06-01"
     )
@@ -409,38 +407,38 @@ def q_s4_metadata_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    path = tempfile.mkdtemp(prefix="graft_sidecar_")
-    # repartition by the partition column first: one file per day-dir
-    # instead of (tasks x days) tiny files — the 100 TB-safe layout.
-    o.select(
-        line.alias("value"),
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("ingest_date"),
-    ).repartition("ingest_date").write.mode("overwrite").partitionBy(
-        "ingest_date"
-    ).text(path)
-    back = (
-        spark.read.schema(
-            "o_orderkey BIGINT, o_orderstatus STRING, totalprice DOUBLE, "
-            "_corrupt_record STRING"
+    with scratch_dir("graft_sidecar_") as path:
+        # repartition by the partition column first: one file per day-dir
+        # instead of (tasks x days) tiny files — the 100 TB-safe layout.
+        o.select(
+            line.alias("value"),
+            F.date_format("o_orderdate", "yyyy-MM-dd").alias("ingest_date"),
+        ).repartition("ingest_date").write.mode("overwrite").partitionBy(
+            "ingest_date"
+        ).text(path)
+        back = (
+            spark.read.schema(
+                "o_orderkey BIGINT, o_orderstatus STRING, totalprice DOUBLE, "
+                "_corrupt_record STRING"
+            )
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt_record")
+            .json(path)
         )
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-    # Corrupt lines parse to all-NULL data columns; counting off a data
-    # column (o_orderkey, never null in valid rows) instead of
-    # _corrupt_record avoids Spark's corrupt-record-only-query
-    # restriction without caching the parse.
-    meta = back.groupBy("ingest_date").agg(
-        F.count("o_orderkey").alias("total_ordenes"),
-        F.count(F.when(F.col("o_orderkey").isNull(), 1)).alias("fallos"),
-    )
-    meta_path = os.path.join(path, "_metadata_out")
-    meta.coalesce(1).write.mode("overwrite").json(meta_path)
-    out = spark.read.schema(
-        "ingest_date STRING, total_ordenes BIGINT, fallos BIGINT"
-    ).json(meta_path)
-    return _reclaimed(out, path)
+        # Corrupt lines parse to all-NULL data columns; counting off a data
+        # column (o_orderkey, never null in valid rows) instead of
+        # _corrupt_record avoids Spark's corrupt-record-only-query
+        # restriction without caching the parse.
+        meta = back.groupBy("ingest_date").agg(
+            F.count("o_orderkey").alias("total_ordenes"),
+            F.count(F.when(F.col("o_orderkey").isNull(), 1)).alias("fallos"),
+        )
+        meta_path = os.path.join(path, "_metadata_out")
+        meta.coalesce(1).write.mode("overwrite").json(meta_path)
+        out = spark.read.schema(
+            "ingest_date STRING, total_ordenes BIGINT, fallos BIGINT"
+        ).json(meta_path)
+        return out.localCheckpoint(eager=True)
 
 
 def q_s3_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,18 +447,18 @@ def q_s3_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     selected year's directories — verified in tests via the plan's
     partition filters)."""
     o = load_table(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="graft_part_")
-    o.withColumn("order_year", F.year("o_orderdate")).repartition(
-        "order_year"
-    ).write.mode("overwrite").partitionBy("order_year").parquet(path)
-    back = spark.read.parquet(path).filter(F.col("order_year") == 1997)
-    out = back.groupBy(
-        F.month("o_orderdate").cast("bigint").alias("order_month")
-    ).agg(
-        F.count("*").alias("n_orders"),
-        _dsum(F.col("o_totalprice")).alias("month_total"),
-    )
-    return _reclaimed(out, path)
+    with scratch_dir("graft_part_") as path:
+        o.withColumn("order_year", F.year("o_orderdate")).repartition(
+            "order_year"
+        ).write.mode("overwrite").partitionBy("order_year").parquet(path)
+        back = spark.read.parquet(path).filter(F.col("order_year") == 1997)
+        out = back.groupBy(
+            F.month("o_orderdate").cast("bigint").alias("order_month")
+        ).agg(
+            F.count("*").alias("n_orders"),
+            _dsum(F.col("o_totalprice")).alias("month_total"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -468,43 +466,43 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write, permissive typed read back (the engine's delimited-file
     surface; reference only had JSON, §2.1)."""
     o = load_table(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="graft_csv_")
-    o.select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.round("o_totalprice", 2).alias("totalprice"),
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-    ).repartition(4).write.mode("overwrite").option("header", True).csv(path)
-    back = (
-        spark.read.schema(
-            "o_orderkey BIGINT, o_orderstatus STRING, "
-            "totalprice DOUBLE, orderdate STRING"
+    with scratch_dir("graft_csv_") as path:
+        o.select(
+            "o_orderkey",
+            "o_orderstatus",
+            F.round("o_totalprice", 2).alias("totalprice"),
+            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
+        ).repartition(4).write.mode("overwrite").option("header", True).csv(path)
+        back = (
+            spark.read.schema(
+                "o_orderkey BIGINT, o_orderstatus STRING, "
+                "totalprice DOUBLE, orderdate STRING"
+            )
+            .option("header", True)
+            .csv(path)
         )
-        .option("header", True)
-        .csv(path)
-    )
-    out = back.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n"),
-        _dsum(F.col("totalprice")).alias("total"),
-        F.min("orderdate").alias("first_date"),
-    )
-    return _reclaimed(out, path)
+        out = back.groupBy("o_orderstatus").agg(
+            F.count("*").alias("n"),
+            _dsum(F.col("totalprice")).alias("total"),
+            F.min("orderdate").alias("first_date"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink: the second columnar at-rest format (built into
     Spark; same pushdown/pruning machinery as parquet)."""
     li = load_table(spark, sf_dir, "lineitem")
-    path = tempfile.mkdtemp(prefix="graft_orc_")
-    li.select("l_orderkey", "l_quantity", "l_returnflag").write.mode(
-        "overwrite"
-    ).orc(path)
-    back = spark.read.orc(path).filter(F.col("l_returnflag") == "R")
-    out = back.groupBy("l_returnflag").agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("l_quantity"), 2).alias("qty"),
-    )
-    return _reclaimed(out, path)
+    with scratch_dir("graft_orc_") as path:
+        li.select("l_orderkey", "l_quantity", "l_returnflag").write.mode(
+            "overwrite"
+        ).orc(path)
+        back = spark.read.orc(path).filter(F.col("l_returnflag") == "R")
+        out = back.groupBy("l_returnflag").agg(
+            F.count("*").alias("n"),
+            F.round(F.sum("l_quantity"), 2).alias("qty"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 def q_m2_merge_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -593,11 +591,11 @@ def q_binary_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 200
     )
-    out_dir = tempfile.mkdtemp(prefix="binsrc_")
-    write_doc_files(docs, out_dir)
-    return _reclaimed(
-        binary_ingest_manifest(read_binary_files(spark, out_dir)), out_dir
-    )
+    with scratch_dir("binsrc_") as out_dir:
+        write_doc_files(docs, out_dir)
+        return binary_ingest_manifest(
+            read_binary_files(spark, out_dir)
+        ).localCheckpoint(eager=True)
 
 
 def q_rest_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -629,31 +627,31 @@ def q_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     Money travels as integer cents inside the line so both engines
     format/parse bit-identically (no float printf divergence)."""
     ev = load_table(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="graft_log_")
-    lines = ev.select(
-        F.format_string(
-            "evt=%d ts=%s user=%d type=%s cents=%d",
-            F.col("event_id"),
-            _ts_str("ts"),
-            F.col("user_id"),
-            F.col("event_type"),
-            F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long"),
-        ).alias("value")
-    )
-    lines.repartition(4).write.mode("overwrite").text(path)
-    raw = spark.read.text(path)
-    pat = r"evt=(\d+) ts=(.+) user=(\d+) type=(\w+) cents=(-?\d+)"
-    parsed = raw.select(
-        F.regexp_extract("value", pat, 1).cast("bigint").alias("event_id"),
-        F.regexp_extract("value", pat, 4).alias("event_type"),
-        F.regexp_extract("value", pat, 5).cast("bigint").alias("cents"),
-    )
-    out = parsed.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum("cents").alias("total_cents"),
-        F.min("event_id").alias("first_event"),
-    )
-    return _reclaimed(out, path)
+    with scratch_dir("graft_log_") as path:
+        lines = ev.select(
+            F.format_string(
+                "evt=%d ts=%s user=%d type=%s cents=%d",
+                F.col("event_id"),
+                _ts_str("ts"),
+                F.col("user_id"),
+                F.col("event_type"),
+                F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long"),
+            ).alias("value")
+        )
+        lines.repartition(4).write.mode("overwrite").text(path)
+        raw = spark.read.text(path)
+        pat = r"evt=(\d+) ts=(.+) user=(\d+) type=(\w+) cents=(-?\d+)"
+        parsed = raw.select(
+            F.regexp_extract("value", pat, 1).cast("bigint").alias("event_id"),
+            F.regexp_extract("value", pat, 4).alias("event_type"),
+            F.regexp_extract("value", pat, 5).cast("bigint").alias("cents"),
+        )
+        out = parsed.groupBy("event_type").agg(
+            F.count("*").alias("n"),
+            F.sum("cents").alias("total_cents"),
+            F.min("event_id").alias("first_event"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,28 +788,28 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     delimited/markup ingest matrix the reference's JSON-only extractor
     lacked."""
     o = load_table(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="graft_xml_")
-    o.select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    ).repartition(4).write.mode("overwrite").format("xml").option(
-        "rootTag", "orders"
-    ).option("rowTag", "order").save(path)
-    back = (
-        spark.read.format("xml")
-        .option("rowTag", "order")
-        .schema("o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT")
-        .load(path)
-    )
-    out = back.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n"),
-        F.sum("cents").alias("total_cents"),
-        F.min("o_orderkey").alias("first_key"),
-    )
-    return _reclaimed(out, path)
+    with scratch_dir("graft_xml_") as path:
+        o.select(
+            "o_orderkey",
+            "o_orderstatus",
+            F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        ).repartition(4).write.mode("overwrite").format("xml").option(
+            "rootTag", "orders"
+        ).option("rowTag", "order").save(path)
+        back = (
+            spark.read.format("xml")
+            .option("rowTag", "order")
+            .schema("o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT")
+            .load(path)
+        )
+        out = back.groupBy("o_orderstatus").agg(
+            F.count("*").alias("n"),
+            F.sum("cents").alias("total_cents"),
+            F.min("o_orderkey").alias("first_key"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 def q_date_dim_gen(spark: SparkSession, sf_dir: str) -> DataFrame:

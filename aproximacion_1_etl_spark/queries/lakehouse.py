@@ -4,12 +4,12 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from aproximacion_1_etl_spark.functions.concurrency import overlap
 from aproximacion_1_etl_spark.sources.tables import load_table
+from aproximacion_1_etl_spark.streaming.harness import scratch_dir
 from .common import *  # noqa: F401,F403
 
 
@@ -80,20 +80,20 @@ def q_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from aproximacion_1_etl_spark.sources.layout import zorder_write
 
-    path = tempfile.mkdtemp(prefix="graft_zord_")
-    zorder_write(li, path, ["l_orderkey", "l_partkey"], n_files=16)
-    back = spark.read.parquet(path).filter(
-        (F.col("l_orderkey") <= 3000) & (F.col("l_partkey") <= 500)
-    )
-    out = back.select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_partkey",
-        _fround(F.col("l_quantity").cast("double"), 2).alias(
-            "l_quantity"
-        ),
-    )
-    return _reclaimed(out, path)
+    with scratch_dir("graft_zord_") as path:
+        zorder_write(li, path, ["l_orderkey", "l_partkey"], n_files=16)
+        back = spark.read.parquet(path).filter(
+            (F.col("l_orderkey") <= 3000) & (F.col("l_partkey") <= 500)
+        )
+        out = back.select(
+            "l_orderkey",
+            "l_linenumber",
+            "l_partkey",
+            _fround(F.col("l_quantity").cast("double"), 2).alias(
+                "l_quantity"
+            ),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 # --------------------------------------------- round-2 scale operators
@@ -320,8 +320,6 @@ def q_cdf_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving a consumer needs no producer-side CDC instrumentation:
     the version-pair diff IS the feed (the Delta CDF surface,
     derived)."""
-    import shutil
-
     from aproximacion_1_etl_spark.operators.refine import (
         maintain_join_view,
     )
@@ -350,9 +348,8 @@ def q_cdf_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(inserts.drop("op"))
     )
 
-    base = tempfile.mkdtemp(prefix="graft_cdf_")
-    path = os.path.join(base, "facts")
-    try:
+    with scratch_dir("graft_cdf_") as base:
+        path = os.path.join(base, "facts")
         v0 = write_snapshot(old_facts, path)
         v1 = write_snapshot(final_facts, path)
         feed = snapshot_change_feed(
@@ -384,10 +381,7 @@ def q_cdf_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "c_acctbal"
             ),
         )
-        return _reclaimed_dist(out, base)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 def q_ivm_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -586,26 +580,26 @@ def q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     day's file; here one year's partition is replaced, all others
     untouched — no read-modify-write of the whole table)."""
     o = load_table(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="graft_dynover_")
-    base = o.withColumn("order_year", F.year("o_orderdate"))
-    base.repartition("order_year").write.mode("overwrite").partitionBy(
-        "order_year"
-    ).parquet(path)
-    # re-land ONLY 1997, with a 10% discount applied; the per-write
-    # option scopes dynamic mode to this writer (a session-level conf
-    # would silently change every later partitioned overwrite)
-    patch = base.filter(F.col("order_year") == 1997).withColumn(
-        "o_totalprice", F.col("o_totalprice") * 0.9
-    )
-    patch.repartition("order_year").write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("order_year").parquet(path)
-    final = spark.read.parquet(path)
-    out = final.groupBy("order_year").agg(
-        F.count("*").alias("n"),
-        _dsum(F.col("o_totalprice")).alias("total"),
-    )
-    return _reclaimed(out, path)
+    with scratch_dir("graft_dynover_") as path:
+        base = o.withColumn("order_year", F.year("o_orderdate"))
+        base.repartition("order_year").write.mode("overwrite").partitionBy(
+            "order_year"
+        ).parquet(path)
+        # re-land ONLY 1997, with a 10% discount applied; the per-write
+        # option scopes dynamic mode to this writer (a session-level conf
+        # would silently change every later partitioned overwrite)
+        patch = base.filter(F.col("order_year") == 1997).withColumn(
+            "o_totalprice", F.col("o_totalprice") * 0.9
+        )
+        patch.repartition("order_year").write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("order_year").parquet(path)
+        final = spark.read.parquet(path)
+        out = final.groupBy("order_year").agg(
+            F.count("*").alias("n"),
+            _dsum(F.col("o_totalprice")).alias("total"),
+        )
+        return out.localCheckpoint(eager=True)
 
 
 def q_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -624,22 +618,22 @@ def q_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="graft_dv_")
-    path = base + "/orders_dv"
-    write_snapshot(o, path)
-    delete_rows(spark, path, "o_orderkey", "o_orderkey % 7 = 0")
-    delete_rows(
-        spark, path, "o_orderkey", "o_orderstatus = 'F' AND o_orderkey % 5 = 0"
-    )
-    out = (
-        read_snapshot_with_dv(spark, path)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count("*").alias("n"),
-            _dsum(F.col("o_totalprice")).alias("total"),
+    with scratch_dir("graft_dv_") as base:
+        path = base + "/orders_dv"
+        write_snapshot(o, path)
+        delete_rows(spark, path, "o_orderkey", "o_orderkey % 7 = 0")
+        delete_rows(
+            spark, path, "o_orderkey", "o_orderstatus = 'F' AND o_orderkey % 5 = 0"
         )
-    )
-    return _reclaimed(out, base)
+        out = (
+            read_snapshot_with_dv(spark, path)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count("*").alias("n"),
+                _dsum(F.col("o_totalprice")).alias("total"),
+            )
+        )
+        return out.localCheckpoint(eager=True)
 
 
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -773,7 +767,6 @@ def q_forget_user_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     subj = F.col("_subject_key")
     band = _hash_prefix(subj) < "0800"  # lowest 1/32 of the hash space
 
-    base = tempfile.mkdtemp(prefix="graft_forget_")
     # The FK cascade is resolved by DENORMALIZING the subject key onto
     # lineitem before snapshotting (one orderkey join): a
     # forget-capable lake must keep every fact row resolvable to its
@@ -821,20 +814,16 @@ def q_forget_user_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         return (name, n_before, n_del, int(r["_na"]), int(r["_st"]))
 
-    try:
+    with scratch_dir("graft_forget_") as base:
         # the three tables touch disjoint snapshot dirs — overlap
         # their write/delete/count chains (driver-blocking actions);
         # results keep the manifest's table order
         rows = overlap(*[lambda e=entry: _one(e) for entry in plan])
-        return spark.createDataFrame(
-            rows,
-            "table_name string, n_before bigint, n_deleted bigint, "
-            "n_after bigint, n_subject_still_visible bigint",
-        )
-    finally:
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(
+        rows,
+        "table_name string, n_before bigint, n_deleted bigint, "
+        "n_after bigint, n_subject_still_visible bigint",
+    )
 
 
 def _audit_row(
@@ -1257,8 +1246,6 @@ def q_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     read cost is base-scan + broadcast, independent of delta count.
     The oracle replays the same precedence as CASE/WHERE over the raw
     table."""
-    import shutil
-
     from aproximacion_1_etl_spark.sources.versioned import (
         read_merged,
         write_delta,
@@ -1268,9 +1255,8 @@ def q_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal"
     )
-    base = tempfile.mkdtemp(prefix="graft_mor_")
-    path = os.path.join(base, "customer")
-    try:
+    with scratch_dir("graft_mor_") as base:
+        path = os.path.join(base, "customer")
         write_snapshot(c, path)
         w1, w2 = _customer_cdc_waves(c)
         write_delta(w1, path, op_col="op")
@@ -1281,10 +1267,7 @@ def q_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_nationkey",
             _fround(F.col("c_acctbal"), 2).alias("c_acctbal"),
         )
-        return _reclaimed_dist(out, base)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 def q_gated_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1299,8 +1282,6 @@ def q_gated_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed-version outcome. The reference's loop
     (`app.py:142-147`) diffs runs only AFTER bad data is live; the
     gate moves the check before the commit point."""
-    import shutil
-
     from aproximacion_1_etl_spark.sources.versioned import (
         current_version,
         write_snapshot_gated,
@@ -1314,9 +1295,8 @@ def q_gated_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "key_present": "o_orderkey IS NOT NULL",
         "no_synthetic_keys": "o_orderkey % 50 != 0",
     }
-    base = tempfile.mkdtemp(prefix="graft_gate_")
-    path = os.path.join(base, "orders")
-    try:
+    with scratch_dir("graft_gate_") as base:
+        path = os.path.join(base, "orders")
         v_bad, viol_bad = write_snapshot_gated(o, path, rules)
         cleaned = o.filter(F.col("o_orderkey") % 50 != 0)
         v_ok, viol_ok = write_snapshot_gated(cleaned, path, rules)
@@ -1337,9 +1317,6 @@ def q_gated_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             "published BOOLEAN, version_after INT",
         )
         return out
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
 
 
 def q_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1351,17 +1328,14 @@ def q_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the evolved column, distinct segments) a migration review
     needs. One scan per version, no shuffle in the union; the
     audit aggregate is |versions x segments|-sized."""
-    import shutil
-
     from aproximacion_1_etl_spark.sources.versioned import (
         read_history,
         write_snapshot,
     )
 
     c = load_table(spark, sf_dir, "customer")
-    base = tempfile.mkdtemp(prefix="graft_evo_")
-    path = os.path.join(base, "customer")
-    try:
+    with scratch_dir("graft_evo_") as base:
+        path = os.path.join(base, "customer")
         write_snapshot(
             c.select("c_custkey", "c_name", "c_acctbal"), path
         )
@@ -1390,11 +1364,7 @@ def q_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_segments",
             )
         )
-        # bounded: |versions| rows — safe to materialize for reclaim
-        return _reclaimed(out, base)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 def q_snapshot_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1407,8 +1377,6 @@ def q_snapshot_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention a deployment stores _v at write time; deriving it costs
     one scan per version, which is exactly what the docstring of
     read_history prescribes bounding via time travel."""
-    import shutil
-
     from aproximacion_1_etl_spark.sources.versioned import (
         read_history,
         write_snapshot,
@@ -1417,9 +1385,8 @@ def q_snapshot_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    base = tempfile.mkdtemp(prefix="graft_blame_")
-    path = os.path.join(base, "orders")
-    try:
+    with scratch_dir("graft_blame_") as base:
+        path = os.path.join(base, "orders")
         write_snapshot(o.filter(F.col("o_orderdate") < "1997-01-01"), path)
         write_snapshot(o.filter(F.col("o_orderdate") < "1999-01-01"), path)
         write_snapshot(o, path)
@@ -1446,10 +1413,7 @@ def q_snapshot_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value_introduced",
             )
         )
-        return _reclaimed(out, base)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 def q_cdf_to_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1463,8 +1427,6 @@ def q_cdf_to_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables that only ever kept snapshots. The oracle replays the
     version lattice as CASE arithmetic and the same change-point
     windows."""
-    import shutil
-
     from aproximacion_1_etl_spark.sources.versioned import (
         history_to_scd2,
         read_history,
@@ -1475,9 +1437,8 @@ def q_cdf_to_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
     k = F.col("o_orderkey")
-    base = tempfile.mkdtemp(prefix="graft_scd2v_")
-    path = os.path.join(base, "orders")
-    try:
+    with scratch_dir("graft_scd2v_") as base:
+        path = os.path.join(base, "orders")
         write_snapshot(
             o.filter(F.col("o_orderdate") < "1997-01-01").drop(
                 "o_orderdate"
@@ -1516,10 +1477,7 @@ def q_cdf_to_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             _fround(F.col("o_totalprice"), 2).alias("o_totalprice"),
             "is_current",
         )
-        return _reclaimed_dist(out, base)
-    finally:
-        if os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 def q_fd_profile(spark: SparkSession, sf_dir: str) -> DataFrame:

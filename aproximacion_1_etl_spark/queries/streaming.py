@@ -148,7 +148,7 @@ def q_streaming_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(val_store).distinct(),
             cols,
         )
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,7 +226,7 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = _histogram_quantile_report(
             _cum_hist(merged), ev, lo, width, total
         )
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -533,7 +533,7 @@ def q_streaming_incremental_dedup(
                 "doc_new BIGINT, doc_old BIGINT, matching_bands BIGINT, "
                 "est_jaccard DOUBLE",
             )
-        return _reclaimed(spark.read.parquet(result))
+        return spark.read.parquet(result).localCheckpoint(eager=True)
 
 
 def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -627,7 +627,7 @@ def q_streaming_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "c_acctbal"
             ),
         )
-        return _reclaimed_dist(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -715,7 +715,7 @@ def q_rest_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("bigint").alias("sum_amount_cents"),
             )
         )
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,7 +753,7 @@ def q_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("bigint").alias("sum_value_cents"),
             )
         )
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,7 +818,7 @@ def q_streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             new_counts,
             n_cells,
         )
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_fingerprint_maintenance(
@@ -884,7 +884,7 @@ def q_streaming_fingerprint_maintenance(
                 F.substring("pfx", 2, 2).alias("prefix"), "digest", "n_rows"
             )
         )
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_cusum_monitor(
@@ -1055,7 +1055,7 @@ def q_streaming_cusum_monitor(
             _fround(F.col("best_drift"), 4).alias("max_drift"),
             _fround(F.col("mu"), 4).alias("mean_daily"),
         )
-        return _reclaimed(sel)
+        return sel.localCheckpoint(eager=True)
 
 
 def q_streaming_max_concurrency(
@@ -1190,7 +1190,7 @@ def q_streaming_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("n_registry_still_visible"),
             )
         )
-        return _reclaimed(sel)
+        return sel.localCheckpoint(eager=True)
 
 
 def q_streaming_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1243,7 +1243,7 @@ def q_streaming_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_nationkey",
             _fround(F.col("c_acctbal"), 2).alias("c_acctbal"),
         )
-        return _reclaimed_dist(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1302,7 +1302,7 @@ def q_streaming_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", F.to_date("ts").alias("day"), "user_id"
         )
         out = _hll_trailing_report(daily, evd)
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_cms_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1404,7 +1404,7 @@ def q_streaming_cms_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("est_ok"),
             )
         )
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1460,7 +1460,7 @@ def q_streaming_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             base,
         )
         out = _changepoint_render(read_snapshot(spark, state_log))
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_ewma_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1510,7 +1510,7 @@ def q_streaming_ewma_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             base,
         )
         out = _ewma_chart(read_snapshot(spark, state_log))
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1588,7 +1588,7 @@ def q_streaming_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_new BIGINT, doc_old BIGINT, matching_bands BIGINT, "
                 "est_jaccard DOUBLE",
             )
-        return _reclaimed(spark.read.parquet(result))
+        return spark.read.parquet(result).localCheckpoint(eager=True)
 
 
 def q_streaming_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1664,7 +1664,7 @@ def q_streaming_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             base,
         )
         out = _graph_stats_top20(spark.read.parquet(stats_store))
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1762,7 +1762,7 @@ def q_streaming_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster_id",
             (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
         )
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1873,7 +1873,7 @@ def q_streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             qdf,
             k=10,
         )
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_lm_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1952,9 +1952,7 @@ def q_streaming_lm_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         last = _committed_batch_ids(base)[-1]
         counts = spark.read.parquet(os.path.join(base, f"counts_b{last}"))
         out = lm_score_from_counts(_doc_tri_counts(docs), counts)
-        # per-doc scores are corpus-sized: distributed reclaim, never
-        # a driver collect
-        return _reclaimed_dist(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_weighted_sample(
@@ -2037,7 +2035,7 @@ def q_streaming_weighted_sample(
             F.expr("floor(sample_score * 1000000.0 + 0.5) / 1000000.0")
             .alias("score"),
         )
-        return _reclaimed(out)
+        return out.localCheckpoint(eager=True)
 
 
 def q_streaming_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2171,8 +2169,7 @@ def q_streaming_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(_sql_dot("embedding", "embedding")), 6
             ).alias("vv"),
         )
-        # per-chunk digest is corpus-sized: distributed reclaim
-        return _reclaimed_dist(out)
+        return out.localCheckpoint(eager=True)
 
 
 __all__ = [

@@ -1,9 +1,15 @@
 """The AvailableNow harness: the one scaffold every streaming catalog
-key runs through.
+key runs through, and the one temp dir every key that writes files
+uses.
 
 A key makes one ``scratch_dir`` for its stores; the stream checkpoint
 lives under it too (``<root>/_ckpt``), and the whole tree goes when the
-``with`` block exits, on success and on raise. Inside it:
+``with`` block exits, on success and on raise. The batch round-trip
+keys (write files, read them back) use the same dir. A result read
+from the dir is materialized with ``localCheckpoint(eager=True)``
+before the block exits, which cuts its lineage to the files.
+
+Inside the dir:
 
 - ``wave_stream`` replays a list of DataFrames as a file stream, one
   micro-batch per DataFrame;
@@ -51,10 +57,10 @@ from pyspark.sql.streaming import DataStreamWriter
 
 @contextlib.contextmanager
 def scratch_dir(prefix: str) -> Iterator[str]:
-    """One ``mkdtemp`` root for a key's stores and stream checkpoint,
-    removed on exit whether the body returns or raises. A result read
-    from it must be materialized (``_reclaimed``) before the block
-    exits."""
+    """One ``mkdtemp`` root for a key's files, stores and stream
+    checkpoint, removed on exit whether the body returns or raises. A
+    result read from it must be materialized with
+    ``localCheckpoint(eager=True)`` before the block exits."""
     root = tempfile.mkdtemp(prefix=prefix)
     try:
         yield root

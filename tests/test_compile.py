@@ -26,20 +26,28 @@ STREAM_SCAFFOLD = (
     "os.utime(",
     'format("memory")',
     "trigger(availableNow=True)",
+    "mkdtemp(",
 )
 
 
 def test_stream_scaffold_lives_only_in_the_harness():
-    """Wave replays, memory-sink drains and AvailableNow runs go
-    through streaming/harness.py; a key that hand-rolls them again
-    fails here."""
+    """Wave replays, memory-sink drains, AvailableNow runs and temp
+    dirs go through streaming/harness.py; a key that hand-rolls them
+    again fails here. A result read from a temp dir is cut with
+    ``localCheckpoint(eager=True)``, so no second lineage-cut helper
+    comes back either."""
     harness = HARNESS.read_text(encoding="utf-8")
     for token in STREAM_SCAFFOLD:
         assert token in harness
     for path in sorted(PKG.rglob("*.py")):
+        text = path.read_text(encoding="utf-8")
+        for helper in ("_reclaimed", "_reclaimed_dist"):
+            assert f"def {helper}(" not in text, (
+                f"{path.relative_to(PKG)} defines {helper}: "
+                "call localCheckpoint(eager=True) directly"
+            )
         if path == HARNESS:
             continue
-        text = path.read_text(encoding="utf-8")
         for token in STREAM_SCAFFOLD:
             assert token not in text, (
                 f"{path.relative_to(PKG)} uses {token}: "

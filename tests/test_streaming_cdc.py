@@ -487,15 +487,36 @@ def test_wave_stream_replays_each_wave_as_one_batch_in_order(spark):
             "aproximacion_1_etl_spark.functions.profile",
             "row_bucket_hashes",
         ),
+        (
+            "s3_s6_json_roundtrip",
+            "aproximacion_1_etl_spark.queries.etl",
+            "read_day_files",
+        ),
+        (
+            "zorder_pruned_scan",
+            "aproximacion_1_etl_spark.sources.layout",
+            "zorder_write",
+        ),
+        (
+            "binary_file_source",
+            "aproximacion_1_etl_spark.sources.binary",
+            "read_binary_files",
+        ),
+        (
+            "deletion_vector_read",
+            "aproximacion_1_etl_spark.sources.versioned",
+            "delete_rows",
+        ),
     ],
 )
 def test_streaming_key_reclaims_temp_dirs_when_a_batch_fails(
     spark, sf_dir, tmp_path, monkeypatch, key, module, name
 ):
-    """A micro-batch that raises must propagate its error and leave no
-    scratch directory behind. Each key imports the patched function
-    inside its body, so the module-attribute patch reaches its
-    foreachBatch handler."""
+    """A micro-batch, or a batch round-trip step after the write, that
+    raises must propagate its error and leave no scratch directory
+    behind. Each key looks the patched function up when it runs (an
+    import inside its body, or a module global), so the
+    module-attribute patch reaches it."""
     import importlib
 
     from aproximacion_1_etl_spark.queries import ALL_QUERIES
