@@ -1,11 +1,11 @@
-"""Harness-tool tests (no Spark): the probe-normalized perf gate, the
-pinned probe baseline, and the crash-robust test-temp-root sweep.
-These lock the round-8 adjudication machinery ON — the failure mode
-they guard is silent inertness (a missing baseline file makes every
-normalization a no-op without any error)."""
+"""Harness-tool tests: bench.py's key lists, its BENCH_DETAIL.json
+record and its --child mode, the streaming twins' per-wave fold
+timings, the batch-versioned store commits, and the crash-robust
+test-temp-root sweep."""
 
 import json
 import os
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -13,117 +13,88 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_probe_baseline_is_pinned_and_matches_probe_keys():
-    """tools/probe_baseline.json must exist and carry exactly the keys
-    bench.py probes — otherwise the drift normalization ships inert
-    (bench guards on file existence and perf_gate silently falls back
-    to ratio 1.0)."""
+def test_bench_headline_keys_are_catalog_keys():
+    """Every key bench.py times is a catalog key, and none is timed
+    twice: a renamed key otherwise fails only when a full bench run
+    reaches its segment."""
+    import bench
+    from aproximacion_1_etl_spark.queries import ALL_QUERIES
+
+    assert [k for k in bench.HEADLINE if k not in ALL_QUERIES] == []
+    assert [k for k in bench.STREAM_TWINS if k not in ALL_QUERIES] == []
+    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
+
+
+def test_bench_detail_sums_key_mins_and_keeps_fastest_build():
+    """The BENCH_DETAIL.json record: value is the sum of the per-key
+    mins, each build line item is its fastest segment's, and no
+    drift-correction field is written."""
     import bench
 
-    path = os.path.join(REPO, "tools", "probe_baseline.json")
-    assert os.path.exists(path), "probe baseline not pinned"
-    base = json.load(open(path))["probe_secs"]
-    assert set(base) == set(bench.PROBES)
-    assert all(v > 0 for v in base.values())
-
-
-def test_perf_gate_ratio_and_ref_unwrapping(tmp_path, monkeypatch):
-    """_probe_ratio computes the median of per-segment medians against
-    the baseline file, and _load_ref unwraps the driver's BENCH_r{N}
-    wrapper ({'parsed': ...} / {'tail': '<json>'}) down to a dict with
-    'queries'."""
-    from tools import perf_gate
-
-    base = {"probe_secs": {"a": 1.0, "b": 2.0}}
-    bpath = tmp_path / "probe_baseline.json"
-    bpath.write_text(json.dumps(base))
-    monkeypatch.setattr(perf_gate, "BASELINE", str(bpath))
-
-    cur = {
-        "segment_probes": [
-            {"a": 1.1, "b": 2.2},   # median ratio 1.1
-            {"a": 1.3, "b": 2.6},   # median ratio 1.3
-            {},                     # empty segment dropped
-            {"zz": 9.9},            # no baseline overlap -> dropped
-        ]
+    results = [
+        {
+            "timings": {"a": 1.25, "b": 0.5},
+            "spread_pct": {"a": 3.0, "b": 10.0},
+            "train_secs": {"m_build_sec": 4.0, "n_build_sec": 2.0},
+        },
+        {
+            "timings": {"c": 2.0},
+            "spread_pct": {"c": 1.5},
+            "train_secs": {"m_build_sec": 3.0},
+        },
+    ]
+    folds = {
+        "streaming_x": {
+            "total_sec": 1.0,
+            "fold_secs": [0.5, 0.25],
+            "steady_fold_secs": [0.25],
+        }
     }
-    assert abs(perf_gate._probe_ratio(cur) - 1.2) < 1e-12
+    d = bench.bench_detail(results, folds)
+    assert d["metric"] == "headline_queries_total_wall"
+    assert d["queries"] == {"a": 1.25, "b": 0.5, "c": 2.0}
+    assert d["value"] == sum(d["queries"].values()) == 3.75
+    assert d["spread_pct"] == {"a": 3.0, "b": 10.0, "c": 1.5}
+    assert d["m_build_sec"] == 3.0
+    assert d["n_build_sec"] == 2.0
+    assert (d["n_queries"], d["segments"]) == (3, 2)
+    assert d["stream_folds"] == folds
+    assert [
+        k for k in d
+        if k.startswith("probe")
+        or "perf_gate" in k
+        or "sampled_isolated" in k
+    ] == []
+    json.dumps(d)
+    assert bench.bench_detail(results, None)["stream_folds"] is None
 
-    # no baseline file -> stored value, then 1.0
-    monkeypatch.setattr(perf_gate, "BASELINE", str(tmp_path / "nope.json"))
-    assert perf_gate._probe_ratio({"probe_ratio_median": 1.5}) == 1.5
-    assert perf_gate._probe_ratio({}) == 1.0
 
-    # driver-wrapper unwrapping: parsed dict wins, tail string parses
-    wrapped = tmp_path / "BENCH_rX.json"
-    wrapped.write_text(json.dumps({"parsed": {"queries": {"k": 1.0}}}))
-    monkeypatch.setattr(perf_gate, "REPO", str(tmp_path))
-    assert perf_gate._load_ref("BENCH_rX.json")["queries"] == {"k": 1.0}
-    wrapped.write_text(
-        json.dumps({"parsed": None, "tail": '{"queries": {"k": 2.0}}'})
+def test_bench_child_times_only_the_given_keys(sf_dir, tmp_path):
+    """`bench.py --child OUT key...` times exactly the keys it is
+    given in one fresh JVM and writes their mins, steady spreads and
+    the build ledger to OUT."""
+    out = tmp_path / "child.json"
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=sf_dir,
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_BENCH_RUNS="1",
     )
-    assert perf_gate._load_ref("BENCH_rX.json")["queries"] == {"k": 2.0}
-
-
-def test_perf_gate_compare_flags_and_skips_new_keys(tmp_path, monkeypatch):
-    """compare() flags only probe-normalized regressions above the
-    threshold, skips keys absent from the reference, and returns the
-    JSON-able block bench.py embeds."""
-    from tools import perf_gate
-
-    base = {"probe_secs": {"p": 1.0}}
-    bpath = tmp_path / "probe_baseline.json"
-    bpath.write_text(json.dumps(base))
-    monkeypatch.setattr(perf_gate, "BASELINE", str(bpath))
-
-    cur = {
-        "queries": {"stable": 2.0, "slow": 3.0, "brand_new": 9.0},
-        "segment_probes": [{"p": 2.0}],  # host ran 2x slow
-    }
-    res = perf_gate.compare(cur, {"stable": 1.0, "slow": 1.0}, 1.3)
-    # normalized: stable 2.0/2 = 1.0x ok; slow 3.0/2 = 1.5x flagged
-    assert res["probe_ratio"] == 2.0
-    assert res["compared"] == 2
-    assert list(res["flagged"]) == ["slow"]
-    assert res["flagged"]["slow"]["rel"] == 1.5
-    json.dumps(res["flagged"])  # embeddable
-
-
-def test_perf_gate_block_embeds_without_adjudication(tmp_path, monkeypatch):
-    """bench._perf_gate_block embeds ref/threshold/flags; with
-    SPARK_GRAFT_PERF_ADJUDICATE=0 it must NOT spawn a child run, and a
-    missing reference is recorded as an error, never raised."""
-    import bench
-
-    ref = {"queries": {"k": 1.0}}
-    rpath = tmp_path / "ref.json"
-    rpath.write_text(json.dumps(ref))
-    monkeypatch.setenv("SPARK_GRAFT_PERF_REF", str(rpath))
-    monkeypatch.setenv("SPARK_GRAFT_PERF_ADJUDICATE", "0")
-    detail = {"queries": {"k": 5.0}, "segment_probes": []}
-    block = bench._perf_gate_block(detail)
-    assert block["compared"] == 1 and "k" in block["flagged"]
-    assert "verdict" not in block["flagged"]["k"]  # no child ran
-
-    monkeypatch.setenv("SPARK_GRAFT_PERF_REF", str(tmp_path / "gone.json"))
-    block = bench._perf_gate_block(detail)
-    assert "error" in block and "flagged" not in block
-
-
-def test_perf_gate_baseline_drift_eval():
-    """_eval_baseline_drift returns one row per pinned probe with a
-    stale flag: >10% drift EITHER way is stale, within band holds,
-    missing probe key (renamed) is stale."""
-    from tools.perf_gate import _eval_baseline_drift
-
-    base = {"a": 1.0, "b": 1.0, "c": 1.0}
-    fresh = {"a": 1.05, "b": 1.3, "c": 0.8}
-    rows = _eval_baseline_drift(base, fresh, 0.10)
-    assert [r[0] for r in rows] == ["a", "b", "c"]  # every key reported
-    assert [r[0] for r in rows if r[4]] == ["b", "c"]
-    assert not any(r[4] for r in _eval_baseline_drift(base, fresh, 0.50))
-    missing = _eval_baseline_drift({"a": 1.0, "z": 1.0}, {"a": 1.0}, 0.10)
-    assert missing[1] == ("z", 1.0, None, None, True)
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py"), "--child",
+         str(out), "pricing_summary", "dedup_exact"],
+        cwd=tmp_path,
+        env=env,
+        stdout=subprocess.DEVNULL,
+        stderr=subprocess.PIPE,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:].decode("utf-8", "replace")
+    result = json.loads(out.read_text())
+    assert set(result) == {"timings", "spread_pct", "train_secs"}
+    assert set(result["timings"]) == {"pricing_summary", "dedup_exact"}
+    assert all(t > 0 for t in result["timings"].values())
+    assert set(result["spread_pct"]) == set(result["timings"])
 
 
 def test_temp_root_sweep_reclaims_dead_owner_and_spares_live(tmp_path, monkeypatch):
@@ -177,123 +148,6 @@ def test_temp_root_sweep_reclaims_dead_owner_and_spares_live(tmp_path, monkeypat
     os.utime(legacy, (ancient, ancient))
     conftest._sweep_stale_roots()
     assert not legacy.exists()
-
-
-def test_perf_gate_adjudicate_verdict_rule():
-    """Round-10 self-confirming verdicts: 'regression' needs EVERY
-    isolated re-measure above threshold AND the best one outside the
-    committed history band — one noisy child reading (the r9 pattern:
-    bpe_merge_pairs convicted off one 1.037 s outlier against a
-    0.43-0.50 s four-artifact band) can no longer convict alone."""
-    from tools.perf_gate import adjudicate
-
-    ref, thr = 1.0, 1.3
-    # no measurement at all
-    assert adjudicate([], ref, thr, []) == "unadjudicated"
-    # any re-measure under threshold -> noise, whatever the band says
-    assert adjudicate([1.2], ref, thr, []) == "position_noise"
-    assert adjudicate([2.0, 1.1], ref, thr, []) == "position_noise"
-    # the exact r9 false-positive shape: in-suite flag, first child
-    # noisy-high, but history band covers the best re-measure
-    assert (
-        adjudicate([2.07, 1.45], ref, thr, [0.9, 1.4])
-        == "within_history_band"
-    )
-    # band tolerance: 10% above the band max still counts as in-band
-    assert (
-        adjudicate([1.54, 1.54], ref, thr, [1.0, 1.4])
-        == "within_history_band"
-    )
-    assert adjudicate([1.6, 1.6], ref, thr, [1.0, 1.4]) == "regression"
-    # both children agree and no history covers it: a real finding
-    assert adjudicate([2.0, 1.9], ref, thr, []) == "regression"
-    assert adjudicate([2.0, 1.9], ref, thr, [0.9, 1.1]) == "regression"
-
-
-def test_bench_load_retry_rules():
-    """VERDICT r10 task 5: a segment retries when its ENTRY loadavg
-    exceeds the threshold — but only segment 0 (later segments' 1-min
-    readings carry our own saturation tail and would retry every
-    clean run) — and the accepted attempt is whichever started on the
-    quieter host, ties to the retry."""
-    import bench
-
-    assert bench._should_retry_segment({"loadavg_start": 5.0}, 4.0, 0)
-    assert not bench._should_retry_segment({"loadavg_start": 5.0}, 4.0, 1)
-    assert not bench._should_retry_segment({"loadavg_start": 3.9}, 4.0, 0)
-    assert not bench._should_retry_segment({}, 4.0, 0)
-    first = {"loadavg_start": 5.0, "timings": {"a": 2.0}}
-    quieter = {"loadavg_start": 1.0, "timings": {"a": 1.0}}
-    worse = {"loadavg_start": 9.0}
-    tie = {"loadavg_start": 5.0}
-    assert bench._pick_segment_run(first, quieter) is quieter
-    assert bench._pick_segment_run(first, worse) is first
-    assert bench._pick_segment_run(first, tie) is tie
-
-
-def test_bench_detail_artifact_normalized_headline():
-    """r12 task 6 pinned on the COMMITTED artifact: the detail file's
-    headline is the probe-normalized total (raw_value next to it,
-    equal to the sum of the raw per-key timings), the metric name
-    says so, and the retry decisions are recorded per segment.
-    Skips when the artifact is absent (fresh clone) or predates the
-    normalized-headline format (a mid-iteration artifact regenerated
-    by an older bench.py) — the invariants pin the FORMAT of what
-    bench.py writes, not the presence of a particular run (ADVICE
-    r12 #4: pinning the committed file broke the unit suite on any
-    bench re-run not committed in lockstep)."""
-    import json
-    import os
-
-    import pytest
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH_DETAIL.json",
-    )
-    if not os.path.exists(path):
-        pytest.skip("no BENCH_DETAIL.json (fresh clone / pre-bench)")
-    with open(path) as fh:
-        d = json.load(fh)
-    if d.get("metric") != "headline_queries_total_wall_normalized":
-        pytest.skip("BENCH_DETAIL.json predates the normalized format")
-    assert d["metric"] == "headline_queries_total_wall_normalized"
-    assert abs(d["raw_value"] - sum(d["queries"].values())) < 0.01
-    if d.get("probe_ratio_median"):
-        assert abs(
-            d["value"] - d["raw_value"] / d["probe_ratio_median"]
-        ) < 0.01
-        assert d["normalized_value"] == d["value"]
-    else:
-        assert d["value"] == d["raw_value"]
-    assert len(d["segment_retries"]) == d["segments"]
-
-
-def test_bench_probe_retry_rules():
-    """r12 task 6: ANY segment retries when its own head-of-segment
-    probe ratio exceeds the documented band (mid-run drift the
-    segment-0 entry-load rule cannot see); the accepted attempt is
-    whichever measured on the less-drifted host, ties to the retry.
-    No baseline -> never retries (fresh clone)."""
-    import bench
-
-    base = {"a": 1.0, "b": 2.0, "c": 4.0}
-    hot = {"probe_secs": {"a": 2.0, "b": 4.0, "c": 8.0}}   # ratio 2.0
-    warm = {"probe_secs": {"a": 1.4, "b": 2.8, "c": 5.6}}  # ratio 1.4
-    cool = {"probe_secs": {"a": 1.0, "b": 2.1, "c": 4.0}}  # ~1.0
-    assert bench._probe_ratio_of(hot, base) == 2.0
-    assert bench._should_retry_probe(hot, base, 1.5)
-    assert not bench._should_retry_probe(warm, base, 1.5)  # persistent
-    assert not bench._should_retry_probe(cool, base, 1.5)
-    assert not bench._should_retry_probe(hot, None, 1.5)   # no baseline
-    assert not bench._should_retry_probe({}, base, 1.5)    # no probes
-    assert bench._pick_probe_run(hot, cool, base) is cool
-    assert bench._pick_probe_run(cool, hot, base) is cool
-    assert bench._pick_probe_run(hot, hot, base) is hot  # tie -> retry
-    # headline promotion (r12): the detail/stdout "value" is the
-    # normalized total — pinned by reading the committed BENCH_DETAIL
-    # after the next cert; here pin the band constant's default
-    assert bench.PROBE_RETRY_BAND >= 1.3  # above persistent drift
 
 
 def test_streaming_twin_records_per_wave_fold_times(spark, sf_dir):
@@ -359,183 +213,3 @@ def test_batch_versioned_commit_protocol(tmp_path):
     # idempotent re-mark (a replayed trigger re-commits harmlessly)
     _mark_batch_committed(base, 2)
     assert _committed_batch_ids(base) == [0, 1, 2]
-
-
-def test_perf_gate_adjudicate_band_uses_raw_seconds():
-    """ADVICE r10 #2: the history band is RAW committed in-suite
-    seconds, so the band comparison must use the RAW isolated child
-    seconds — on a fast host (probe ratio < 1) the normalized time is
-    deflated and a real regression could hide inside the band."""
-    from tools.perf_gate import adjudicate
-
-    ref, thr = 1.0, 1.3
-    # fast host: probe ratio 0.8 -> norm 1.6 = raw 2.0. Band max 1.4
-    # (*1.10 tol = 1.54): the normalized time would sneak in-band,
-    # the raw time correctly does not.
-    assert (
-        adjudicate([1.6], ref, thr, [0.9, 1.4], iso_raws=[2.0])
-        == "regression"
-    )
-    # slow host: raw 1.5 is in-band even though norm ([1.45]) alone
-    # would also be — raw decides either way
-    assert (
-        adjudicate([1.45], ref, thr, [0.9, 1.4], iso_raws=[1.5])
-        == "within_history_band"
-    )
-    # no raws supplied (legacy caller) -> pre-fix behavior preserved
-    assert (
-        adjudicate([1.45], ref, thr, [0.9, 1.4])
-        == "within_history_band"
-    )
-    # threshold check stays NORMALIZED: norm under threshold is noise
-    # no matter what the raw reads
-    assert (
-        adjudicate([1.2], ref, thr, [0.9, 1.0], iso_raws=[5.0])
-        == "position_noise"
-    )
-
-
-def test_perf_gate_committed_history_reads_git_artifacts(tmp_path):
-    """committed_history reads per-key times from the last N commits
-    that touched BENCH_DETAIL.json in an arbitrary git repo — the
-    mechanical replacement for the judge's by-hand band analysis."""
-    import subprocess
-
-    from tools.perf_gate import committed_history
-
-    repo = tmp_path / "r"
-    repo.mkdir()
-
-    def git(*args):
-        subprocess.run(
-            ["git", "-C", str(repo), *args],
-            check=True, capture_output=True,
-            env={**os.environ,
-                 "GIT_AUTHOR_NAME": "t", "GIT_AUTHOR_EMAIL": "t@t",
-                 "GIT_COMMITTER_NAME": "t", "GIT_COMMITTER_EMAIL": "t@t"},
-        )
-
-    git("init", "-q")
-    for i, t in enumerate([0.5, 0.44, 0.43]):
-        (repo / "BENCH_DETAIL.json").write_text(
-            json.dumps({"queries": {"bpe": t, f"only_r{i}": 1.0}})
-        )
-        git("add", "BENCH_DETAIL.json")
-        git("commit", "-q", "-m", f"cert {i}")
-
-    hist = committed_history(["bpe", "only_r2", "absent"],
-                             n=4, repo=str(repo))
-    assert sorted(hist["bpe"]) == [0.43, 0.44, 0.5]
-    assert hist["only_r2"] == [1.0]
-    assert hist["absent"] == []
-    # n limits how far back the band reaches
-    hist2 = committed_history(["bpe"], n=1, repo=str(repo))
-    assert hist2["bpe"] == [0.43]
-    # a non-repo directory degrades to empty bands, never raises
-    assert committed_history(["bpe"], repo=str(tmp_path / "nope")) == {
-        "bpe": []
-    }
-
-
-def test_perf_gate_refcode_verdict_rule():
-    """Round-10 final adjudication layer: a surviving regression is
-    re-measured with the REF COMMIT'S CODE in the same window — if the
-    unchanged code also exceeds threshold there and the new code is
-    not materially slower side-by-side, the window is guilty
-    ('window_drift'); a key where old code stays fast, or new reads
-    >1.15x old, remains a regression."""
-    from tools.perf_gate import refcode_verdict
-
-    ref, thr = 1.0, 1.3
-    # old code equally slow in this window -> window drift
-    assert refcode_verdict([1.6, 1.55], 1.6, ref, thr) == "window_drift"
-    # old code still fast -> real regression
-    assert refcode_verdict([1.6, 1.55], 1.0, ref, thr) == "regression"
-    # old code slow but new is >1.15x old side-by-side -> regression
-    assert refcode_verdict([2.0, 1.9], 1.5, ref, thr) == "regression"
-    # could not measure old code -> keep the finding
-    assert refcode_verdict([1.6], None, ref, thr) == "regression"
-    assert refcode_verdict([], 1.6, ref, thr) == "regression"
-
-
-def test_perf_gate_pinned_bands_roundtrip(tmp_path, monkeypatch):
-    """r13 task 4: --write-bands pins NORMALIZED per-key floors from
-    the current detail artifact, refuses a loaded-host source unless
-    forced, and pinned_bands() reads them back."""
-    import json
-
-    from tools import perf_gate
-
-    detail = {
-        "queries": {"a": 2.0, "b": 1.0},
-        "loadavg_start": 0.5,
-        "n_queries": 2,
-        "sf": 0.1,
-        "probe_ratio_median": 2.0,
-        "segment_probes": [],
-    }
-    dpath = tmp_path / "BENCH_DETAIL.json"
-    bpath = tmp_path / "history_bands.json"
-    dpath.write_text(json.dumps(detail))
-    monkeypatch.setattr(perf_gate, "DETAIL", str(dpath))
-    monkeypatch.setattr(perf_gate, "BANDS", str(bpath))
-    # no probe baseline file in tmp -> _probe_ratio falls back to the
-    # stored probe_ratio_median (2.0): bands are raw/2
-    monkeypatch.setattr(perf_gate, "BASELINE", str(tmp_path / "nope"))
-    assert perf_gate.write_bands() == 0
-    assert perf_gate.pinned_bands() == {"a": 1.0, "b": 0.5}
-    # loaded host refused without --force
-    detail["loadavg_start"] = 3.2
-    dpath.write_text(json.dumps(detail))
-    assert perf_gate.write_bands() == 1
-    assert perf_gate.write_bands(force=True) == 0
-    src = json.loads(bpath.read_text())["source"]
-    assert src["forced"] is True and src["loadavg_start"] == 3.2
-
-
-def test_perf_gate_adjudicate_band_normalized_units():
-    """r13: a pinned band is normalized, so the band check compares
-    normalized child measures (raw-vs-raw remains the rule for the
-    rolling committed band)."""
-    from tools.perf_gate import adjudicate
-
-    ref, thr = 1.0, 1.3
-    # normalized measure 1.5 on a slow host (ratio 2 -> raw 3.0):
-    # with a RAW band [1.6] the raw side (3.0) is outside -> would be
-    # a regression under raw units...
-    assert (
-        adjudicate([1.5, 1.5], ref, thr, [1.6], iso_raws=[3.0, 3.0])
-        == "regression"
-    )
-    # ...but a PINNED normalized band [1.6] compares the normalized
-    # 1.5 -> inside the band
-    assert (
-        adjudicate(
-            [1.5, 1.5], ref, thr, [1.6], iso_raws=[3.0, 3.0],
-            band_normalized=True,
-        )
-        == "within_history_band"
-    )
-
-
-def test_bench_sampled_isolation_block_gating(monkeypatch):
-    """r13: the sampled-isolation audit disables on
-    SPARK_GRAFT_ISO_SAMPLE=0, records an unresolvable ref as an error
-    block, and returns None when no key overlaps the reference."""
-    import bench
-
-    monkeypatch.setenv("SPARK_GRAFT_ISO_SAMPLE", "0")
-    assert bench._sampled_isolation_block({"queries": {"a": 1.0}}) is None
-    monkeypatch.setenv("SPARK_GRAFT_ISO_SAMPLE", "5")
-    monkeypatch.setenv("SPARK_GRAFT_PERF_REF", "no_such_ref_file.json")
-    blk = bench._sampled_isolation_block({"queries": {"a": 1.0}})
-    assert "error" in blk
-    # overlapping-key selection: empty intersection -> None (no child
-    # JVMs launched)
-    import tools.perf_gate as pg
-
-    monkeypatch.setenv("SPARK_GRAFT_PERF_REF", "HEAD:BENCH_DETAIL.json")
-    monkeypatch.setattr(
-        pg, "_load_ref", lambda spec: {"queries": {"zzz": 1.0}}
-    )
-    assert bench._sampled_isolation_block({"queries": {"a": 1.0}}) is None
