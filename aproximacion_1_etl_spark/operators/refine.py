@@ -394,22 +394,6 @@ def latest_child_attrs(
     )
 
 
-def apply_update(
-    parent: DataFrame, derived: DataFrame, keys: list[str], mapping: dict[str, str]
-) -> DataFrame:
-    """M4/M6/M9 shell: left-join a derived per-key table onto the parent
-    and overwrite columns (``mapping``: parent_col -> derived_col).
-    Column replace uses coalesce(parent, derived)? No — update semantics:
-    derived wins when present (the SPs UPDATE unconditionally on match)."""
-    joined = parent.join(derived, on=keys, how="left")
-    out = joined
-    for parent_col, derived_col in mapping.items():
-        out = out.withColumn(
-            parent_col, F.coalesce(F.col(derived_col), F.col(parent_col))
-        )
-    return out.drop(*[c for c in derived.columns if c not in keys])
-
-
 def child_rollup(
     child: DataFrame, keys: list[str], aggs: dict[str, Column]
 ) -> DataFrame:

@@ -1328,8 +1328,9 @@ def _chunk_ann_hits(
     the SAME trained codebook the doc-level ANN keys use (trained
     once on the base embeddings — the production pattern: one
     representative-sample codebook indexes every derived-vector
-    collection). Map-side cell assignment on both sides; only
-    probed-cell candidates reach the broadcast query join."""
+    collection). The chunk index carries its cells (assigned once at
+    build time), so only the query side computes codebook distances;
+    only probed-cell candidates reach the broadcast query join."""
     from aproximacion_1_etl_spark.text.analysis import BM25_QUERIES
     from aproximacion_1_etl_spark.text.vector import ann_topk_ivf_queries
 
@@ -1347,7 +1348,6 @@ def _chunk_ann_hits(
         centroids=_trained_codebook(spark, sf_dir),
         k=k,
         nprobe=4,
-        cell_col="cell",
     ).withColumnRenamed("vec_id", "ckey")
 
 

@@ -97,57 +97,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def tune_for_scale(spark: SparkSession, target_partitions: int) -> None:
-    """Adjust shuffle parallelism for a known data scale.
-
-    At 100 TB with ~1000 executors you want shuffle partitions sized so
-    each holds ~128-256 MB; callers that know their input volume call
-    this before heavy stages. AQE will still coalesce small partitions.
-    """
-    spark.conf.set("spark.sql.shuffle.partitions", str(target_partitions))
-
-
-def cluster_conf(
-    total_cores: int,
-    input_tb: float,
-    target_partition_mb: int = 256,
-) -> dict[str, str]:
-    """Sizing math for a real deployment, in one place.
-
-    The two quantities that matter at 100 TB are (a) how many shuffle
-    partitions keep each one near ``target_partition_mb`` and (b) how
-    much each task reads per input split. Rules encoded:
-
-    - shuffle partitions = max(2 x cores, input / target_size), so
-      small stages still use every core twice over (slot pipelining)
-      and big stages keep partitions spill-free. AQE coalesces the
-      excess on small stages — overshooting is safe, undershooting is
-      not (a 10 GB partition OOMs an executor no matter what AQE does).
-    - input split = target_partition_mb too: scan tasks and shuffle
-      tasks want the same memory envelope.
-    - AQE advisory size = half the target: post-shuffle coalescing
-      aims smaller so joins that EXPAND (explode, fan-out) stay under
-      the envelope after growth.
-    - broadcast threshold stays modest (64 MB): at 1000 executors a
-      1 GB broadcast is a terabyte of aggregate network fan-out;
-      bigger dims belong in a shuffle join or a bucketed layout.
-
-    Example: 100 TB input, 1000 executors x 8 cores ->
-    shuffle.partitions = max(16k, 100TB/256MB = ~410k) = 410k tasks,
-    each ~256 MB — large task counts are what Spark's scheduler is FOR;
-    the failure mode to avoid is the inverse (4k partitions x 25 GB).
-    """
-    input_mb = input_tb * 1024 * 1024
-    parts = max(2 * total_cores, int(input_mb / target_partition_mb))
-    return {
-        "spark.sql.shuffle.partitions": str(parts),
-        "spark.sql.files.maxPartitionBytes": f"{target_partition_mb}m",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": (
-            f"{target_partition_mb // 2}m"
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": "64m",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-    }

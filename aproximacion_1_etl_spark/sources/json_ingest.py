@@ -78,15 +78,3 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     corrupt = df.filter(F.col(CORRUPT_COL).isNotNull())
     return clean, corrupt
-
-
-def write_day_partitioned(df: DataFrame, path: str, day_col: str = "ingest_date") -> None:
-    """JSON sink, day-partitioned (S3): the Spark analog of one-file-per-day
-    GCS layout. ``partitionBy`` gives readers partition pruning."""
-    df.write.mode("overwrite").partitionBy(day_col).json(path)
-
-
-def metadata_sidecar(df: DataFrame, day_col: str = "ingest_date") -> DataFrame:
-    """Per-day summary (S4): {day, total_ordenes} — the reference's
-    ``{fecha, total_ordenes, fallos}`` sidecar (``app.py:166-171``)."""
-    return df.groupBy(day_col).agg(F.count("*").alias("total_ordenes"))

@@ -19,7 +19,7 @@ broadcast lookup join — never a per-row HTTP call inside a query.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-from datetime import date, timedelta
+from datetime import date
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -31,15 +31,6 @@ MAX_RETRIES = 3
 # destination_structure_id values that trigger enrichment
 # (reference app.py:58).
 ENRICHMENT_STRUCTURE_IDS = (13123, 13120, 13101)
-
-
-def date_range(end: date, months_back: int = 5) -> list[date]:
-    """Day-by-day window ending yesterday, going back N months
-    (S2, reference ``app.py:142-147``). Approximates relativedelta with
-    30.44-day months — the window boundary is a policy, not a semantic."""
-    start = end - timedelta(days=int(months_back * 30.44))
-    n = (end - start).days
-    return [start + timedelta(days=i) for i in range(n)]
 
 
 def task_grid(spark: SparkSession, days: list[date], max_pages: int) -> DataFrame:

@@ -910,19 +910,6 @@ def bpe_merge_pairs(
     )
 
 
-def document_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """All metrics in one scan — the per-document profile table."""
-    t = F.col(text_col)
-    return docs.select(
-        "*",
-        token_count(t).alias("n_tokens"),
-        regex_token_count(t).alias("n_bpe_tokens"),
-        lang_id(t).alias("lang_pred"),
-        quality_score(t).alias("quality"),
-        fingerprint(t).alias("fingerprint"),
-    )
-
-
 def bpe_train_merges(
     docs: DataFrame,
     n_merges: int = 8,

@@ -1,16 +1,33 @@
 """Similarity search over embedding columns (SURVEY.md §2.10).
 
 Operates on the ``embeddings`` table (vec_id, embedding array<float>,
-label). Two paths:
+label). Every search is candidate generation followed by an exact
+re-rank:
 
-- **brute-force cosine top-k** — exact baseline: broadcast the (small)
-  query set against the corpus, dot product via higher-order functions
-  (``zip_with`` + ``aggregate``: JVM-side, no UDF, no data movement
-  beyond the broadcast), rank per query with a window.
-- **LSH-bucketed top-k** — the 100 TB path: random-hyperplane signs
-  bucket vectors; candidates = same-bucket (multi-probe across tables),
-  exact cosine only within buckets. Turns O(Q x N) into
-  O(Q x N / 2^planes x tables) at a recall cost.
+- **brute force** (``ann_topk_bruteforce``) — exact baseline: broadcast
+  the (small) query set against the corpus, dot product via
+  higher-order functions (``zip_with`` + ``aggregate``: JVM-side, no
+  UDF, no data movement beyond the broadcast). ``l2_topk_exact`` is its
+  squared-L2 sibling, the truth PQ is measured against.
+- **LSH** (``ann_topk_lsh``, ``ann_topk_lsh_multiprobe``) —
+  random-hyperplane signs bucket vectors; candidates share a (table,
+  bucket) with the query or with one of its 1-bit flips. Turns
+  O(Q x N) into O(Q x N / 2^planes x tables) at a recall cost.
+- **IVF** (``ann_topk_ivf``, ``ann_topk_ivf_queries``) — a trained
+  coarse codebook assigns every corpus row a cell (``ivf_index``);
+  only the ``nprobe`` cells nearest each query are scored.
+- **PQ** (``ann_topk_pq``) — per-subspace codebooks encode each row as
+  a few small ints; rows are scored through per-query distance
+  tables (ADC), never through their vectors.
+- **IVF-PQ** (``ann_topk_ivfpq``) — IVF probing, then ADC within the
+  probed cells.
+
+Shared primitives, each defined once: ``_topk`` (the per-query
+ranking, ties to the lower id), ``_lsh_topk`` (both LSH searches),
+``_dist_structs_sql`` (the codebook-distance expression), ``ivf_index``
+(the corpus cell assignment), ``_ivf_probes`` (the query probe order),
+``_pq_subspace_sql`` / ``_pq_code_sql`` (the PQ code) and
+``_pq_dist_tables`` / ``_adc_sql`` (the ADC distance table and sum).
 
 Determinism: hyperplane components come from md5 of (table, plane, dim)
 — no RNG, reproducible across runs and engines.
@@ -47,6 +64,61 @@ def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
     return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
 
 
+def _corpus_queries(
+    corpus: DataFrame, query_ids: list[int], id_col: str, vec_col: str
+) -> DataFrame:
+    """The (query_id, qvec) rows of a search whose queries are corpus
+    rows."""
+    return corpus.filter(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    )
+
+
+def _topk(
+    scored: DataFrame,
+    k: int,
+    id_col: str,
+    score: str,
+    descending: bool,
+    out: str | None,
+) -> DataFrame:
+    """The ONE top-k ranking of every search here: per query_id, order
+    the scored (query_id, <id_col>, <score>) relation by ``score``
+    (descending for a similarity, ascending for a distance) with ties
+    to the lower id, and keep rank <= k. ``score`` arrives already
+    rounded, so the order is engine-portable. The output carries the
+    score at 4 dp as ``out`` (``None`` drops it) and the bigint rank:
+    (query_id, <id_col>, [out], rank)."""
+    order = F.col(score).desc() if descending else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col(id_col).asc())
+    kept = [] if out is None else [_fround(F.col(score), 4).alias(out)]
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            id_col,
+            *kept,
+            F.col("rank").cast("bigint").alias("rank"),
+        )
+    )
+
+
+def _cosine_rerank(
+    cand: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The exact re-rank of the cosine searches: cosine of every
+    (query_id, qvec, <id_col>, <vec_col>) candidate, rounded to 9
+    decimals before ordering so ties are decided by id, independent of
+    float summation order. Output (query_id, <id_col>, cos_sim, rank)."""
+    scored = cand.select(
+        "query_id",
+        id_col,
+        _fround(cosine_sim(F.col("qvec"), F.col(vec_col)), 9).alias("cos_sim"),
+    )
+    return _topk(scored, k, id_col, "cos_sim", True, "cos_sim")
+
+
 def ann_topk_bruteforce(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -62,28 +134,9 @@ def ann_topk_bruteforce(
     summation order. Output (query_id, vec_id, cos_sim, rank).
     """
     emb = _as_double(embeddings, vec_col)
-    queries = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
+    queries = _corpus_queries(emb, query_ids, id_col, vec_col)
     pairs = emb.join(F.broadcast(queries), F.col(id_col) != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        id_col,
-        _fround(cosine_sim(F.col("qvec"), F.col(vec_col)), 9).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            id_col,
-            _fround(F.col("cos_sim"), 4).alias("cos_sim"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _cosine_rerank(pairs, k, id_col, vec_col)
 
 
 def _hyperplane(table: int, plane: int, dim: int) -> float:
@@ -124,6 +177,27 @@ def ann_topk_lsh(
     (union over ``tables`` hash tables). The scale path: the corpus is
     scanned once per table, bucketed map-side, and the join key
     (table, bucket) fans the work out; only candidates are scored."""
+    return _lsh_topk(
+        embeddings, query_ids, k, planes, tables, dim, id_col, vec_col, [0]
+    )
+
+
+def _lsh_topk(
+    embeddings: DataFrame,
+    query_ids: list[int],
+    k: int,
+    planes: int,
+    tables: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    flips: list[int],
+) -> DataFrame:
+    """The ONE LSH search: the corpus is bucketed once per table, each
+    query row fans out to ``bucket XOR flip`` for every flip in
+    ``flips`` (``[0]``: its own bucket only), candidates sharing a
+    (table, bucket) with any of them are deduplicated on the pair key
+    and re-ranked by exact cosine."""
     emb = _as_double(embeddings, vec_col)
     bucketed = None
     for t in range(tables):
@@ -134,11 +208,21 @@ def ann_topk_lsh(
             lsh_bucket(F.col(vec_col), t, planes, dim).alias("bucket"),
         )
         bucketed = b if bucketed is None else bucketed.unionByName(b)
-    queries = bucketed.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        "tbl",
-        "bucket",
+    queries = (
+        bucketed.filter(F.col(id_col).isin(query_ids))
+        .select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("qvec"),
+            "tbl",
+            "bucket",
+            F.explode(F.array(*[F.lit(f) for f in flips])).alias("flip"),
+        )
+        .select(
+            "query_id",
+            "qvec",
+            "tbl",
+            F.col("bucket").bitwiseXOR(F.col("flip")).alias("bucket"),
+        )
     )
     cand = (
         bucketed.join(
@@ -152,24 +236,7 @@ def ann_topk_lsh(
         .select("query_id", id_col, vec_col, "qvec")
         .dropDuplicates(["query_id", id_col])
     )
-    scored = cand.select(
-        "query_id",
-        id_col,
-        _fround(cosine_sim(F.col("qvec"), F.col(vec_col)), 9).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            id_col,
-            _fround(F.col("cos_sim"), 4).alias("cos_sim"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _cosine_rerank(cand, k, id_col, vec_col)
 
 
 def _sql_double(x: float) -> str:
@@ -177,6 +244,14 @@ def _sql_double(x: float) -> str:
     the shortest string that round-trips, and CAST(string AS DOUBLE)
     parses to the identical IEEE double (then constant-folds)."""
     return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def _sql_array(x) -> str:
+    """A (nested) list of doubles as one literal SQL array of exact
+    _sql_double entries."""
+    if isinstance(x, list):
+        return "array(" + ",".join(_sql_array(e) for e in x) + ")"
+    return _sql_double(x)
 
 
 def _sql_dot(a_sql: str, b_sql: str) -> str:
@@ -189,10 +264,9 @@ def _sql_dot(a_sql: str, b_sql: str) -> str:
 
 def _dist_structs_sql(
     cents: dict[int, list[float]],
-    cdots: dict[int, float],
     vec_sql: str,
     vv_sql: str,
-    ndp: int | None,
+    ndp: int,
 ) -> str:
     """The codebook-distance expression array((d, cid), ...) as ONE
     generated SQL string: the codebook is a single 2-D literal array
@@ -209,23 +283,17 @@ def _dist_structs_sql(
     arithmetic, and therefore every computed double, is unchanged —
     verified bit-identical). ``vv_sql`` names a per-row precomputed
     v.v column so the shared term isn't re-folded per centroid;
-    ``ndp`` rounds like _fround (None = unrounded)."""
+    ``ndp`` rounds like _fround."""
     sorted_cids = sorted(cents)
-    cents2d = "array(" + ",".join(
-        "array(" + ",".join(_sql_double(x) for x in cents[c]) + ")"
-        for c in sorted_cids
-    ) + ")"
-    cdarr = "array(" + ",".join(
-        _sql_double(cdots[c]) for c in sorted_cids
-    ) + ")"
+    cents2d = _sql_array([cents[c] for c in sorted_cids])
+    cdarr = _sql_array([sum(x * x for x in cents[c]) for c in sorted_cids])
     cidarr = "array(" + ",".join(str(int(c)) for c in sorted_cids) + ")"
     d = (
         f"({vv_sql} + element_at({cdarr}, i+1) - CAST('2.0' AS DOUBLE) * "
         f"{_sql_dot(vec_sql, f'element_at({cents2d}, i+1)')})"
     )
-    if ndp is not None:
-        f = _sql_double(float(10**ndp))
-        d = f"(floor({d} * {f} + CAST('0.5' AS DOUBLE)) / {f})"
+    f = _sql_double(float(10**ndp))
+    d = f"(floor({d} * {f} + CAST('0.5' AS DOUBLE)) / {f})"
     return (
         f"transform(sequence(0, {len(sorted_cids) - 1}), i -> "
         f"named_struct('d', {d}, 'cid', element_at({cidarr}, i+1)))"
@@ -278,19 +346,6 @@ def derive_leaf_planes(
     return p
 
 
-def _first_n_codebook(
-    emb: DataFrame, n_centroids: int, id_col: str, vec_col: str
-) -> dict[int, list[float]]:
-    """Deterministic first-N-vectors codebook stand-in (also k-means
-    init). Bounded collect: the codebook IS the model."""
-    return {
-        int(r[0]): [float(x) for x in r[1]]
-        for r in emb.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect()
-    }
-
-
 def ivf_index(
     df: DataFrame,
     centroids: dict[int, list[float]],
@@ -301,8 +356,9 @@ def ivf_index(
     cell, the 6-dp literal-array argmin (no shuffle for the
     assignment, no join — one distance fold per centroid per row,
     ties to the lower cell id). The ONE definition of the corpus
-    assignment: ``ivf_assign_cells`` is its (id, cell) view, so every
-    IVF consumer and the oracle share one assignment semantic.
+    assignment: ``ivf_assign_cells`` is its (id, cell) view, and
+    every IVF consumer (the IVF searches, IVF-PQ, semantic_dedup) and
+    the oracle share one assignment semantic.
 
     The codebook is baked into the plan as literals. The input is
     spread over ``defaultParallelism`` partitions first (single-file
@@ -311,13 +367,10 @@ def ivf_index(
     more than once persists it (the catalog's ``ivf_index_full``
     artifact) instead of re-running the argmin per probe."""
     emb = _as_double(df, vec_col)
-    cdots = {cid: sum(x * x for x in v) for cid, v in centroids.items()}
     spread = emb.repartition(
         emb.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
     )
-    dist_structs = F.expr(
-        _dist_structs_sql(centroids, cdots, vec_col, "_vv", 6)
-    )
+    dist_structs = F.expr(_dist_structs_sql(centroids, vec_col, "_vv", 6))
     return spread.withColumn(
         "_vv", F.expr(_sql_dot(vec_col, vec_col))
     ).select(
@@ -328,26 +381,21 @@ def ivf_index(
 
 
 def _ivf_probes(
-    index: DataFrame,
-    query_ids: list[int],
+    queries: DataFrame,
     centroids: dict[int, list[float]],
     nprobe: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
-    """The ``nprobe`` cells nearest each query row of ``index``, in the
-    index's own 6-dp distance order (ties to the lower cell id):
+    """The ``nprobe`` cells nearest each (query_id, qvec) row, in the
+    index's own 6-dp distance order (ties to the lower cell id) — the
+    ONE probe order of every IVF search:
     (query_id, qvec, probe_rank 1..nprobe, cell)."""
-    cdots = {cid: sum(x * x for x in v) for cid, v in centroids.items()}
-    dist_structs = F.expr(
-        _dist_structs_sql(centroids, cdots, vec_col, "_vv", 6)
-    )
+    dist_structs = F.expr(_dist_structs_sql(centroids, "qvec", "_vv", 6))
     return (
-        index.filter(F.col(id_col).isin(query_ids))
-        .withColumn("_vv", F.expr(_sql_dot(vec_col, vec_col)))
+        _as_double(queries, "qvec")
+        .withColumn("_vv", F.expr(_sql_dot("qvec", "qvec")))
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
+            "query_id",
+            "qvec",
             F.posexplode(
                 F.slice(F.array_sort(dist_structs), 1, nprobe)
             ).alias("_i", "p"),
@@ -358,6 +406,31 @@ def _ivf_probes(
             (F.col("_i") + 1).alias("probe_rank"),
             F.col("p.cid").alias("cell"),
         )
+    )
+
+
+def _probed_candidates(
+    index: DataFrame, probes: DataFrame, id_col: str, *cols: str
+) -> DataFrame:
+    """The rows of ``index`` in each corpus query's probed cells, the
+    query itself excluded: (query_id, <id_col>, *cols), one row per
+    (query, row) pair."""
+    return (
+        index.join(
+            F.broadcast(probes),
+            on=[
+                index["cell"] == probes["cell"],
+                index[id_col] != probes["query_id"],
+            ],
+        )
+        .select("query_id", id_col, *cols)
+        # Each vector lives in exactly one cell and probed cells are
+        # distinct, so no duplicate (query, vec) pair is possible
+        # TODAY — but that invariant is a property of the argmin
+        # assignment, not of this join. The explicit pair-key dedup
+        # (same guard as the LSH path) keeps the result correct under
+        # any future codebook/probing change.
+        .dropDuplicates(["query_id", id_col])
     )
 
 
@@ -382,155 +455,71 @@ def ann_topk_ivf(
     call reads the index once, and only probed-cell candidates reach
     the (broadcast) query join and the top-k window.
     """
-    probes = _ivf_probes(index, query_ids, centroids, nprobe, id_col, vec_col)
-    cand = (
-        index.join(
-            F.broadcast(probes),
-            on=[
-                index["cell"] == probes["cell"],
-                index[id_col] != probes["query_id"],
-            ],
-        )
-        .select("query_id", id_col, vec_col, "qvec")
-        # Each vector lives in exactly one cell and probed cells are
-        # distinct, so no duplicate (query, vec) pair is possible
-        # TODAY — but that invariant is a property of the argmin
-        # assignment, not of this join. The explicit pair-key dedup
-        # (same guard as the LSH path) keeps the result correct under
-        # any future codebook/probing change.
-        .dropDuplicates(["query_id", id_col])
+    probes = _ivf_probes(
+        _corpus_queries(index, query_ids, id_col, vec_col), centroids, nprobe
     )
-    scored = cand.select(
-        "query_id",
-        id_col,
-        _fround(cosine_sim(F.col("qvec"), F.col(vec_col)), 9).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            id_col,
-            _fround(F.col("cos_sim"), 4).alias("cos_sim"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    cand = _probed_candidates(index, probes, id_col, vec_col, "qvec")
+    return _cosine_rerank(cand, k, id_col, vec_col)
 
 
 def ann_topk_ivf_queries(
-    corpus: DataFrame,
+    index: DataFrame,
     queries: DataFrame,
     centroids: dict[int, list[float]],
     k: int = 10,
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cell_col: str | None = None,
 ) -> DataFrame:
     """IVF approximate top-k where the QUERY VECTORS come from a
     different relation than the indexed corpus — the shape every
     derived-vector index needs (chunk vectors indexed, document/user
     vectors querying), generalizing ``ann_topk_ivf`` (whose queries
-    are corpus rows). ``queries`` is (query_id, qvec); the codebook is
-    a trained driver-held artifact baked as plan literals, so cell
-    assignment of BOTH sides is map-side codegen — the corpus is
-    scanned once, only probed-cell candidates reach the broadcast
-    query join and the top-k window (same 100-TB shape as
-    ann_topk_ivf). ``cell_col`` names a PRE-ASSIGNED cell column on
-    the corpus (an IVF index persists its bucketing; re-deriving it
-    per query re-scans the whole collection through the argmin) —
-    when given, the corpus-side assignment is skipped entirely.
+    are corpus rows). ``queries`` is (query_id, qvec); ``index`` is
+    the corpus's persisted (id_col, vec_col, cell) assignment,
+    ``ivf_index(corpus, centroids)`` over the same trained codebook
+    (re-deriving it per query would re-scan the whole collection
+    through the argmin). Only the query side computes codebook
+    distances; only probed-cell candidates reach the broadcast query
+    join and the top-k window (same 100-TB shape as ann_topk_ivf).
     Returns (query_id, <id_col>, cos_sim 4dp, rank)."""
-    corpus = _as_double(corpus, vec_col)
-    queries = _as_double(queries, "qvec")
-    cdots = {cid: sum(x * x for x in v) for cid, v in centroids.items()}
-    if cell_col is not None:
-        assigned = corpus.select(
-            id_col, vec_col, F.col(cell_col).alias("cell")
-        )
-    else:
-        spread = corpus.repartition(
-            corpus.sparkSession.sparkContext.defaultParallelism,
-            F.col(id_col),
-        )
-        with_vv = spread.withColumn(
-            "_vv", F.expr(_sql_dot(vec_col, vec_col))
-        )
-        dist = F.expr(
-            _dist_structs_sql(centroids, cdots, vec_col, "_vv", 6)
-        )
-        assigned = with_vv.select(
-            id_col,
-            vec_col,
-            F.array_min(dist).getField("cid").alias("cell"),
-        )
-    qvv = queries.withColumn("_qv", F.expr(_sql_dot("qvec", "qvec")))
-    qdist = F.expr(_dist_structs_sql(centroids, cdots, "qvec", "_qv", 6))
-    probes = qvv.select(
-        "query_id",
-        "qvec",
-        F.explode(F.slice(F.array_sort(qdist), 1, nprobe)).alias("p"),
-    ).select("query_id", "qvec", F.col("p.cid").alias("cell"))
+    probes = _ivf_probes(queries, centroids, nprobe)
     cand = (
-        assigned.join(F.broadcast(probes), "cell")
+        index.join(F.broadcast(probes), "cell")
         # one cell per vector + distinct probed cells make duplicates
         # impossible today; the guard keeps the result correct under
         # any future codebook/probing change (ann_topk_ivf's rule)
         .dropDuplicates(["query_id", id_col])
     )
-    scored = cand.select(
-        "query_id",
-        id_col,
-        _fround(cosine_sim(F.col("qvec"), F.col(vec_col)), 9).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            id_col,
-            _fround(F.col("cos_sim"), 4).alias("cos_sim"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _cosine_rerank(cand, k, id_col, vec_col)
 
 
 def semantic_dedup(
     embeddings: DataFrame,
+    centroids: dict[int, list[float]],
     threshold: float = 0.92,
-    n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: dict[int, list[float]] | None = None,
     leaf_planes: int = 0,
     leaf_tables: int = 2,
     dim: int = 64,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): coarse-
-    cluster every embedding to its nearest IVF centroid map-side (same
-    literal-codebook assignment as ivf_index — no shuffle, no join),
+    cluster every embedding to its nearest IVF centroid map-side (the
+    cells of ``ivf_index`` — no shuffle for the assignment, no join),
     then WITHIN each cell drop any vector that has a lower-id neighbor
     at cosine >= ``threshold``. Returns per-cell (n_vectors, n_dropped,
     n_kept).
 
     The clustering is what bounds the quadratic: pairwise cosine runs
-    per cell, never across the corpus. ``centroids`` takes the trained
+    per cell, never across the corpus. ``centroids`` is the trained
     codebook (the catalog path passes ``train_ivf_centroids`` output
     sized by ``derive_n_centroids``), so cell populations stay roughly
-    constant as the corpus grows and the per-cell pair work stays flat;
-    with ``centroids`` omitted the first ``n_centroids`` vectors are a
-    deterministic stand-in. Assignment is a single map-side pass either
-    way. The keep-lowest-id rule makes the survivor set deterministic
-    and engine-portable (DuckDB oracle mirrors cell assignment — and
-    the training recurrence, when trained — operand-for-operand).
+    constant as the corpus grows and the per-cell pair work stays flat.
+    Assignment is a single map-side pass. The keep-lowest-id rule makes
+    the survivor set deterministic and engine-portable (DuckDB oracle
+    mirrors cell assignment and the training recurrence
+    operand-for-operand).
 
     ``leaf_planes`` > 0 additionally bands each cell into 2^planes
     sign-LSH buckets (``leaf_tables`` hash tables for recall — a pair
@@ -542,30 +531,16 @@ def semantic_dedup(
     from the target leaf bound). leaf_planes=0 keeps plain same-cell
     semantics — identical to the pre-banding operator.
     """
-    emb = _as_double(embeddings, vec_col)
-    cents = centroids or _first_n_codebook(emb, n_centroids, id_col, vec_col)
-    cdots = {cid: sum(x * x for x in v) for cid, v in cents.items()}
     v = F.col(vec_col)
-    dist_structs = F.expr(
-        _dist_structs_sql(cents, cdots, vec_col, "_vv", 6)
-    )
     unit = F.transform(v, lambda x: x / F.sqrt(_dot(v, v)))
-    # rebalance before the per-row n_centroids-distance projection (a
-    # single-file local input scans as one partition and would run the
-    # whole assignment pass on one core)
-    spread = emb.repartition(
-        emb.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
     bucket_cols = [
         lsh_bucket(F.col(vec_col), t, leaf_planes, dim).alias(f"_bkt{t}")
         for t in range(leaf_tables if leaf_planes > 0 else 0)
     ]
-    assigned = spread.withColumn(
-        "_vv", F.expr(_sql_dot(vec_col, vec_col))
-    ).select(
+    assigned = ivf_index(embeddings, centroids, id_col, vec_col).select(
         F.col(id_col),
         unit.alias("nv"),
-        F.array_min(dist_structs).getField("cid").cast("int").alias("cell"),
+        "cell",
         *bucket_cols,
     )
     totals = assigned.groupBy("cell").agg(
@@ -804,9 +779,9 @@ def train_ivf_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict[int, list[float]]:
-    """Distributed Lloyd's k-means for the IVF codebook (the trained
-    replacement for the first-N stand-in, ``_first_n_codebook``, which
-    is also its init).
+    """Distributed Lloyd's k-means for the IVF codebook. The init is
+    the first ``n_centroids`` vectors by id (``iterations=0`` returns
+    it).
 
     Each iteration is one distributed pass: assign every vector to its
     nearest centroid map-side (centroids are plan literals — no join,
@@ -849,9 +824,10 @@ def train_ivf_centroids(
         # remap arbitrary init ids to dense cell ids 0..n-1
         cents = {i: v for i, (_, v) in enumerate(sorted(cents.items()))}
         for _ in range(iterations):
-            cdots = {cid: sum(x * x for x in v) for cid, v in cents.items()}
+            # the trainer's own argmin, not ivf_index's: the training
+            # recurrence assigns at 9 dp (the oracle unrolls it so)
             dist_structs = F.expr(
-                _dist_structs_sql(cents, cdots, vec_col, "_vv", 9)
+                _dist_structs_sql(cents, vec_col, "_vv", 9)
             )
             assigned = emb.withColumn(
                 "_vv", F.expr(_sql_dot(vec_col, vec_col))
@@ -1098,7 +1074,7 @@ def ivf_recall_cost(
     )
     tot = pop.agg(F.sum("pop").cast("bigint").alias("n_total"))
     probes = _ivf_probes(
-        index, query_ids, centroids, nprobe, id_col, vec_col
+        _corpus_queries(index, query_ids, id_col, vec_col), centroids, nprobe
     ).select("cell")
     scanned = (
         probes.join(pop, "cell")
@@ -1137,9 +1113,7 @@ def l2_topk_exact(
     so the ranking is engine-portable. Output (query_id, vec_id,
     rank)."""
     emb = _as_double(embeddings, vec_col)
-    queries = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
+    queries = _corpus_queries(emb, query_ids, id_col, vec_col)
     pairs = emb.join(
         F.broadcast(queries), F.col(id_col) != F.col("query_id")
     )
@@ -1152,14 +1126,7 @@ def l2_topk_exact(
         "query_id", id_col,
         (F.floor(d * 1e9 + F.lit(0.5)) / 1e9).alias("d9"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d9").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _topk(scored, k, id_col, "d9", False, None)
 
 
 def pq_recall_report(
@@ -1257,15 +1224,12 @@ def pq_quantization_error(
     sum of 6-dp terms is exact, and the emitted ``err6`` =
     floor(err·1e6 + 0.5) is an exact BIGINT both engines reproduce
     (the ADC-sum portability pattern). Returns (id, err6)."""
-    m = len(books)
-    d_sub = len(next(iter(books[0].values())))
     emb = _as_double(embeddings, vec_col)
-    parts = []
-    for s in range(m):
-        sl = f"slice(`{vec_col}`, {s * d_sub + 1}, {d_sub})"
-        cdots = {cid: sum(x * x for x in v) for cid, v in books[s].items()}
-        ds = _dist_structs_sql(books[s], cdots, sl, _sql_dot(sl, sl), 6)
-        parts.append(f"CAST(array_min({ds}).d AS DECIMAL(38,18))")
+    parts = [
+        f"CAST(array_min({_pq_subspace_sql(books, s, vec_col)}).d "
+        f"AS DECIMAL(38,18))"
+        for s in range(len(books))
+    ]
     err = f"CAST(({' + '.join(parts)}) AS DOUBLE)"
     return emb.select(
         id_col,
@@ -1399,6 +1363,8 @@ def ivf_retrain_report(
     batch: DataFrame,
     centroids: dict[int, list[float]],
     query_ids: list[int],
+    baseline_counts: DataFrame,
+    exact: DataFrame,
     k: int = 10,
     nprobe: int = 4,
     growth_bound: tuple[int, int] = (1, 2),
@@ -1406,8 +1372,6 @@ def ivf_retrain_report(
     recall_bound: tuple[int, int] = (1, 2),
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    baseline_counts: DataFrame | None = None,
-    exact: DataFrame | None = None,
 ) -> DataFrame:
     """IVF CODEBOOK DRIFT TRIGGER — the decision layer the recall
     gates feed (VERDICT r10 task 7): the recall measurements
@@ -1437,33 +1401,19 @@ def ivf_retrain_report(
     Every comparison is a product of exact integers, so the report
     value-checks bit-for-bit against the DuckDB oracle; the two
     one-division ratios round 6 dp. Scale shape: map-side assignment
-    scans (store, batch, and the IVF index of store ∪ batch that the
-    recall probe searches — the literal-codebook argmin, no shuffle),
-    a |cells|-sized merge, one brute probe pass bounded by |Q|
-    broadcast queries, and 1-row aggregates cross-joined into the
+    scans (batch, and the IVF index of store ∪ batch that the recall
+    probe searches — the literal-codebook argmin, no shuffle), a
+    |cells|-sized merge, and 1-row aggregates cross-joined into the
     fixed 4-row report (eager-cut to 1 row so the report rows share
     ONE evaluation of the evidence subtrees instead of four).
-    ``baseline_counts``: the maintained (cell, n_baseline) stats
-    relation when the caller already has it (the production case —
-    and the multi-wave planner computes it once across waves); when
-    omitted it is derived from ``store`` with one assignment scan.
-    ``exact``: the (query_id, <id_col>) brute-force ground truth over
-    store ∪ batch when the caller already materialized it (it is
-    codebook-independent, so the plan/execute pair shares one); when
-    omitted it is derived here with one brute pass (the drift
-    trigger's wave 1, whose corpus no other key shares)."""
+    ``baseline_counts``: the index's maintained (cell, n_baseline)
+    stats relation. ``exact``: the (query_id, <id_col>) exact top-k
+    of ``query_ids`` over store ∪ batch (``ann_topk_bruteforce`` at
+    the same k); it is codebook-independent, so callers share one."""
     n_cells = len(centroids)
     nq = len(query_ids)
-    if baseline_counts is not None:
-        base_counts = baseline_counts
-    else:
-        base_counts = (
-            ivf_assign_cells(store, centroids, id_col, vec_col)
-            .groupBy("cell")
-            .agg(F.count("*").alias("n_baseline"))
-        )
     merged = ivf_index_append(
-        batch, centroids, base_counts, id_col, vec_col
+        batch, centroids, baseline_counts, id_col, vec_col
     )
     tots = merged.agg(
         F.sum("n_baseline").cast("bigint").alias("tb"),
@@ -1473,11 +1423,6 @@ def ivf_retrain_report(
         .alias("n_hot"),
     )
     corpus = store.unionByName(batch)
-    if exact is None:
-        exact = ann_topk_bruteforce(
-            corpus, query_ids=query_ids, k=k, id_col=id_col,
-            vec_col=vec_col,
-        ).select("query_id", id_col)
     approx = ann_topk_ivf(
         ivf_index(corpus, centroids, id_col, vec_col),
         query_ids=query_ids,
@@ -1607,12 +1552,10 @@ def train_pq_codebooks(
             branches = []
             for s in range(m):
                 sl = f"slice(`{vec_col}`, {s * d_sub + 1}, {d_sub})"
-                cdots = {
-                    cid: sum(x * x for x in v) for cid, v in books[s].items()
-                }
-                ds = _dist_structs_sql(
-                    books[s], cdots, sl, _sql_dot(sl, sl), 9
-                )
+                # the trainer's own argmin, not _pq_subspace_sql's: the
+                # training recurrence assigns at 9 dp (the oracle
+                # unrolls it so)
+                ds = _dist_structs_sql(books[s], sl, _sql_dot(sl, sl), 9)
                 branches.append(
                     f"named_struct('s', {s}, "
                     f"'cell', array_min({ds}).cid, 'sub', {sl})"
@@ -1650,20 +1593,88 @@ def pq_encode(
     """Encode each vector as its per-subspace nearest-centroid ids —
     one map-side projection (codebooks are plan literals), no shuffle.
     Returns (id, code array<int>)."""
-    m = len(books)
-    d_sub = len(next(iter(books[0].values())))
     emb = _as_double(embeddings, vec_col)
     spread = emb.repartition(
         emb.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
     )
-    parts = []
-    for s in range(m):
-        sl = f"slice(`{vec_col}`, {s * d_sub + 1}, {d_sub})"
-        cdots = {cid: sum(x * x for x in v) for cid, v in books[s].items()}
-        ds = _dist_structs_sql(books[s], cdots, sl, _sql_dot(sl, sl), 6)
-        parts.append(f"array_min({ds}).cid")
     return spread.select(
-        id_col, F.expr("array(" + ", ".join(parts) + ")").alias("code")
+        id_col, F.expr(_pq_code_sql(books, vec_col)).alias("code")
+    )
+
+
+def _pq_subspace_sql(
+    books: dict[int, dict[int, list[float]]], s: int, vec_col: str
+) -> str:
+    """The ONE PQ assignment expression: the 6-dp codebook-distance
+    structs of subspace ``s`` of ``vec_col``. The argmin's cid is the
+    subspace's code, its d the subspace's reconstruction error."""
+    d_sub = len(next(iter(books[0].values())))
+    sl = f"slice(`{vec_col}`, {s * d_sub + 1}, {d_sub})"
+    return _dist_structs_sql(books[s], sl, _sql_dot(sl, sl), 6)
+
+
+def _pq_code_sql(
+    books: dict[int, dict[int, list[float]]], vec_col: str
+) -> str:
+    """The PQ code of ``vec_col``: array of the per-subspace
+    nearest-centroid ids."""
+    parts = [
+        f"array_min({_pq_subspace_sql(books, s, vec_col)}).cid"
+        for s in range(len(books))
+    ]
+    return "array(" + ", ".join(parts) + ")"
+
+
+def _pq_dist_tables(
+    emb: DataFrame,
+    query_ids: list[int],
+    books: dict[int, dict[int, list[float]]],
+    id_col: str,
+    vec_col: str,
+) -> dict[int, list[list[float]]]:
+    """The ONE ADC distance table per query row of ``emb``: entry
+    [s][c] is the squared L2 distance between the query's subspace
+    ``s`` and centroid ``c`` (sorted cid order), rounded to 6 dp.
+    Computed driver-side (m x n_centroids doubles per query — it IS
+    the query's lookup structure) with fold arithmetic bit-matching
+    the engines, so the tables bake into the plan as literals."""
+    d_sub = len(next(iter(books[0].values())))
+    qrows = {
+        int(r[0]): [float(x) for x in r[1]]
+        for r in _as_double(emb, vec_col)
+        .filter(F.col(id_col).isin(query_ids))
+        .select(id_col, vec_col)
+        .collect()
+    }
+    tables = {}
+    for qid, qv in qrows.items():
+        table = []
+        for s in range(len(books)):
+            qs = qv[s * d_sub : (s + 1) * d_sub]
+            qq = _py_dot(qs, qs)
+            row = []
+            for cid in sorted(books[s]):
+                cv = books[s][cid]
+                d = qq + _py_dot(cv, cv) - 2.0 * _py_dot(qs, cv)
+                row.append(math.floor(d * 1e6 + 0.5) / 1e6)
+            table.append(row)
+        tables[qid] = table
+    return tables
+
+
+def _adc_sql(table_sql: str, m: int) -> str:
+    """The ADC distance of a row's ``code`` under the (subspace x
+    centroid) distance table ``table_sql``: the table entries of its
+    ``m`` codes summed in exact decimal, as a double. The lambda
+    result is re-cast to the accumulator type (Spark's decimal
+    addition promotes 38,18 -> 38,17); lossless here — entries carry
+    6 decimal digits, sums of 8 never need 18."""
+    return (
+        f"CAST(aggregate(sequence(0, {m - 1}), "
+        f"CAST('0' AS DECIMAL(38,18)), (acc, s) -> CAST(acc + "
+        f"CAST(element_at(element_at({table_sql}, s + 1), "
+        f"element_at(code, s + 1) + 1) AS DECIMAL(38,18)) "
+        f"AS DECIMAL(38,18))) AS DOUBLE)"
     )
 
 
@@ -1687,53 +1698,13 @@ def ann_topk_pq(
     to 6 dp and the ADC sum runs in exact decimal, so the result is
     fully value-checked against the oracle's in-engine recomputation.
     """
-    m = len(books)
-    d_sub = len(next(iter(books[0].values())))
-    emb = _as_double(embeddings, vec_col)
-    qrows = {
-        int(r[0]): [float(x) for x in r[1]]
-        for r in emb.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    }
-    f6 = 10.0**6
-    import math
-
-    def dtab(qv: list[float]) -> list[list[float]]:
-        out = []
-        for s in range(m):
-            qs = qv[s * d_sub : (s + 1) * d_sub]
-            qq = _py_dot(qs, qs)
-            row = []
-            for cid in sorted(books[s]):
-                cv = books[s][cid]
-                cc = _py_dot(cv, cv)
-                d = qq + cc - 2.0 * _py_dot(qs, cv)
-                row.append(math.floor(d * f6 + 0.5) / f6)
-            out.append(row)
-        return out
-
+    tables = _pq_dist_tables(embeddings, query_ids, books, id_col, vec_col)
     encoded = pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col)
-    branches = []
-    for qid in sorted(qrows):
-        dt = dtab(qrows[qid])
-        dt2d = "array(" + ",".join(
-            "array(" + ",".join(_sql_double(x) for x in row) + ")"
-            for row in dt
-        ) + ")"
-        # lambda result is re-cast to the accumulator type (Spark's
-        # decimal addition promotes 38,18 -> 38,17); lossless here —
-        # entries carry 6 decimal digits, sums of 8 never need 18
-        adc = (
-            f"CAST(aggregate(sequence(0, {m - 1}), "
-            f"CAST('0' AS DECIMAL(38,18)), (acc, s) -> CAST(acc + "
-            f"CAST(element_at(element_at({dt2d}, s + 1), "
-            f"element_at(code, s + 1) + 1) AS DECIMAL(38,18)) "
-            f"AS DECIMAL(38,18))) AS DOUBLE)"
-        )
-        branches.append(
-            f"named_struct('query_id', {qid}, 'ad', {adc})"
-        )
+    branches = [
+        f"named_struct('query_id', {qid}, "
+        f"'ad', {_adc_sql(_sql_array(tables[qid]), len(books))})"
+        for qid in sorted(tables)
+    ]
     scored = encoded.select(
         id_col,
         F.explode(F.expr("array(" + ", ".join(branches) + ")")).alias("qa"),
@@ -1741,19 +1712,7 @@ def ann_topk_pq(
         F.col("qa.query_id").alias("query_id"), id_col,
         F.col("qa.ad").alias("ad"),
     ).filter(F.col(id_col) != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ad").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            id_col,
-            _fround(F.col("ad"), 4).alias("approx_dist"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _topk(scored, k, id_col, "ad", False, "approx_dist")
 
 
 def ann_topk_ivfpq(
@@ -1772,133 +1731,32 @@ def ann_topk_ivfpq(
     through their PQ codes only (same ADC tables as ann_topk_pq).
 
     ONE corpus projection computes both the coarse cell and the PQ
-    code per row (map-side, both codebooks are plan literals); the
-    probe join is broadcast; ADC lookups index a 3-D literal
+    code per row (map-side, both codebooks are plan literals): the
+    code column rides on ``ivf_index``'s cells, and the queries probe
+    through ``_ivf_probes``; the probe join is broadcast; ADC lookups
+    index a 3-D literal
     (query x subspace x centroid) via array_position on the query id.
     Nothing corpus-sized shuffles before the top-k window. Fully
     value-checked: the oracle recomputes both codebooks in-engine and
     repeats the probe + ADC join."""
-    m = len(books)
-    d_sub = len(next(iter(books[0].values())))
-    emb = _as_double(embeddings, vec_col)
-    spread = emb.repartition(
-        emb.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+    index = ivf_index(embeddings, coarse, id_col, vec_col)
+    assigned = index.select(
+        id_col, "cell", F.expr(_pq_code_sql(books, vec_col)).alias("code")
     )
-    with_vv = spread.withColumn("_vv", F.expr(_sql_dot(vec_col, vec_col)))
-    cdots_c = {cid: sum(x * x for x in v) for cid, v in coarse.items()}
-    coarse_structs = _dist_structs_sql(
-        coarse, cdots_c, vec_col, "_vv", 6
+    probes = _ivf_probes(
+        _corpus_queries(index, query_ids, id_col, vec_col), coarse, nprobe
+    ).select("query_id", "cell")
+    tables = _pq_dist_tables(embeddings, query_ids, books, id_col, vec_col)
+    qids = sorted(tables)
+    dt3d = _sql_array([tables[q] for q in qids])
+    qid_arr = "array(" + ",".join(f"CAST({q} AS BIGINT)" for q in qids) + ")"
+    adc = _adc_sql(
+        f"element_at({dt3d}, CAST(array_position({qid_arr}, query_id) AS INT))",
+        len(books),
     )
-    code_parts = []
-    for s in range(m):
-        sl = f"slice(`{vec_col}`, {s * d_sub + 1}, {d_sub})"
-        cd = {cid: sum(x * x for x in v) for cid, v in books[s].items()}
-        ds = _dist_structs_sql(books[s], cd, sl, _sql_dot(sl, sl), 6)
-        code_parts.append(f"array_min({ds}).cid")
-    assigned = with_vv.select(
-        id_col,
-        F.expr(f"array_min({coarse_structs}).cid").alias("cell"),
-        F.expr("array(" + ", ".join(code_parts) + ")").alias("code"),
-    )
-    probes = (
-        with_vv.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.explode(
-                F.slice(
-                    F.array_sort(F.expr(coarse_structs)), 1, nprobe
-                )
-            ).alias("p"),
-        )
-        .select("query_id", F.col("p.cid").alias("cell"))
-    )
-    qrows = {
-        int(r[0]): [float(x) for x in r[1]]
-        for r in emb.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    }
-    import math
-
-    f6 = 10.0**6
-    sorted_qids = sorted(qrows)
-    dt3d_rows = []
-    for qid in sorted_qids:
-        qv = qrows[qid]
-        rows = []
-        for s in range(m):
-            qs = qv[s * d_sub : (s + 1) * d_sub]
-            qq = _py_dot(qs, qs)
-            row = []
-            for cid in sorted(books[s]):
-                cv = books[s][cid]
-                d = qq + _py_dot(cv, cv) - 2.0 * _py_dot(qs, cv)
-                row.append(math.floor(d * f6 + 0.5) / f6)
-            rows.append(row)
-        dt3d_rows.append(rows)
-    dt3d = "array(" + ",".join(
-        "array(" + ",".join(
-            "array(" + ",".join(_sql_double(x) for x in row) + ")"
-            for row in rows
-        ) + ")"
-        for rows in dt3d_rows
-    ) + ")"
-    qid_arr = "array(" + ",".join(
-        f"CAST({q} AS BIGINT)" for q in sorted_qids
-    ) + ")"
-    adc = (
-        f"CAST(aggregate(sequence(0, {m - 1}), "
-        f"CAST('0' AS DECIMAL(38,18)), (acc, s) -> CAST(acc + "
-        f"CAST(element_at(element_at(element_at({dt3d}, "
-        f"CAST(array_position({qid_arr}, query_id) AS INT)), s + 1), "
-        f"element_at(code, s + 1) + 1) AS DECIMAL(38,18)) "
-        f"AS DECIMAL(38,18))) AS DOUBLE)"
-    )
-    cand = assigned.join(
-        F.broadcast(probes),
-        on=[
-            assigned["cell"] == probes["cell"],
-            assigned[id_col] != probes["query_id"],
-        ],
-    ).select("query_id", id_col, "code").dropDuplicates(
-        ["query_id", id_col]
-    )
-    scored = cand.select(
-        "query_id", id_col, F.expr(adc).alias("ad")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ad").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            id_col,
-            _fround(F.col("ad"), 4).alias("approx_dist"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
-
-
-def quantization_error(
-    embeddings: DataFrame,
-    centroids: dict[int, list[float]],
-    vec_col: str = "embedding",
-) -> float:
-    """Mean squared distance of every vector to its nearest centroid —
-    the k-means objective, one distributed pass."""
-    emb = _as_double(embeddings, vec_col)
-    cdots = {cid: sum(x * x for x in v) for cid, v in centroids.items()}
-    dist_structs = F.expr(
-        _dist_structs_sql(centroids, cdots, vec_col, "_vv", None)
-    )
-    row = (
-        emb.withColumn("_vv", F.expr(_sql_dot(vec_col, vec_col)))
-        .select(F.avg(F.array_min(dist_structs).getField("d")).alias("mse"))
-        .collect()[0]
-    )
-    return float(row["mse"])
+    cand = _probed_candidates(assigned, probes, id_col, "code")
+    scored = cand.select("query_id", id_col, F.expr(adc).alias("ad"))
+    return _topk(scored, k, id_col, "ad", False, "approx_dist")
 
 
 def ann_recall_at_k(
@@ -1989,66 +1847,9 @@ def ann_topk_lsh_multiprobe(
     recall improvement is measurable with ``ann_recall_at_k``'s
     methodology (see the paired pytest).
     """
-    emb = _as_double(embeddings, vec_col)
-    bucketed = None
-    for t in range(tables):
-        b = emb.select(
-            id_col,
-            vec_col,
-            F.lit(t).alias("tbl"),
-            lsh_bucket(F.col(vec_col), t, planes, dim).alias("bucket"),
-        )
-        bucketed = b if bucketed is None else bucketed.unionByName(b)
-    flips = F.explode(
-        F.array(F.lit(0), *[F.lit(2**p) for p in range(planes)])
-    ).alias("flip")
-    queries = (
-        bucketed.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            "tbl",
-            "bucket",
-            flips,
-        )
-        .select(
-            "query_id",
-            "qvec",
-            "tbl",
-            F.col("bucket").bitwiseXOR(F.col("flip")).alias("bucket"),
-        )
-    )
-    cand = (
-        bucketed.join(
-            F.broadcast(queries),
-            on=[
-                bucketed["tbl"] == queries["tbl"],
-                bucketed["bucket"] == queries["bucket"],
-                bucketed[id_col] != queries["query_id"],
-            ],
-        )
-        .select("query_id", id_col, vec_col, "qvec")
-        .dropDuplicates(["query_id", id_col])
-    )
-    scored = cand.select(
-        "query_id",
-        id_col,
-        _fround(cosine_sim(F.col("qvec"), F.col(vec_col)), 9).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            id_col,
-            _fround(F.col("cos_sim"), 4).alias("cos_sim"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+    flips = [0] + [2**p for p in range(planes)]
+    return _lsh_topk(
+        embeddings, query_ids, k, planes, tables, dim, id_col, vec_col, flips
     )
 
 
@@ -2186,7 +1987,11 @@ def ivf_nprobe_plan(
 
     nq = len(query_ids)
     probes = (
-        _ivf_probes(index, query_ids, centroids, max(ladder), id_col, vec_col)
+        _ivf_probes(
+            _corpus_queries(index, query_ids, id_col, vec_col),
+            centroids,
+            max(ladder),
+        )
         .select("query_id", "probe_rank", "cell")
         .localCheckpoint(eager=True)
     )

@@ -123,7 +123,8 @@ def test_models_and_exact_truths_are_built_only_in_the_registry():
     """A model, exact ground truth or loop-invariant structure that a
     key reuses across calls is an artifact(): the GD trainer runs only
     in the logreg_weights builder, the brute-force top-k only in the
-    two exact-truth builders and in the operator's own key, the
+    two exact-truth builders, in the operator's own key and for the
+    drift trigger's wave 1 (a corpus no other key shares), the
     PageRank graph only in the supplier_graph builder, and the
     full-corpus IVF index only in the ivf_index_full builder."""
     assert _call_sites("logistic_regression_gd") == {"logreg_weights"}
@@ -133,4 +134,38 @@ def test_models_and_exact_truths_are_built_only_in_the_registry():
         "exact_topk_full",
         "retrain_exact_topk",
         "q_ann_cosine_topk",
+        "q_ivf_retrain_plan",
     }
+
+
+def test_ann_primitives_are_defined_once():
+    """text/vector.py ranks every top-k through ``_topk``, the only
+    caller of ``row_number``, and builds codebook distances only in
+    the corpus assignment (``ivf_index``), the probe order
+    (``_ivf_probes``), the PQ subspace expression and the two
+    trainers, which assign at 9 dp. A search that grows its own
+    ranking or argmin again fails here."""
+    import ast
+
+    tree = ast.parse(
+        (PKG / "text" / "vector.py").read_text(encoding="utf-8")
+    )
+
+    def callers(name):
+        return sorted(
+            top.name
+            for top in tree.body
+            if isinstance(top, ast.FunctionDef)
+            for n in ast.walk(top)
+            if isinstance(n, ast.Call)
+            and getattr(n.func, "id", getattr(n.func, "attr", None)) == name
+        )
+
+    assert callers("row_number") == ["_topk"]
+    assert callers("_dist_structs_sql") == [
+        "_ivf_probes",
+        "_pq_subspace_sql",
+        "ivf_index",
+        "train_ivf_centroids",
+        "train_pq_codebooks",
+    ]

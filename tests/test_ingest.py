@@ -12,10 +12,7 @@ import json
 import os
 from datetime import date, timedelta
 
-import pyspark.sql.functions as F
-
 from aproximacion_1_etl_spark.sources.json_ingest import (
-    metadata_sidecar,
     read_day_files,
     split_corrupt,
 )
@@ -128,14 +125,6 @@ def test_explode_child_from_fixture(spark, tmp_path):
     assert len(rows) == 1
     assert rows[0]["delivery_order_id"] == "DO-1"
     assert rows[0]["status"] == 1
-
-
-def test_metadata_sidecar_counts(spark, tmp_path):
-    root = _write_day_layout(tmp_path)
-    df, _ = split_corrupt(read_day_files(spark, f"{root}/*", schema_ddl=ORDER_DDL))
-    df = df.withColumn("ingest_date", F.lit("2024-03-01"))
-    side = metadata_sidecar(df).collect()
-    assert side[0]["total_ordenes"] == 2
 
 
 def test_rest_datasource_plans_one_task_per_page(spark):

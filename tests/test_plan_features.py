@@ -180,27 +180,6 @@ def test_sql_join_hints_steer_physical_strategy(spark, sf_dir):
         _restore(spark, saved)
 
 
-def test_cluster_conf_sizing_math():
-    """cluster_conf encodes the partition-sizing rules: partitions scale
-    with input volume once data dominates, never drop below 2x cores,
-    and the per-partition envelope stays fixed as both scale."""
-    from aproximacion_1_etl_spark.session import cluster_conf
-
-    small = cluster_conf(total_cores=64, input_tb=0.001)
-    assert int(small["spark.sql.shuffle.partitions"]) == 128  # 2x cores
-
-    big = cluster_conf(total_cores=8000, input_tb=100.0)
-    parts = int(big["spark.sql.shuffle.partitions"])
-    # 100 TB / 256 MB ~= 409,600 partitions
-    assert 350_000 < parts < 450_000
-    per_part_mb = 100.0 * 1024 * 1024 / parts
-    assert 200 < per_part_mb < 300
-
-    # growing the cluster alone must not shrink per-partition size
-    wider = cluster_conf(total_cores=16000, input_tb=100.0)
-    assert int(wider["spark.sql.shuffle.partitions"]) >= parts
-
-
 def test_bpe_encode_single_exchange_and_batch_pack_broadcast(spark, sf_dir):
     """Pin the new ops' scale shapes: tokenizer application must stay
     one exchange (the per-doc rollup) no matter how many merge rules

@@ -1932,7 +1932,7 @@ def test_ann_topk_ivf_queries_consistent_with_corpus_query_form(
     b = {
         (r.query_id, r.vec_id): r.cos_sim
         for r in ann_topk_ivf_queries(
-            emb, queries, centroids=cents, k=13, nprobe=4
+            ivf_index(emb, cents), queries, centroids=cents, k=13, nprobe=4
         ).collect()
         if r.vec_id != r.query_id
     }

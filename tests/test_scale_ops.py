@@ -650,8 +650,8 @@ def test_load_table_ts_encoding_matrix(spark):
 
 def test_text_ops_tolerate_punctuation_free_documents(spark):
     """Driver-regen guard #2: the documents corpus dropped '. '
-    sentence separators in one regen. The text pipeline (profile,
-    chunking, sentence splitting, shingles) must stay well-defined on
+    sentence separators in one regen. The text pipeline (chunking,
+    sentence splitting, shingles) must stay well-defined on
     punctuation-free single-token-run text."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -672,11 +672,8 @@ def test_text_ops_tolerate_punctuation_free_documents(spark):
     pq.write_table(tbl, f"{d}/documents.parquet")
     docs = load_table(spark, d, "documents")
 
-    from aproximacion_1_etl_spark.text.analysis import document_profile
     from aproximacion_1_etl_spark.text.dedup import word_shingles
 
-    prof = document_profile(docs).collect()
-    assert len(prof) == 3
     sh = word_shingles(docs, n=3, distinct=False).collect()
     # only docs with >= 3 tokens shingle; short docs drop cleanly
     assert {r["doc_id"] for r in sh} == {0, 2}

@@ -145,15 +145,22 @@ def test_decontaminate_finds_shared_ngrams(spark):
 def test_kmeans_ivf_training_reduces_error_deterministically(spark, sf_dir):
     from aproximacion_1_etl_spark.sources.tables import load_table
     from aproximacion_1_etl_spark.text.vector import (
-        quantization_error,
+        pq_quantization_error,
         train_ivf_centroids,
     )
+
+    def objective(cents):
+        # one subspace spanning the whole vector: the per-row 6-dp
+        # distance to the nearest centroid, i.e. the k-means objective
+        return pq_quantization_error(emb, {0: cents}).agg(
+            F.avg("err6")
+        ).collect()[0][0]
 
     emb = load_table(spark, sf_dir, "embeddings")
     init = train_ivf_centroids(emb, n_centroids=8, iterations=0)
     trained = train_ivf_centroids(emb, n_centroids=8, iterations=3)
-    e0 = quantization_error(emb, init)
-    e3 = quantization_error(emb, trained)
+    e0 = objective(init)
+    e3 = objective(trained)
     assert e3 < e0  # Lloyd iterations strictly improve the objective here
     # deterministic: same input -> identical codebook
     again = train_ivf_centroids(emb, n_centroids=8, iterations=3)
@@ -219,10 +226,15 @@ def test_bm25_scores_rank_matching_docs(spark, sf_dir):
 def test_semantic_dedup_partitions_corpus(spark, sf_dir):
     """Semantic dedup: kept + dropped tile the corpus exactly, and at a
     threshold where near-dups exist something actually drops."""
-    from aproximacion_1_etl_spark.text.vector import semantic_dedup
+    from aproximacion_1_etl_spark.text.vector import (
+        semantic_dedup,
+        train_ivf_centroids,
+    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = semantic_dedup(emb, threshold=0.4, n_centroids=16).collect()
+    # the first 16 vectors as the codebook (the k-means init)
+    cents = train_ivf_centroids(emb, n_centroids=16, iterations=0)
+    out = semantic_dedup(emb, cents, threshold=0.4).collect()
     assert sum(r["n_vectors"] for r in out) == emb.count()
     for r in out:
         assert r["n_kept"] + r["n_dropped"] == r["n_vectors"]
@@ -274,9 +286,8 @@ def test_trained_codebook_bounds_cell_population_on_skew(spark):
     import pyspark.sql.functions as F
 
     from aproximacion_1_etl_spark.text.vector import (
-        _dist_structs_sql,
-        _sql_dot,
         derive_n_centroids,
+        ivf_assign_cells,
         train_ivf_centroids,
     )
 
@@ -295,14 +306,7 @@ def test_trained_codebook_bounds_cell_population_on_skew(spark):
     )
     n_c = derive_n_centroids(640)  # 26 cells (sqrt regime)
     cents = train_ivf_centroids(emb, n_centroids=n_c, iterations=3)
-    cdots = {c: sum(x * x for x in v) for c, v in cents.items()}
-    assigned = emb.withColumn(
-        "_vv", F.expr(_sql_dot("embedding", "embedding"))
-    ).select(
-        F.array_min(
-            F.expr(_dist_structs_sql(cents, cdots, "embedding", "_vv", 6))
-        ).getField("cid").alias("cell")
-    )
+    assigned = ivf_assign_cells(emb, cents)
     pops = [r["n"] for r in assigned.groupBy("cell").agg(
         F.count("*").alias("n")).collect()]
     assert sum(pops) == 640
@@ -352,16 +356,20 @@ def test_semantic_dedup_banding_matches_plain_when_vacuous(spark):
     operator, and with planes>0 the (cell, n_vectors) totals are
     unchanged — banding only restricts which PAIRS are compared, so
     n_dropped can only stay equal or shrink per cell."""
-    from aproximacion_1_etl_spark.text.vector import semantic_dedup
+    from aproximacion_1_etl_spark.text.vector import (
+        semantic_dedup,
+        train_ivf_centroids,
+    )
 
     rows = [
         (i, [1.0 if d == i % 4 else 0.1 * ((i * 7 + d) % 5) for d in range(8)])
         for i in range(60)
     ]
     emb = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<DOUBLE>")
-    plain = semantic_dedup(emb, threshold=0.8, n_centroids=4, dim=8)
+    cents = train_ivf_centroids(emb, n_centroids=4, iterations=0)
+    plain = semantic_dedup(emb, cents, threshold=0.8, dim=8)
     banded = semantic_dedup(
-        emb, threshold=0.8, n_centroids=4, leaf_planes=2, leaf_tables=2, dim=8
+        emb, cents, threshold=0.8, leaf_planes=2, leaf_tables=2, dim=8
     )
     p = {r["cell"]: r for r in plain.collect()}
     b = {r["cell"]: r for r in banded.collect()}
@@ -370,21 +378,38 @@ def test_semantic_dedup_banding_matches_plain_when_vacuous(spark):
         assert p[c]["n_vectors"] == b[c]["n_vectors"]
         assert b[c]["n_dropped"] <= p[c]["n_dropped"]
     # planes=0 path is the identical operator (same plan family)
-    again = semantic_dedup(emb, threshold=0.8, n_centroids=4, dim=8)
+    again = semantic_dedup(emb, cents, threshold=0.8, dim=8)
     assert sorted(map(tuple, again.collect())) == sorted(
         map(tuple, plain.collect())
     )
 
 
-def _retrain_report_dict(spark, store_rows, batch_rows, **kw):
-    from aproximacion_1_etl_spark.text.vector import ivf_retrain_report
+def _retrain_report_dict(spark, store_rows, batch_rows, exact=None, **kw):
+    """The report as {evidence: (value, breach)}. The store's cell
+    counts and, unless ``exact`` is given, the brute-force truth over
+    store ∪ batch are derived in-plan here."""
+    from aproximacion_1_etl_spark.text.vector import (
+        ivf_assign_cells,
+        ivf_retrain_report,
+    )
 
     schema = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
     store = spark.createDataFrame(store_rows, schema)
     batch = spark.createDataFrame(batch_rows, schema)
+    base = (
+        ivf_assign_cells(store, kw["centroids"])
+        .groupBy("cell")
+        .agg(F.count("*").alias("n_baseline"))
+    )
+    if exact is None:
+        exact = ann_topk_bruteforce(
+            store.unionByName(batch), query_ids=kw["query_ids"], k=kw["k"]
+        ).select("query_id", "vec_id")
     return {
         r.evidence: (r.value, r.breach)
-        for r in ivf_retrain_report(store, batch, **kw).collect()
+        for r in ivf_retrain_report(
+            store, batch, baseline_counts=base, exact=exact, **kw
+        ).collect()
     }
 
 
@@ -501,9 +526,8 @@ def test_ivf_retrain_report_recall_breach_triggers(spark):
 
 def test_ivf_retrain_report_shared_exact_matches_internal(spark):
     """r14: the plan/execute pair shares one memoized brute-force
-    ground truth (it is codebook-independent), so ivf_retrain_report
-    gained an ``exact`` pass-through — a caller-materialized truth
-    over store ∪ batch must reproduce the internally-derived report
+    ground truth (it is codebook-independent) — a checkpointed truth
+    over store ∪ batch must reproduce the report of the in-plan truth
     row for row."""
     from aproximacion_1_etl_spark.text.vector import ann_topk_bruteforce
 
@@ -523,9 +547,9 @@ def test_ivf_retrain_report_shared_exact_matches_internal(spark):
         .localCheckpoint(eager=True)
     )
     kw = dict(centroids=cents, query_ids=[0], k=2, nprobe=1)
-    internal = _retrain_report_dict(spark, store, batch, **kw)
+    in_plan = _retrain_report_dict(spark, store, batch, **kw)
     shared = _retrain_report_dict(spark, store, batch, exact=exact, **kw)
-    assert shared == internal
+    assert shared == in_plan
 
 
 def test_ivf_index_append_flags_hot_cells_and_retrain(spark):

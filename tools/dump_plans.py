@@ -3,9 +3,9 @@
 
     python tools/dump_plans.py <outdir> <suffix> <query> [query ...]
 
-Writes ``<outdir>/<query>_<suffix>.txt`` for each query — the
-before/after plan evidence the optimization rounds commit under
-``plans/r13/``. Queries whose callable executes eagerly (streaming
+Writes ``<outdir>/<query>_<suffix>.txt`` for each query — before/after
+plan evidence for an optimization, dumped from the parent and the
+changed checkout. Queries whose callable executes eagerly (streaming
 sinks, table writes) are skipped with a note, same set as
 tools/plan_audit.py.
 """
