@@ -72,10 +72,11 @@ def _ivf_index_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF index of the full embeddings table over the
     ``ivf_codebook_full`` codebook: (vec_id, embedding, cell), the
     one corpus assignment (text/vector.py::ivf_index), eagerly
-    checkpointed. A registry artifact, so ann_topk_ivf and
-    ivf_nprobe_plan probe it instead of re-running the full-corpus
-    argmin on every call (in production an IVF index persists its
-    cell assignment once per codebook)."""
+    checkpointed. A registry artifact, so ann_topk_ivf,
+    ann_topk_ivfpq, semantic_dedup and ivf_nprobe_stats read it
+    instead of re-running the full-corpus argmin on every call (in
+    production an IVF index persists its cell assignment once per
+    codebook)."""
 
     def build() -> DataFrame:
         from aproximacion_1_etl_spark.text.vector import ivf_index
@@ -85,6 +86,25 @@ def _ivf_index_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         return ivf_index(emb, cb).localCheckpoint(eager=True)
 
     return artifact(spark, sf_dir, "ivf_index_full", ["embeddings"], build)
+
+
+def _ivf_nprobe_stats(spark: SparkSession, sf_dir: str):
+    """The call-invariant part of q_ivf_nprobe_plan: the per-cell
+    populations of the ivf_index_full artifact and its cells' counts
+    of the exact top-10 of ids 0-4 (text/vector.py::ivf_nprobe_stats).
+    A registry artifact: both reductions depend only on the index and
+    the fixed truth, so a warm call runs only the probes and the
+    ladder aggregate."""
+
+    def build():
+        from aproximacion_1_etl_spark.text.vector import ivf_nprobe_stats
+
+        return ivf_nprobe_stats(
+            _ivf_index_full(spark, sf_dir),
+            _exact_topk(spark, sf_dir, [0, 1, 2, 3, 4], 10),
+        )
+
+    return artifact(spark, sf_dir, "ivf_nprobe_stats", ["embeddings"], build)
 
 
 def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,7 +270,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment cost all grow sub-linearly) with in-cell sign-LSH
     banding sized by derive_leaf_planes so the per-leaf pair work
     stays bounded as cells grow; keep-lowest-id within (cell, band)
-    at cos>=0.4 (text/vector.py::semantic_dedup)."""
+    at cos>=0.4 (text/vector.py::semantic_dedup). The cells are read
+    from the ivf_index_full artifact."""
     from aproximacion_1_etl_spark.text.vector import (
         derive_leaf_planes,
         derive_n_centroids,
@@ -264,9 +285,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the oracle SF upward — the code path the 100 TB posture
     # depends on is the one the value gate exercises
     return semantic_dedup(
-        emb,
+        _ivf_index_full(spark, sf_dir),
         threshold=0.4,
-        centroids=_trained_codebook(spark, sf_dir),
         leaf_planes=derive_leaf_planes(n, nc, target_cell_size=8),
         leaf_tables=2,
     )
@@ -311,17 +331,17 @@ def q_ivf_nprobe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB ANN run (text/vector.py::ivf_nprobe_plan). Exact integers
     until two final one-division ratios; oracle recomputes the
     codebook in-engine (the _ivf_cent_ctes device) and mirrors every
-    rounding. The exact top-10 is a prefix of the session's one
-    exact_topk_full artifact, and the cells are read from the
-    ivf_index_full artifact."""
+    rounding. The cells are read from the ivf_index_full artifact, and
+    the cell populations and the exact top-10 counted per cell from
+    the ivf_nprobe_stats artifact, so a call runs only the probes and
+    one ladder aggregate."""
     from aproximacion_1_etl_spark.text.vector import ivf_nprobe_plan
 
-    qids = [0, 1, 2, 3, 4]
     return ivf_nprobe_plan(
         _ivf_index_full(spark, sf_dir),
-        query_ids=qids,
+        query_ids=[0, 1, 2, 3, 4],
         centroids=_trained_codebook(spark, sf_dir),
-        exact=_exact_topk(spark, sf_dir, qids, 10),
+        stats=_ivf_nprobe_stats(spark, sf_dir),
     )
 
 
@@ -372,14 +392,13 @@ def q_retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10 ANN, IVF-PQ composition: trained coarse codebook restricts
     each query to nprobe cells; probed candidates are scored through
-    their PQ codes only (ADC). One corpus projection computes cell +
-    code; both model artifacts are the memoized trained codebooks
-    (text/vector.py::ann_topk_ivfpq)."""
+    their PQ codes only (ADC). The PQ code column rides on the cells of
+    the ivf_index_full artifact; both codebooks are the memoized
+    trained artifacts (text/vector.py::ann_topk_ivfpq)."""
     from aproximacion_1_etl_spark.text.vector import ann_topk_ivfpq
 
-    emb = load_table(spark, sf_dir, "embeddings")
     return ann_topk_ivfpq(
-        emb,
+        _ivf_index_full(spark, sf_dir),
         query_ids=[0, 1, 2, 3, 4],
         coarse=_trained_codebook(spark, sf_dir),
         books=_trained_pq_books(spark, sf_dir),

@@ -36,6 +36,7 @@ Determinism: hyperplane components come from md5 of (table, plane, dim)
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
@@ -414,7 +415,12 @@ def _probed_candidates(
 ) -> DataFrame:
     """The rows of ``index`` in each corpus query's probed cells, the
     query itself excluded: (query_id, <id_col>, *cols), one row per
-    (query, row) pair."""
+    (query, row) pair.
+
+    The candidates move in ONE shuffle: they are hash-partitioned by
+    query_id before the pair-key dedup, and that partitioning also
+    satisfies ``_topk``'s per-query window, so neither the dedup nor
+    the window adds an Exchange of its own."""
     return (
         index.join(
             F.broadcast(probes),
@@ -424,6 +430,7 @@ def _probed_candidates(
             ],
         )
         .select("query_id", id_col, *cols)
+        .repartition("query_id")
         # Each vector lives in exactly one cell and probed cells are
         # distinct, so no duplicate (query, vec) pair is possible
         # TODAY — but that invariant is a property of the argmin
@@ -495,8 +502,7 @@ def ann_topk_ivf_queries(
 
 
 def semantic_dedup(
-    embeddings: DataFrame,
-    centroids: dict[int, list[float]],
+    index: DataFrame,
     threshold: float = 0.92,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -504,19 +510,20 @@ def semantic_dedup(
     leaf_tables: int = 2,
     dim: int = 64,
 ) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023): coarse-
-    cluster every embedding to its nearest IVF centroid map-side (the
-    cells of ``ivf_index`` — no shuffle for the assignment, no join),
-    then WITHIN each cell drop any vector that has a lower-id neighbor
-    at cosine >= ``threshold``. Returns per-cell (n_vectors, n_dropped,
-    n_kept).
+    """SemDeDup-style semantic deduplication (Abbas et al. 2023): every
+    embedding is coarse-clustered to its nearest IVF centroid (the
+    cells of ``index``), then WITHIN each cell any vector that has a
+    lower-id neighbor at cosine >= ``threshold`` is dropped. Returns
+    per-cell (n_vectors, n_dropped, n_kept).
 
-    The clustering is what bounds the quadratic: pairwise cosine runs
-    per cell, never across the corpus. ``centroids`` is the trained
-    codebook (the catalog path passes ``train_ivf_centroids`` output
-    sized by ``derive_n_centroids``), so cell populations stay roughly
-    constant as the corpus grows and the per-cell pair work stays flat.
-    Assignment is a single map-side pass. The keep-lowest-id rule makes
+    ``index`` is the persisted cell assignment of the corpus,
+    ``ivf_index(corpus, centroids)`` over the trained codebook (the
+    catalog path passes the ``ivf_index_full`` artifact, over
+    ``train_ivf_centroids`` output sized by ``derive_n_centroids``), so
+    a call runs no argmin. The clustering is what bounds the
+    quadratic: pairwise cosine runs per cell, never across the corpus,
+    and cell populations stay roughly constant as the corpus grows, so
+    the per-cell pair work stays flat. The keep-lowest-id rule makes
     the survivor set deterministic and engine-portable (DuckDB oracle
     mirrors cell assignment and the training recurrence
     operand-for-operand).
@@ -537,7 +544,7 @@ def semantic_dedup(
         lsh_bucket(F.col(vec_col), t, leaf_planes, dim).alias(f"_bkt{t}")
         for t in range(leaf_tables if leaf_planes > 0 else 0)
     ]
-    assigned = ivf_index(embeddings, centroids, id_col, vec_col).select(
+    assigned = index.select(
         F.col(id_col),
         unit.alias("nv"),
         "cell",
@@ -1716,7 +1723,7 @@ def ann_topk_pq(
 
 
 def ann_topk_ivfpq(
-    embeddings: DataFrame,
+    index: DataFrame,
     query_ids: list[int],
     coarse: dict[int, list[float]],
     books: dict[int, dict[int, list[float]]],
@@ -1730,23 +1737,23 @@ def ann_topk_ivfpq(
     nearest cells, and within probed cells candidates are scored
     through their PQ codes only (same ADC tables as ann_topk_pq).
 
-    ONE corpus projection computes both the coarse cell and the PQ
-    code per row (map-side, both codebooks are plan literals): the
-    code column rides on ``ivf_index``'s cells, and the queries probe
-    through ``_ivf_probes``; the probe join is broadcast; ADC lookups
-    index a 3-D literal
+    ``index`` is the persisted cell assignment of the corpus,
+    ``ivf_index(corpus, coarse)`` over the same ``coarse`` codebook,
+    so a call runs no corpus argmin: the PQ code column (map-side,
+    the books are plan literals) rides on the index's cells, and the
+    queries probe through ``_ivf_probes``; the probe join is
+    broadcast; ADC lookups index a 3-D literal
     (query x subspace x centroid) via array_position on the query id.
     Nothing corpus-sized shuffles before the top-k window. Fully
     value-checked: the oracle recomputes both codebooks in-engine and
     repeats the probe + ADC join."""
-    index = ivf_index(embeddings, coarse, id_col, vec_col)
     assigned = index.select(
         id_col, "cell", F.expr(_pq_code_sql(books, vec_col)).alias("code")
     )
     probes = _ivf_probes(
         _corpus_queries(index, query_ids, id_col, vec_col), coarse, nprobe
     ).select("query_id", "cell")
-    tables = _pq_dist_tables(embeddings, query_ids, books, id_col, vec_col)
+    tables = _pq_dist_tables(index, query_ids, books, id_col, vec_col)
     qids = sorted(tables)
     dt3d = _sql_array([tables[q] for q in qids])
     qid_arr = "array(" + ",".join(f"CAST({q} AS BIGINT)" for q in qids) + ")"
@@ -1947,11 +1954,53 @@ def pca_top_component(
     )
 
 
+class IvfNprobeStats(NamedTuple):
+    """The call-invariant inputs of ``ivf_nprobe_plan`` over one index
+    and one exact truth: ``pop`` (cell, pop), the rows per cell;
+    ``truth_cells`` (query_id, cell, n_truth), the exact top-k rows
+    counted per cell; ``n_total``, the corpus row count. Both
+    relations are eagerly checkpointed."""
+
+    pop: DataFrame
+    truth_cells: DataFrame
+    n_total: int
+
+
+def ivf_nprobe_stats(
+    index: DataFrame, exact: DataFrame, id_col: str = "vec_id"
+) -> IvfNprobeStats:
+    """Prepare ``index`` and ``exact`` for ``ivf_nprobe_plan``: the
+    two reductions over the whole index that no ladder point, probe
+    order or call changes, built once, so a caller that persists the
+    result (the catalog's ``ivf_nprobe_stats`` artifact) runs only
+    the probes and the ladder aggregate on every later call.
+
+    ``index``: the persisted cell assignment of the corpus
+    (``ivf_index``). ``exact``: the (query_id, <id_col>) exact top-k
+    of the planner's queries (``ann_topk_bruteforce`` at the planner's
+    k); it is codebook-independent, so a session shares one."""
+    assigned = index.select(id_col, "cell")
+    pop = (
+        assigned.groupBy("cell")
+        .agg(F.count("*").cast("bigint").alias("pop"))
+        .localCheckpoint(eager=True)
+    )
+    truth_cells = (
+        exact.select("query_id", id_col)
+        .join(assigned, id_col)
+        .groupBy("query_id", "cell")
+        .agg(F.count("*").cast("bigint").alias("n_truth"))
+        .localCheckpoint(eager=True)
+    )
+    n_total = pop.agg(F.sum("pop")).first()[0] or 0
+    return IvfNprobeStats(pop, truth_cells, n_total)
+
+
 def ivf_nprobe_plan(
     index: DataFrame,
     query_ids: list[int],
     centroids: dict[int, list[float]],
-    exact: DataFrame,
+    stats: IvfNprobeStats,
     ladder: tuple[int, ...] = (1, 2, 4, 8),
     k: int = 10,
     id_col: str = "vec_id",
@@ -1971,60 +2020,46 @@ def ivf_nprobe_plan(
     Everything is exact integers until two final divisions (hits/(|Q|·k)
     and scanned/(|Q|·N) — one double division each, engine-identical):
     the cells are the index's 6-dp argmin over the literal codebook,
-    the probe order per query is the same rounded distance sort, the
-    brute-force truth is the existing exact top-k, and the whole
-    ladder is one 1-row aggregate of conditional sums (one per ladder
-    point) over each of the (|Q|·k)- and (|Q|·nprobe_max)-sized
-    checkpointed relations.
+    the probe order per query is the same rounded distance sort, and
+    the brute-force truth is the exact top-k that ``stats`` counted
+    per cell.
 
     ``index``: the persisted cell assignment of the corpus,
-    ``ivf_index(corpus, centroids)`` over the same ``centroids``; the
-    corpus is not assigned here. ``exact``: the (query_id, <id_col>)
-    exact top-k of ``query_ids`` (``ann_topk_bruteforce`` at the same
-    k), materialized by the caller; it is codebook-independent, so a
-    session shares one."""
-    from aproximacion_1_etl_spark.functions.concurrency import overlap
-
+    ``ivf_index(corpus, centroids)`` over the same ``centroids``.
+    ``stats``: ``ivf_nprobe_stats(index, exact)`` for the exact top-k
+    of ``query_ids`` at this ``k``. A call runs only the query probe
+    order and ONE 1-row aggregate over probes ⋈ pop ⟕ truth_cells
+    (both broadcast): per ladder point p, the hits are sum(n_truth)
+    and the scanned rows sum(pop) over probe_rank <= p; one explode
+    then emits a row per nprobe. Summing n_truth over the probed
+    cells counts a truth row exactly when its cell's probe rank is
+    <= p, the same hits as taking each truth row's minimum probe rank:
+    each truth row has exactly one cell, and a query's probed cells
+    are distinct, so a truth row meets at most one probe row."""
     nq = len(query_ids)
-    probes = (
-        _ivf_probes(
-            _corpus_queries(index, query_ids, id_col, vec_col),
-            centroids,
-            max(ladder),
+    probes = _ivf_probes(
+        _corpus_queries(index, query_ids, id_col, vec_col),
+        centroids,
+        max(ladder),
+    ).select("query_id", "probe_rank", "cell")
+    rank = F.col("probe_rank")
+    ladder_sums = (
+        probes.join(F.broadcast(stats.pop), "cell")
+        .join(F.broadcast(stats.truth_cells), ["query_id", "cell"], "left")
+        .agg(
+            *[
+                F.coalesce(
+                    F.sum(F.when(rank <= p, F.col("n_truth"))), F.lit(0)
+                ).cast("bigint").alias(f"h{i}")
+                for i, p in enumerate(ladder)
+            ],
+            *[
+                F.sum(F.when(rank <= p, F.col("pop")))
+                .cast("bigint").alias(f"s{i}")
+                for i, p in enumerate(ladder)
+            ],
         )
-        .select("query_id", "probe_rank", "cell")
-        .localCheckpoint(eager=True)
     )
-    assigned = index.select(id_col, "cell")
-    truth = exact.select("query_id", id_col)
-    # the two corpus-touching reductions (each one pass over the
-    # persisted assignment) overlap through the driver pool (guide
-    # §2.6); their tiny outputs are checkpointed so the ladder
-    # aggregates never rescan anything corpus-sized
-    pop, capture = overlap(
-        lambda: assigned.groupBy("cell")
-        .agg(F.count("*").cast("bigint").alias("pop"))
-        .localCheckpoint(eager=True),
-        lambda: truth.join(assigned, id_col)
-        .join(probes, ["query_id", "cell"], "left")
-        .groupBy("query_id", id_col)
-        .agg(F.min("probe_rank").alias("captured_rank"))
-        .localCheckpoint(eager=True),
-    )
-    # the whole ladder in three 1-row aggregates: one conditional sum
-    # per ladder point over capture and over probes ⋈ pop, plus the
-    # corpus total; one explode then emits a row per nprobe
-    hits = capture.agg(*[
-        F.sum(F.when(F.col("captured_rank") <= p, 1).otherwise(0))
-        .cast("bigint").alias(f"h{i}")
-        for i, p in enumerate(ladder)
-    ])
-    scanned = probes.join(pop, "cell").agg(*[
-        F.sum(F.when(F.col("probe_rank") <= p, F.col("pop")))
-        .cast("bigint").alias(f"s{i}")
-        for i, p in enumerate(ladder)
-    ])
-    tot = pop.agg(F.sum("pop").cast("bigint").alias("n_total"))
     steps = F.array(*[
         F.struct(
             F.lit(p).cast("int").alias("nprobe"),
@@ -2034,9 +2069,7 @@ def ivf_nprobe_plan(
         for i, p in enumerate(ladder)
     ])
     return (
-        hits.crossJoin(scanned)
-        .crossJoin(tot)
-        .select("n_total", F.explode(steps).alias("l"))
+        ladder_sums.select(F.explode(steps).alias("l"))
         .select(
             "l.nprobe",
             _fround(
@@ -2045,7 +2078,7 @@ def ivf_nprobe_plan(
             _fround(
                 F.col("l.scanned_rows")
                 * F.lit(1.0)
-                / (F.lit(nq) * F.col("n_total")),
+                / F.lit(nq * stats.n_total),
                 6,
             ).alias("scan_frac"),
             "l.scanned_rows",

@@ -125,11 +125,14 @@ def test_models_and_exact_truths_are_built_only_in_the_registry():
     in the logreg_weights builder, the brute-force top-k only in the
     two exact-truth builders, in the operator's own key and for the
     drift trigger's wave 1 (a corpus no other key shares), the
-    PageRank graph only in the supplier_graph builder, and the
-    full-corpus IVF index only in the ivf_index_full builder."""
+    PageRank graph only in the supplier_graph builder, the
+    full-corpus IVF index only in the ivf_index_full builder and the
+    nprobe planner's cell populations and truth counts only in the
+    ivf_nprobe_stats builder."""
     assert _call_sites("logistic_regression_gd") == {"logreg_weights"}
     assert _call_sites("pagerank_graph") == {"supplier_graph"}
     assert _call_sites("ivf_index") == {"ivf_index_full"}
+    assert _call_sites("ivf_nprobe_stats") == {"ivf_nprobe_stats"}
     assert _call_sites("ann_topk_bruteforce") == {
         "exact_topk_full",
         "retrain_exact_topk",
@@ -144,7 +147,9 @@ def test_ann_primitives_are_defined_once():
     the corpus assignment (``ivf_index``), the probe order
     (``_ivf_probes``), the PQ subspace expression and the two
     trainers, which assign at 9 dp. A search that grows its own
-    ranking or argmin again fails here."""
+    ranking or argmin again fails here, and so does an index consumer
+    (``semantic_dedup``, ``ann_topk_ivfpq``) that assigns the corpus
+    itself instead of taking the persisted index."""
     import ast
 
     tree = ast.parse(
@@ -162,6 +167,7 @@ def test_ann_primitives_are_defined_once():
         )
 
     assert callers("row_number") == ["_topk"]
+    assert not {"semantic_dedup", "ann_topk_ivfpq"} & set(callers("ivf_index"))
     assert callers("_dist_structs_sql") == [
         "_ivf_probes",
         "_pq_subspace_sql",
@@ -169,3 +175,17 @@ def test_ann_primitives_are_defined_once():
         "train_ivf_centroids",
         "train_pq_codebooks",
     ]
+
+
+def test_queries_md_is_the_generator_output():
+    """QUERIES.md is exactly what tools/gen_queries_md.py renders from
+    the key docstrings: a docstring edit must regenerate the file."""
+    import importlib.util
+
+    root = PKG.parent
+    spec = importlib.util.spec_from_file_location(
+        "gen_queries_md", root / "tools" / "gen_queries_md.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    assert (root / "QUERIES.md").read_text(encoding="utf-8") == gen.render()

@@ -405,10 +405,11 @@ def test_r7_session_plan_contracts(spark, sf_dir):
         # r9: chunk rebuild (one doc_id window chain) + chunk-level
         # bm25 over the checkpointed chunk relation
         "chunk_retrieval_spans": 14,
-        # the whole ladder as one conditional-sum aggregate over each
-        # of two checkpointed micro-relations, then one explode; the
-        # cells come from the checkpointed ivf_index_full artifact
-        "ivf_nprobe_plan": 6,
+        # the whole ladder as one conditional-sum aggregate over the
+        # probes joined to the two broadcast ivf_nprobe_stats
+        # relations, then one explode; the cells come from the
+        # checkpointed ivf_index_full artifact
+        "ivf_nprobe_plan": 3,
         # the rank loop's output is checkpointed, so the visible plan
         # is the filter + top-20 over it
         "pagerank_suppliers": 0,

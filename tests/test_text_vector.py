@@ -227,6 +227,7 @@ def test_semantic_dedup_partitions_corpus(spark, sf_dir):
     """Semantic dedup: kept + dropped tile the corpus exactly, and at a
     threshold where near-dups exist something actually drops."""
     from aproximacion_1_etl_spark.text.vector import (
+        ivf_index,
         semantic_dedup,
         train_ivf_centroids,
     )
@@ -234,7 +235,7 @@ def test_semantic_dedup_partitions_corpus(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # the first 16 vectors as the codebook (the k-means init)
     cents = train_ivf_centroids(emb, n_centroids=16, iterations=0)
-    out = semantic_dedup(emb, cents, threshold=0.4).collect()
+    out = semantic_dedup(ivf_index(emb, cents), threshold=0.4).collect()
     assert sum(r["n_vectors"] for r in out) == emb.count()
     for r in out:
         assert r["n_kept"] + r["n_dropped"] == r["n_vectors"]
@@ -357,6 +358,7 @@ def test_semantic_dedup_banding_matches_plain_when_vacuous(spark):
     unchanged — banding only restricts which PAIRS are compared, so
     n_dropped can only stay equal or shrink per cell."""
     from aproximacion_1_etl_spark.text.vector import (
+        ivf_index,
         semantic_dedup,
         train_ivf_centroids,
     )
@@ -367,9 +369,10 @@ def test_semantic_dedup_banding_matches_plain_when_vacuous(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<DOUBLE>")
     cents = train_ivf_centroids(emb, n_centroids=4, iterations=0)
-    plain = semantic_dedup(emb, cents, threshold=0.8, dim=8)
+    index = ivf_index(emb, cents)
+    plain = semantic_dedup(index, threshold=0.8, dim=8)
     banded = semantic_dedup(
-        emb, cents, threshold=0.8, leaf_planes=2, leaf_tables=2, dim=8
+        index, threshold=0.8, leaf_planes=2, leaf_tables=2, dim=8
     )
     p = {r["cell"]: r for r in plain.collect()}
     b = {r["cell"]: r for r in banded.collect()}
@@ -378,7 +381,7 @@ def test_semantic_dedup_banding_matches_plain_when_vacuous(spark):
         assert p[c]["n_vectors"] == b[c]["n_vectors"]
         assert b[c]["n_dropped"] <= p[c]["n_dropped"]
     # planes=0 path is the identical operator (same plan family)
-    again = semantic_dedup(emb, cents, threshold=0.8, dim=8)
+    again = semantic_dedup(index, threshold=0.8, dim=8)
     assert sorted(map(tuple, again.collect())) == sorted(
         map(tuple, plain.collect())
     )
@@ -924,6 +927,7 @@ def test_ivfpq_probes_cells_and_ranks_neighbor_first(spark):
 
     from aproximacion_1_etl_spark.text.vector import (
         ann_topk_ivfpq,
+        ivf_index,
         train_ivf_centroids,
         train_pq_codebooks,
     )
@@ -938,7 +942,12 @@ def test_ivfpq_probes_cells_and_ranks_neighbor_first(spark):
     coarse = train_ivf_centroids(emb, n_centroids=8, iterations=2)
     books = train_pq_codebooks(emb, m=m, n_centroids=8, iterations=2)
     out = ann_topk_ivfpq(
-        emb, query_ids=[0], coarse=coarse, books=books, k=5, nprobe=3
+        ivf_index(emb, coarse),
+        query_ids=[0],
+        coarse=coarse,
+        books=books,
+        k=5,
+        nprobe=3,
     ).collect()
     assert out, "probe stage returned no candidates"
     top = [r["vec_id"] for r in sorted(out, key=lambda r: r["rank"])]
@@ -1047,12 +1056,21 @@ def test_exact_topk_is_a_prefix_of_one_artifact_build(
 
 
 @pytest.mark.parametrize(
-    "key, max_jobs", [("ann_topk_ivf", 5), ("ivf_nprobe_plan", 15)]
+    "key, max_jobs",
+    [
+        ("ann_topk_ivf", 3),
+        ("ivf_nprobe_plan", 4),
+        ("semantic_dedup", 9),
+        ("ann_topk_ivfpq", 4),
+    ],
 )
 def test_ivf_keys_probe_the_registry_index(warm_call, key, max_jobs):
-    """Both keys read the ivf_index_full artifact: once the corpus is
-    assigned, a call assigns only its queries (6 and 18 jobs when each
-    call re-ran the full-corpus argmin)."""
+    """The four keys read the ivf_index_full artifact: once the corpus
+    is assigned, a call assigns only its queries (6, 18, 11 and 7 jobs
+    when each call re-ran the full-corpus argmin). ivf_nprobe_plan
+    also reads its cell populations and per-cell truth counts from the
+    ivf_nprobe_stats artifact (14 jobs when a call recomputed them),
+    and the probed searches shuffle their candidates once."""
     rows, again, jobs = warm_call(key)
     assert sorted(again) == sorted(rows)
     assert len(jobs) <= max_jobs
@@ -1719,6 +1737,74 @@ def test_ivf_nprobe_plan_monotone_and_bounded(spark, sf_dir):
     assert rows[-1].recall_at_k > rows[0].recall_at_k or (
         rows[0].recall_at_k == 1.0
     )
+
+
+def test_ivf_nprobe_plan_equals_min_probe_rank_capture(spark):
+    """The ladder's per-cell truth sums equal the hits of a capture
+    that takes each truth row's minimum probe rank, on a planted index
+    where one truth row lies outside every probe (cell 99 is not in
+    the codebook), a probed cell holds no truth (query 0's cell 0, so
+    nprobe 1 captures nothing), two truth rows share one probed cell
+    (query 0's cell 1) and the largest ladder point (8) is above the
+    number of cells (3)."""
+    from collections import Counter
+
+    from aproximacion_1_etl_spark.text.vector import (
+        _corpus_queries,
+        _ivf_probes,
+        ivf_nprobe_plan,
+        ivf_nprobe_stats,
+    )
+
+    centroids = {0: [1.0, 0.0], 1: [0.0, 1.0], 2: [-1.0, 0.0]}
+    cells = {0: 0, 1: 1, 2: 1, 3: 1, 4: 99, 5: 2, 6: 0}
+    index = spark.createDataFrame(
+        [(v, [1.0 + v / 10, 0.1 * v], c) for v, c in cells.items()],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>, cell INT",
+    )
+    truth = [(0, 2), (0, 3), (0, 4), (1, 5)]
+    exact = spark.createDataFrame(truth, "query_id BIGINT, vec_id BIGINT")
+    qids, ladder, k = [0, 1], (1, 2, 8), 3
+
+    got = ivf_nprobe_plan(
+        index, qids, centroids, ivf_nprobe_stats(index, exact), ladder, k
+    ).collect()
+
+    rank_of = {
+        (r["query_id"], r["cell"]): r["probe_rank"]
+        for r in _ivf_probes(
+            _corpus_queries(index, qids, "vec_id", "embedding"),
+            centroids,
+            max(ladder),
+        ).collect()
+    }
+    captured = {
+        (q, v): min(
+            (r for (pq, c), r in rank_of.items()
+             if pq == q and c == cells[v]),
+            default=None,
+        )
+        for q, v in truth
+    }
+    assert captured[(0, 4)] is None
+    assert captured[(0, 2)] == captured[(0, 3)] is not None
+    assert rank_of[(0, 0)] == 1 and all(cells[v] != 0 for _q, v in truth)
+    assert max(ladder) > len(centroids)
+    assert len(rank_of) == len(qids) * len(centroids)
+    pop = Counter(cells.values())
+    want = [
+        (
+            p,
+            round(sum(r is not None and r <= p for r in captured.values())
+                  / (len(qids) * k), 6),
+            round(sum(pop[c] for (_q, c), r in rank_of.items() if r <= p)
+                  / (len(qids) * len(cells)), 6),
+            sum(pop[c] for (_q, c), r in rank_of.items() if r <= p),
+        )
+        for p in ladder
+    ]
+    assert want[0][1] == 0.0
+    assert sorted(map(tuple, got)) == want
 
 
 def test_retrieval_eval_exact_on_planted_rankings(spark):

@@ -14,7 +14,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 MAX_DESC = 220
 
@@ -26,7 +27,8 @@ def first_sentence(doc: str) -> str:
     return text.replace("|", "\\|")
 
 
-def main() -> None:
+def render() -> str:
+    """The text of QUERIES.md for the current catalog."""
     from aproximacion_1_etl_spark.oracles import ALL_ORACLES
     from aproximacion_1_etl_spark.queries import ALL_QUERIES
 
@@ -49,10 +51,14 @@ def main() -> None:
         desc = first_sentence(m.group(1) if m else doc)
         lines.append(f"| `{key}` | {kind} | {desc} |")
     lines.append("")
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "QUERIES.md"), "w") as f:
-        f.write("\n".join(lines))
-    print(f"wrote QUERIES.md ({len(ALL_QUERIES)} keys)")
+    return "\n".join(lines)
+
+
+def main() -> None:
+    text = render()
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
+        f.write(text)
+    print("wrote QUERIES.md")
 
 
 if __name__ == "__main__":
