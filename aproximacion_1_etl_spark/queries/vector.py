@@ -68,24 +68,33 @@ def _exact_topk(
     )
 
 
-def _ivf_index_full(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ivf_index_built(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int]:
     """The IVF index of the full embeddings table over the
     ``ivf_codebook_full`` codebook: (vec_id, embedding, cell), the
     one corpus assignment (text/vector.py::ivf_index), eagerly
-    checkpointed. A registry artifact, so ann_topk_ivf,
-    ann_topk_ivfpq, semantic_dedup and ivf_nprobe_stats read it
-    instead of re-running the full-corpus argmin on every call (in
-    production an IVF index persists its cell assignment once per
-    codebook)."""
+    checkpointed, and its row count. A registry artifact, so
+    ann_topk_ivf, ann_topk_ivfpq, semantic_dedup and ivf_nprobe_stats
+    read it instead of re-running the full-corpus argmin on every call
+    (in production an IVF index persists its cell assignment once per
+    codebook). The index holds one row per embedding, so its count is
+    the corpus size semantic_dedup sizes its leaf planes by."""
 
-    def build() -> DataFrame:
+    def build() -> tuple[DataFrame, int]:
         from aproximacion_1_etl_spark.text.vector import ivf_index
 
         emb = load_table(spark, sf_dir, "embeddings")
         cb = _trained_codebook(spark, sf_dir)
-        return ivf_index(emb, cb).localCheckpoint(eager=True)
+        index = ivf_index(emb, cb).localCheckpoint(eager=True)
+        return index, index.count()
 
     return artifact(spark, sf_dir, "ivf_index_full", ["embeddings"], build)
+
+
+def _ivf_index_full(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted full-corpus IVF index (``_ivf_index_built``)."""
+    return _ivf_index_built(spark, sf_dir)[0]
 
 
 def _ivf_nprobe_stats(spark: SparkSession, sf_dir: str):
@@ -270,22 +279,21 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment cost all grow sub-linearly) with in-cell sign-LSH
     banding sized by derive_leaf_planes so the per-leaf pair work
     stays bounded as cells grow; keep-lowest-id within (cell, band)
-    at cos>=0.4 (text/vector.py::semantic_dedup). The cells are read
-    from the ivf_index_full artifact."""
+    at cos>=0.4 (text/vector.py::semantic_dedup). The cells and the
+    corpus size are read from the ivf_index_full artifact."""
     from aproximacion_1_etl_spark.text.vector import (
         derive_leaf_planes,
         derive_n_centroids,
         semantic_dedup,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
+    index, n = _ivf_index_built(spark, sf_dir)
     nc = derive_n_centroids(n)
     # leaf target 8 (not the default 32) so the banded path engages
     # from the oracle SF upward — the code path the 100 TB posture
     # depends on is the one the value gate exercises
     return semantic_dedup(
-        _ivf_index_full(spark, sf_dir),
+        index,
         threshold=0.4,
         leaf_planes=derive_leaf_planes(n, nc, target_cell_size=8),
         leaf_tables=2,

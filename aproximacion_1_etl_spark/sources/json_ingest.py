@@ -21,7 +21,14 @@ Spark-first translation:
   ``input_file_name()`` predicate drops the sidecars by file name;
 - PERMISSIVE mode + ``columnNameOfCorruptRecord`` replaces the
   try/except-skip (F6) while keeping a countable record of corruption
-  for the metadata sidecar (S4).
+  for the metadata sidecar (S4);
+- a column declared ``STRING`` over a nested array or object (the wide
+  table's ``*_json`` children) holds compact JSON of the same value,
+  re-serialized by the parser as the reference's ``json.dumps`` does,
+  not the source bytes: whitespace and layout are not kept
+  (``session.get_spark`` turns off Spark's exact string parsing).
+  The children's own fields are parsed later by ``from_json``, so a
+  type mismatch inside an element nulls that field, not the order.
 """
 
 from __future__ import annotations

@@ -493,6 +493,9 @@ def ann_topk_ivf_queries(
     probes = _ivf_probes(queries, centroids, nprobe)
     cand = (
         index.join(F.broadcast(probes), "cell")
+        # one shuffle serves the dedup and _topk's window, as in
+        # _probed_candidates
+        .repartition("query_id")
         # one cell per vector + distinct probed cells make duplicates
         # impossible today; the guard keeps the result correct under
         # any future codebook/probing change (ann_topk_ivf's rule)

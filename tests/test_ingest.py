@@ -127,6 +127,75 @@ def test_explode_child_from_fixture(spark, tmp_path):
     assert rows[0]["status"] == 1
 
 
+def _write_pretty_day(root, orders):
+    day = root / "2024-03-01"
+    day.mkdir()
+    (day / "2024-03-01.json").write_text(json.dumps(orders, indent=2))
+    return f"{root}/*"
+
+
+def test_string_declared_nested_array_is_compact_json(spark, tmp_path):
+    # a pretty-printed child array declared STRING comes back as the
+    # parser's compact re-serialization (the reference's json.dumps),
+    # not the source bytes; exploding it matches a typed read
+    from aproximacion_1_etl_spark.operators.explode import explode_json_array
+
+    events = [
+        {"status": 1, "timestamp": "2024-03-01T10:15:30"},
+        {"status": 2, "timestamp": "2024-03-01T11:00:00"},
+    ]
+    path = _write_pretty_day(tmp_path, [
+        {"delivery_order_id": "DO-1", "events": events},
+        {"delivery_order_id": "DO-2", "events": []},
+    ])
+    clean, corrupt = split_corrupt(
+        read_day_files(spark, path, "delivery_order_id STRING, events STRING")
+    )
+    got = {r["delivery_order_id"]: r["events"] for r in clean.collect()}
+    assert got == {
+        "DO-1": json.dumps(events, separators=(",", ":")),
+        "DO-2": "[]",
+    }
+    assert corrupt.count() == 0
+    element = "status INT, timestamp STRING"
+    from_string = explode_json_array(
+        clean, "events", element, ["delivery_order_id"]
+    )
+    typed = read_day_files(
+        spark, path,
+        f"delivery_order_id STRING, events ARRAY<STRUCT<{element}>>",
+    ).selectExpr("delivery_order_id", "inline(events)")
+    rows = sorted(from_string.collect())
+    assert len(rows) == 2 and rows == sorted(typed.collect())
+
+
+def test_nested_type_mismatch_keeps_the_order(spark, tmp_path):
+    # a child element whose field does not fit its type must not make
+    # the order corrupt: ingest keeps the array as a string, and
+    # from_json at explode nulls only the mismatched field
+    from aproximacion_1_etl_spark.operators.explode import explode_json_array
+
+    path = _write_pretty_day(tmp_path, [
+        {"delivery_order_id": "DO-1",
+         "events": [{"status": "abc", "timestamp": "t1"}]},
+        {"delivery_order_id": "DO-2",
+         "events": [{"status": 2, "timestamp": "t2"}]},
+    ])
+    clean, corrupt = split_corrupt(
+        read_day_files(spark, path, "delivery_order_id STRING, events STRING")
+    )
+    assert sorted(r["delivery_order_id"] for r in clean.collect()) == [
+        "DO-1", "DO-2",
+    ]
+    assert corrupt.count() == 0
+    child = explode_json_array(
+        clean, "events", "status INT, timestamp STRING", ["delivery_order_id"]
+    )
+    assert sorted(tuple(r) for r in child.collect()) == [
+        ("DO-1", None, "t1"), ("DO-2", 2, "t2"),
+    ]
+
+
 def test_rest_datasource_plans_one_task_per_page(spark):
     """Python DataSource API: the (day, page) grid must become real
     InputPartitions (task-level retry/speculation), and the rows must

@@ -418,8 +418,9 @@ def test_r7_session_plan_contracts(spark, sf_dir):
         # the min-label loop lives behind its per-round cuts
         "incremental_dup_clusters": 6,
         # r10: map-side cell assignment over the checkpointed chunk
-        # index + broadcast probe join + top-k window
-        "chunk_ann_retrieval": 7,
+        # index + broadcast probe join + top-k window; the candidates
+        # shuffle once (asserted below) and the span join adds two
+        "chunk_ann_retrieval": 4,
         # r10: chunk BM25 rebuild (one doc_id window chain) + the ANN
         # branch + the |Q|·20 RRF fusion + span joins
         "chunk_hybrid_retrieval": 30,
@@ -432,6 +433,15 @@ def test_r7_session_plan_contracts(spark, sf_dir):
     }.items():
         got = exchanges(plan_of(key))
         assert got <= bound, (key, got, bound)
+
+    # the IVF candidates move in ONE query_id shuffle, which serves both
+    # the pair-key dedup and _topk's window
+    ann = plan_of("chunk_ann_retrieval")
+    cand = [
+        ln for ln in ann.splitlines()
+        if "Exchange hashpartitioning(query_id" in ln
+    ]
+    assert len(cand) == 1, ann
 
 
 def test_bucketed_adjacency_store_joins_without_store_exchange(

@@ -1060,7 +1060,7 @@ def test_exact_topk_is_a_prefix_of_one_artifact_build(
     [
         ("ann_topk_ivf", 3),
         ("ivf_nprobe_plan", 4),
-        ("semantic_dedup", 9),
+        ("semantic_dedup", 6),
         ("ann_topk_ivfpq", 4),
     ],
 )
@@ -1070,7 +1070,9 @@ def test_ivf_keys_probe_the_registry_index(warm_call, key, max_jobs):
     when each call re-ran the full-corpus argmin). ivf_nprobe_plan
     also reads its cell populations and per-cell truth counts from the
     ivf_nprobe_stats artifact (14 jobs when a call recomputed them),
-    and the probed searches shuffle their candidates once."""
+    semantic_dedup reads the corpus size from the index artifact (9
+    jobs when a call counted the table), and the probed searches
+    shuffle their candidates once."""
     rows, again, jobs = warm_call(key)
     assert sorted(again) == sorted(rows)
     assert len(jobs) <= max_jobs
