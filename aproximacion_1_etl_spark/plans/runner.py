@@ -17,6 +17,10 @@ pre-shrunk before joining (|keys| rows, not |child| rows).
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -115,6 +119,52 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def post_publish_gate(landed: DataFrame) -> tuple[list[dict], list[dict]]:
+    """The post-publish data-quality gate (the validation the
+    reference's 29-SP chain never does): the metadata sidecar and the
+    DQ report of a landed work table, from ONE aggregate collected once.
+
+    Each row rule is a SQL predicate that is true on a violating row;
+    ``orderkey_unique``, a set rule, is the fourth. GROUPING SETS over
+    one scan: the status set counts each status's orders, those without
+    events (``sin_eventos``) and each row rule's violations; the key set
+    counts rows per ``o_orderkey``, and the second level turns those
+    into the duplicate-key count (null keys form one group, as in
+    ``groupBy``). Returns (one record per status, one record per rule).
+    The rule counts are summed over the status rows, so an empty table
+    has no status records and every rule at 0.
+    """
+    rules = {
+        "orderkey_not_null": "o_orderkey IS NULL",
+        "totalprice_positive": "o_totalprice <= 0",
+        "n_items_non_negative": "n_items < 0",
+    }
+    counted = {"sin_eventos": "latest_event_type IS NULL", **rules}
+    rows = (
+        landed.groupingSets(
+            [["o_orderstatus"], ["o_orderkey"]], "o_orderstatus", "o_orderkey"
+        )
+        .agg(
+            F.grouping("o_orderstatus").alias("by_key"),
+            F.count("*").alias("total_ordenes"),
+            *(F.count(F.when(F.expr(p), 1)).alias(c) for c, p in counted.items()),
+        )
+        .groupBy("by_key", "o_orderstatus")
+        .agg(
+            *(F.sum(c).alias(c) for c in ["total_ordenes", *counted]),
+            F.count(F.when(F.col("total_ordenes") > 1, 1)).alias("orderkey_unique"),
+        )
+        .collect()
+    )
+    meta = [
+        {c: r[c] for c in ("o_orderstatus", "total_ordenes", "sin_eventos")}
+        for r in rows if not r["by_key"]
+    ]
+    dq = {rule: sum(r[rule] for r in rows if not r["by_key"]) for rule in rules}
+    dq["orderkey_unique"] = sum(r["orderkey_unique"] for r in rows if r["by_key"])
+    return meta, [{"rule": k, "n_violations": v} for k, v in dq.items()]
+
+
 def run_daily_job(
     spark: SparkSession, sf_dir: str, out_dir: str
 ) -> dict:
@@ -123,77 +173,42 @@ def run_daily_job(
     this one function. Under ``out_dir`` it lands:
 
     - ``delivery_order_work/``: the work table as parquet (S7);
-    - ``metadata/``: the per-status sidecar as JSON (S4);
-    - ``dq_report/``: one row per data-quality rule with its violation
-      count, as JSON;
+    - ``metadata/``: the per-status sidecar, one JSON line per status (S4);
+    - ``dq_report/``: one JSON line per data-quality rule with its
+      violation count;
     - ``run_summary.json``: the returned summary, i.e. ``rows`` and
       ``statuses`` (both read off the metadata), ``dq_violations`` per
       rule and ``out``, the work table's path.
 
-    After landing, the work table is scanned once for the metadata and
-    once for the DQ rules.
+    After landing, the work table is scanned once, by
+    ``post_publish_gate``. The few rows it collects are written with
+    plain file I/O, and each directory is replaced, not appended to.
     """
-    import json as _json
-    import os as _os
-
     work = run_daily(spark, sf_dir)
-    work_path = _os.path.join(out_dir, "delivery_order_work")
+    work_path = os.path.join(out_dir, "delivery_order_work")
     work.write.mode("overwrite").parquet(work_path)
 
     # the schema is known, so reading it back starts no footer-read job
-    landed = spark.read.schema(work.schema).parquet(work_path)
-    meta = landed.groupBy("o_orderstatus").agg(
-        F.count("*").alias("total_ordenes"),
-        F.count(F.when(F.col("latest_event_type").isNull(), 1)).alias(
-            "sin_eventos"
-        ),
-    ).cache()
-    # Post-publish data-quality gate (the validation the reference's
-    # 29-SP chain never does): row rules fused into one scan of the
-    # landed table + a PK uniqueness check; violations land beside the
-    # data and in the run summary.
-    from aproximacion_1_etl_spark.functions.quality import (
-        row_rule_violations,
-        unique_violations,
-    )
-
-    dq = row_rule_violations(
-        landed,
-        {
-            "orderkey_not_null": F.col("o_orderkey").isNull(),
-            "totalprice_positive": F.col("o_totalprice") <= 0,
-            "n_items_non_negative": F.col("n_items") < 0,
-        },
-    ).unionByName(
-        unique_violations(landed, ["o_orderkey"], "orderkey_unique")
-    ).cache()
-    # write from the cache, then collect from it: rebuilding a DataFrame
-    # from collected rows would start a Python worker just to write them
-    meta.coalesce(1).write.mode("overwrite").json(
-        _os.path.join(out_dir, "metadata")
-    )
-    dq.coalesce(1).write.mode("overwrite").json(
-        _os.path.join(out_dir, "dq_report")
-    )
-    meta_rows = meta.collect()
-    dq_rows = dq.collect()
-    meta.unpersist()
-    dq.unpersist()
+    meta, dq = post_publish_gate(spark.read.schema(work.schema).parquet(work_path))
+    for name, records in (("metadata", meta), ("dq_report", dq)):
+        shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
+        os.makedirs(os.path.join(out_dir, name))
+        with open(os.path.join(out_dir, name, "part-00000.json"), "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in records)
 
     summary = {
-        "rows": sum(r["total_ordenes"] for r in meta_rows),
-        "statuses": len(meta_rows),
-        "dq_violations": {r["rule"]: r["n_violations"] for r in dq_rows},
+        "rows": sum(r["total_ordenes"] for r in meta),
+        "statuses": len(meta),
+        "dq_violations": {r["rule"]: r["n_violations"] for r in dq},
         "out": work_path,
     }
-    with open(_os.path.join(out_dir, "run_summary.json"), "w") as f:
-        _json.dump(summary, f)
+    with open(os.path.join(out_dir, "run_summary.json"), "w") as f:
+        json.dump(summary, f)
     return summary
 
 
 def main() -> None:
     import argparse
-    import json as _json
 
     from aproximacion_1_etl_spark.session import get_spark
 
@@ -203,7 +218,7 @@ def main() -> None:
     args = ap.parse_args()
     spark = get_spark("daily-runner")
     spark.sparkContext.setLogLevel("ERROR")
-    print(_json.dumps(run_daily_job(spark, args.sf_dir, args.out)))
+    print(json.dumps(run_daily_job(spark, args.sf_dir, args.out)))
 
 
 if __name__ == "__main__":
