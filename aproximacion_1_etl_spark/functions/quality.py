@@ -25,11 +25,11 @@ def row_rule_violations(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
 
     ``rules`` maps rule name -> boolean Column that is True when the
     row VIOLATES the rule. Returns (rule STRING, n_violations BIGINT),
-    one row per rule, computed as a single fused aggregate.
+    one row per rule, computed as a single fused aggregate. A count,
+    not a sum, so an empty table reports 0 violations, not null.
     """
     aggs = [
-        F.sum(F.when(cond, 1).otherwise(0)).cast("bigint").alias(name)
-        for name, cond in rules.items()
+        F.count(F.when(cond, 1)).alias(name) for name, cond in rules.items()
     ]
     wide = df.agg(*aggs)
     stacked = ", ".join(f"'{n}', {n}" for n in rules)

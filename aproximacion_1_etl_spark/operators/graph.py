@@ -1,8 +1,9 @@
 """Iterative graph algorithms as DataFrame loops (SURVEY.md §2.10).
 
 The reference has no graph operators; the engine needs the iterative
-join-aggregate pattern anyway (dedup_clusters' connected components is
-one instance — text/dedup.py). PageRank is the canonical second one:
+join-aggregate pattern anyway: near-dup clusters (text/dedup.py::
+dedup_clusters) are ``connected_components`` over candidate pairs.
+PageRank is the canonical second one:
 per iteration, every node sends rank/out_degree along its edges and
 ranks re-aggregate — a join + groupBy per step, shuffling on the node
 key both times.
@@ -19,6 +20,12 @@ size (and task serialization time) grows without bound and long
 loops eventually stack-overflow the optimizer. The node count enters
 the plan as a broadcast 1-row relation, never as a driver-side
 ``.count()`` — the driver holds only conf, never data.
+
+Every graph key builds on one definition of each primitive here: the
+pairwise array expansion (``array_combinations``), the canonical
+(u < v) edge relation (``canonical_edges``), its both-orientations
+form (``both_orientations``), its per-node degree (``node_degrees``)
+and the loop sizing rule (``loop_partitions``).
 """
 
 from __future__ import annotations
@@ -26,7 +33,7 @@ from __future__ import annotations
 from typing import NamedTuple
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 # triangle_delta's membership joins broadcast the Δ-edge relation; the
 # documented contract is a daily-batch-sized Δ. Above this row bound
@@ -34,6 +41,83 @@ from pyspark.sql import DataFrame
 # ceiling but sized for driver memory headroom) the hint is dropped
 # and the join degrades to a shuffle instead of a broadcast OOM.
 TRIANGLE_DELTA_BROADCAST_MAX = 10_000_000
+
+
+def loop_partitions(rel: DataFrame) -> int:
+    """Partitions for an iterative loop over the materialized relation
+    ``rel``: one per 50k rows, at least 2, at most defaultParallelism.
+    A loop's working relation is often orders of magnitude smaller
+    than the corpus it came from, and each round's task scheduling
+    dominates when a few thousand rows spread over the whole cluster;
+    at 100 TB-scale relations n // 50k >= defaultParallelism, so the
+    rule is a no-op exactly where full parallelism matters. Counts
+    ``rel`` once: pass a checkpointed relation."""
+    dp = rel.sparkSession.sparkContext.defaultParallelism
+    return max(2, min(dp, rel.count() // 50_000 + 1))
+
+
+def array_combinations(arr: str, *names: str) -> Column:
+    """Every combination of ``len(names)`` elements of the array column
+    ``arr`` taken in array order, exploded to one struct row each with
+    the fields ``names``: on a sorted distinct array each row is
+    strictly increasing. The map-side basket iterator of the graph
+    family (a basket of b items emits C(b, k) rows, never a self-join):
+    level l walks the suffix after level l-1's element, so no
+    combination repeats."""
+    k = len(names)
+    fields = ", ".join(f"x{j} AS {n}" for j, n in enumerate(names))
+    body = f"struct({fields})"
+    for lvl in range(k - 1, -1, -1):
+        offset = " + ".join(f"i{j}" for j in range(lvl))
+        src = (
+            f"slice({arr}, {offset} + {lvl + 1}, size({arr}))"
+            if lvl else arr
+        )
+        if lvl == k - 1:
+            body = f"transform({src}, x{lvl} -> {body})"
+        else:
+            body = f"flatten(transform({src}, (x{lvl}, i{lvl}) -> {body}))"
+    return F.explode(F.expr(body))
+
+
+def canonical_edges(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """The undirected edge relation (u, v) with u < v: one row per
+    edge, self-loops and repeats dropped, in either input orientation.
+    The explicit repartition in front of the distinct keeps this
+    small-byte but CPU-heavy relation at full width under AQE's
+    byte-based coalescing (parallelismFirst=false would shrink it to
+    1-3 tasks; a user repartition is preserved), and leaves it keyed
+    on (u, v), so ``count_triangles`` over it adds no exchange."""
+    dp = edges.sparkSession.sparkContext.defaultParallelism
+    a, b = F.col(src), F.col(dst)
+    return (
+        edges.filter(a != b)
+        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+        .repartition(dp, "u", "v")
+        .distinct()
+    )
+
+
+def both_orientations(edges: DataFrame) -> DataFrame:
+    """Each edge (u, v) of an undirected relation and its reverse
+    (v, u), as columns (u, v): the adjacency form every per-node pass
+    groups or joins on."""
+    return edges.select("u", "v").unionByName(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+
+
+def node_degrees(edges: DataFrame, name: str = "degree") -> DataFrame:
+    """(node, ``name``) degree of every endpoint of a canonical (u, v)
+    edge relation: each edge counts once at both of its endpoints."""
+    return (
+        both_orientations(edges)
+        .select(F.col("u").alias("node"))
+        .groupBy("node")
+        .agg(F.count("*").alias(name))
+    )
 
 
 class PageRankGraph(NamedTuple):
@@ -115,7 +199,6 @@ def pagerank(
     graph: PageRankGraph,
     iterations: int = 5,
     damping: float = 0.85,
-    detect_fixed_point: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a graph prepared by
     ``pagerank_graph``; returns (node, rank). Only the rank loop runs
@@ -127,22 +210,7 @@ def pagerank(
 
     On a depth-1 graph (``graph.sender_receives`` False) the loop
     stops after 2 iterations: further iterations are the identity, so
-    the result is bit-identical to running all ``iterations``.
-
-    ``detect_fixed_point=True`` adds a per-iteration bit-exact
-    convergence probe: when ranks_i == ranks_{i-1} for every node
-    (double equality — not a tolerance), every further iteration is
-    the identity (the update is a deterministic function of the rank
-    vector, and the decimal-cast sums make it partitioning-
-    independent), so stopping early is provably result-identical to
-    running all ``iterations``. The probe needs consecutive vectors
-    materialized, so it checkpoints EVERY iteration (vs every 2nd) and
-    runs one extra join job per iteration — a fixed per-iteration tax
-    (~0.5 s at sf0.1, see PERF.md) that only pays off when the loop is
-    long enough, or the graph converged enough, to skip iterations.
-    Default off: the catalog's fixed-iteration oracle runs the exact
-    advertised count; the structural depth-1 early stop is free and
-    stays always-on."""
+    the result is bit-identical to running all ``iterations``."""
     e_deg, nodes, non_receivers, nsc, sender_receives = graph
     # The build dropped null endpoints, so this filter keeps every
     # edge. The optimizer infers it for every iteration's edges but
@@ -160,7 +228,6 @@ def pagerank(
     ranks = nodes.crossJoin(F.broadcast(nsc)).select(
         "node", (F.lit(1.0) / F.col("n_nodes")).alias("rank")
     )
-    prev = None
     for i in range(effective_iters):
         contribs = (
             e_deg.join(ranks, e_deg["src"] == ranks["node"])
@@ -194,25 +261,8 @@ def pagerank(
         # stays bounded at depth 2 and each checkpoint is its own
         # measurable job, but the loop runs half as many jobs as a
         # per-iteration checkpoint — per-job fixed overhead, not data
-        # volume, dominates an iteration at any SF. The convergence
-        # probe needs every iteration materialized, so it switches to
-        # per-iteration checkpoints (that cost is part of the probe
-        # tax, measured in PERF.md).
-        if detect_fixed_point:
-            ranks = ranks.localCheckpoint(eager=True)
-            if prev is not None:
-                changed = (
-                    ranks.alias("cur")
-                    .join(prev.alias("pv"), "node")
-                    .where(F.col("cur.rank") != F.col("pv.rank"))
-                    .limit(1)
-                    .count()
-                )
-                if changed == 0:
-                    break  # bit-exact fixed point: all further
-                    # iterations are the identity
-            prev = ranks
-        elif i % 2 == 1 or i == effective_iters - 1:
+        # volume, dominates an iteration at any SF.
+        if i % 2 == 1 or i == effective_iters - 1:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
@@ -264,14 +314,8 @@ def adamic_adar_scores(
     lists = lists.repartition(dp)
     wedges = lists.select(
         (F.lit(1.0) / F.log(F.size("ss").cast("double"))).alias("w"),
-        F.explode(
-            F.expr(
-                "flatten(transform(ss, (x, i) ->"
-                " transform(slice(ss, i + 2, size(ss)),"
-                " y -> struct(x AS s1, y AS s2))))"
-            )
-        ).alias("pr"),
-    ).select(F.col("pr.s1").alias("s1"), F.col("pr.s2").alias("s2"), "w")
+        array_combinations("ss", "s1", "s2").alias("pr"),
+    ).select("pr.s1", "pr.s2", "w")
     return wedges.groupBy("s1", "s2").agg(
         F.count("*").cast("bigint").alias("common_nbrs"),
         F.sum(F.col("w").cast("decimal(30,15)"))
@@ -287,7 +331,6 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     node: str = "pk",
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """Minimum hop distance from a seed set over a directed edge list,
     bounded at ``max_hops`` expansions. ``seeds`` carries one column
@@ -305,14 +348,10 @@ def bfs_hops(
     the DEFINED semantics: the result is "min hop distance, truncated
     at max_hops", and nodes farther away are intentionally absent.
 
-    ``materialize_edges=False`` skips the edge-list checkpoint for
-    callers that pass an ALREADY-materialized relation
-    (_co_order_edges eagerly checkpoints its output) — a second
-    checkpoint of a pure column-rename would re-materialize the full
-    edge relation and double its block-manager footprint."""
+    ``edges`` is read once per round, so pass a materialized relation
+    (_co_order_edges eagerly checkpoints its output): the loop does
+    not checkpoint it again."""
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    if materialize_edges:
-        e = e.localCheckpoint(eager=True)
     state = (
         seeds.select(F.col(node).alias("pk"))
         .withColumn("dist", F.lit(0))
@@ -358,15 +397,17 @@ def connected_components(
     to the component minimum. Propagation alone needs diameter rounds;
     with the shortcut the round count drops to ~log2(diameter) — the
     device that makes a 100 TB graph loop converge in single-digit
-    rounds instead of hundreds. Every round ends in an eager lineage
-    cut + a bit-exact changed-probe (limit(1).count()), so iteration
-    stops the first round nothing moves — provably at the fixpoint,
-    since the update is a deterministic monotone function of the
-    label vector. Generalizes the LSH-pair components inside
-    dup_clusters (text/dedup.py) to any edge relation.
+    rounds instead of hundreds. Every round ends in a lineage cut
+    whose one job is a bit-exact changed-count, so iteration stops the
+    first round nothing moves — provably at the fixpoint, since the
+    update is a deterministic monotone function of the label vector.
+    The loop's relations are sized to the edge count
+    (``loop_partitions``): near-dup pair graphs, the ``dedup_clusters``
+    input, are tiny next to the corpus they come from.
 
     Isolated nodes (no edges) are the caller's concern: only nodes
-    appearing in ``edges`` are labeled.
+    appearing in ``edges`` with a neighbor other than themselves are
+    labeled.
 
     Raises ``RuntimeError`` if ``max_iterations`` is exhausted before
     the changed-probe hits zero: an unconverged label vector is WRONG
@@ -374,25 +415,15 @@ def connected_components(
     loud error here beats a downstream oracle mismatch. With pointer
     jumping the round count is ~log2(diameter), so the default cap of
     20 covers graphs with diameter up to ~2^20 edges-on-a-path."""
-    e = (
-        edges.filter(F.col(src) != F.col(dst))
-        .select(
-            F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
-        )
-        .distinct()
+    b = both_orientations(canonical_edges(edges, src, dst)).localCheckpoint(
+        eager=False
     )
-    dp = edges.sparkSession.sparkContext.defaultParallelism
+    parts = loop_partitions(b)
     # b is re-joined on v EVERY round and never changes: pin its
     # partitioning to the join key once, before the checkpoint
     # (LogicalRDD preserves outputPartitioning), so each round only
     # shuffles the |V|-sized label vector, never the edge relation.
-    b = (
-        e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        .repartition(dp, "v")
-        .localCheckpoint(eager=True)
-    )
+    b = b.repartition(parts, "v").localCheckpoint(eager=True)
     labels = (
         b.select(F.col("u").alias("node"))
         .distinct()
@@ -435,6 +466,7 @@ def connected_components(
         new = (
             new.join(jump, new["comp"] == jump["_jn"])
             .select("node", F.col("_jc").alias("comp"), "_old")
+            .coalesce(parts)
             .localCheckpoint(eager=False)
         )
         changed = new.where(F.col("comp") != F.col("_old")).count()
@@ -452,17 +484,14 @@ def connected_components(
     return labels
 
 
-def count_triangles(
-    edges: DataFrame, src: str = "a", dst: str = "b",
-    canonical: bool = False,
-) -> DataFrame:
+def count_triangles(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts via the degree-ordered node-iterator
     (the canonical distributed triangle algorithm: Suri & Vassilvitskii
     "Counting triangles and the curse of the last reducer", WWW'11).
 
-    Input: undirected edge list, one row per edge, any orientation,
-    no self-loops required to be pre-removed. Output: (node,
-    n_triangles) for every node in >= 1 triangle.
+    Input: a canonical (u < v) distinct edge relation (u, v) — what
+    ``canonical_edges`` returns, or a store built from it. Output:
+    (node, n_triangles) for every node in >= 1 triangle.
 
     Why degree ordering matters at 100 TB: wedges (2-paths) are
     enumerated at their LOWEST-degree endpoint, so per-pivot work is
@@ -471,36 +500,23 @@ def count_triangles(
     only ~m under degree ordering. The total-order tiebreak
     (degree, node) keeps the orientation acyclic and deterministic.
 
-    Plan: canonicalize + distinct (1 shuffle), degree aggregate
-    (1 shuffle, |V| rows), orient via two degree joins (|V|-sized
-    relation; broadcast when small, shuffle-join otherwise — Spark's
-    AQE picks), wedge self-join on the pivot, then one join against
+    Plan: the input keyed on (u, v) (no shuffle when it comes straight
+    from ``canonical_edges``), degree aggregate (1 shuffle, |V| rows),
+    orient via two degree joins (|V|-sized relation; broadcast when
+    small, shuffle-join otherwise — Spark's AQE picks), wedge
+    self-join on the pivot, then one join against
     oriented edges closes the wedge. The triangle set is orientation-
     independent, so a plain a<b formulation (what the DuckDB oracle
     runs) yields identical counts.
     """
     dp = edges.sparkSession.sparkContext.defaultParallelism
-    a, b = F.col(src), F.col(dst)
-    # explicit repartition before distinct: AQE's byte-based
-    # coalescing (parallelismFirst=false) would shrink this small-
-    # byte but CPU-heavy relation to 1-3 tasks; a user repartition is
-    # preserved, keeping the wedge stages at full width.
-    # ``canonical=True`` skips the canonicalize+distinct shuffle for
-    # callers whose edge relation is ALREADY (u < v) distinct (e.g.
-    # the maintained-store bulk build) — one |E| shuffle saved.
-    if canonical:
-        canon = edges.select(a.alias("u"), b.alias("v")).repartition(
-            dp, "u", "v"
-        )
-    else:
-        canon = (
-            edges.filter(a != b)
-            .select(
-                F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
-            )
-            .repartition(dp, "u", "v")
-            .distinct()
-        )
+    # explicit repartition: AQE's byte-based coalescing
+    # (parallelismFirst=false) would shrink this small-byte but
+    # CPU-heavy relation to 1-3 tasks; a user repartition is
+    # preserved, keeping the wedge stages at full width. Straight
+    # after ``canonical_edges`` (hash-partitioned on (u, v) at this
+    # width) the planner drops it; over a checkpointed store it stays.
+    canon = edges.select("u", "v").repartition(dp, "u", "v")
     # The DAG fans out from canon (degree branch x2, orientation) and
     # from oriented (adjacency x2, edge probe): without a cut Spark
     # re-derives the edge-building self-join once per branch (~9
@@ -508,17 +524,12 @@ def count_triangles(
     # Eager localCheckpoint is the same bounded-lineage device
     # pagerank uses: |E|-sized, executor-resident, no driver data.
     canon = canon.localCheckpoint()
-    deg = (
-        canon.select(F.col("u").alias("n"))
-        .unionAll(canon.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = node_degrees(canon, "deg")
     du = deg.select(
-        F.col("n").alias("u"), F.col("deg").alias("deg_u")
+        F.col("node").alias("u"), F.col("deg").alias("deg_u")
     )
     dv = deg.select(
-        F.col("n").alias("v"), F.col("deg").alias("deg_v")
+        F.col("node").alias("v"), F.col("deg").alias("deg_v")
     )
     oriented = (
         canon.join(du, "u")
@@ -634,22 +645,13 @@ def kcore(
     BigQuery SPs, Composer/DAG_cloudrun_dataflow_sp.py:90-362); this
     extends the engine's curation surface the way the LLM-pipeline
     brief requires."""
-    e = (
-        edges.filter(F.col(src) != F.col(dst))
-        .select(
-            F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
-        )
-        .distinct()
-    )
     dp = edges.sparkSession.sparkContext.defaultParallelism
     # pinned u-partitioning (preserved through localCheckpoint and the
     # broadcast semi-joins below): every round's degree aggregate
     # groups on u, so aligning the checkpointed relation with that key
     # removes the per-round shuffle in front of the aggregate
     alive = (
-        e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
+        both_orientations(canonical_edges(edges, src, dst))
         .repartition(dp, "u")
         .localCheckpoint(eager=True)
     )
@@ -705,8 +707,8 @@ def edge_adjacency(
     exchanges on the store side (plan contract pinned in
     tests/test_plan_features.py::
     test_bucketed_adjacency_store_joins_without_store_exchange)."""
-    both = edges.select(F.col("u").alias("n"), F.col("v").alias("m")).unionAll(
-        edges.select(F.col("v").alias("n"), F.col("u").alias("m"))
+    both = both_orientations(edges).select(
+        F.col("u").alias("n"), F.col("v").alias("m")
     )
     if num_partitions:
         both = both.repartition(num_partitions, "n")
@@ -841,13 +843,8 @@ def bulk_graph_stats(edges: DataFrame) -> DataFrame:
     store) and the streaming twin's bootstrap wave share, so the two
     keys that must maintain the identical store cannot drift (they
     already share one rebuild oracle for the same reason)."""
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("degree"))
-    )
-    tri = count_triangles(edges, "u", "v", canonical=True)
+    deg = node_degrees(edges)
+    tri = count_triangles(edges)
     return deg.join(tri, "node", "full_outer").select(
         "node",
         F.coalesce(F.col("degree"), F.lit(0)).cast("bigint").alias("degree"),
@@ -871,12 +868,7 @@ def fold_graph_stats(
     store over old ∪ new, equal to a from-scratch rebuild (the oracle
     pins that equality). History is read only through its adjacency
     arrays (one groupBy), never re-enumerated wedge-wise."""
-    ddeg = (
-        new_edges.select(F.col("u").alias("node"))
-        .unionAll(new_edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("delta_degree"))
-    )
+    ddeg = node_degrees(new_edges, "delta_degree")
     dtri = triangle_delta(old_edges, new_edges, delta_count=delta_count)
     return (
         stats.join(ddeg, "node", "full_outer")
@@ -948,12 +940,7 @@ def forget_graph_stats(
     )
     deleted = marked.filter(F.col("_hit")).drop("_hit")
     remaining_edges = marked.filter(F.col("_hit").isNull()).drop("_hit")
-    ddeg = (
-        deleted.select(F.col("u").alias("node"))
-        .unionAll(deleted.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("delta_degree"))
-    )
+    ddeg = node_degrees(deleted, "delta_degree")
     dtri = triangle_delta(
         remaining_edges, deleted, delta_count=delta_count
     )

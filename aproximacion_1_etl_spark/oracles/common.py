@@ -1621,7 +1621,8 @@ FROM pq LEFT JOIN hits ON pq.query_id = hits.query_id
 
 # MinHash-LSH candidate pairs closed under transitivity (shared by the
 # dup_clusters and cluster_safe_split oracles): recursive reachability
-# mirror of text/dedup.py::dedup_clusters' min-label propagation.
+# mirror of text/dedup.py::dedup_clusters, which labels through
+# operators/graph.py::connected_components.
 _CLUSTER_CTES = """
 sig AS (
   SELECT doc_id, b,

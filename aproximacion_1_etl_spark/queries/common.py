@@ -12,6 +12,11 @@ from typing import Any
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from aproximacion_1_etl_spark.functions.rounding import _fround
+from aproximacion_1_etl_spark.operators.graph import (
+    array_combinations,
+    both_orientations,
+    canonical_edges,
+)
 from aproximacion_1_etl_spark.sources.tables import load_table
 from aproximacion_1_etl_spark.streaming.harness import (
     run_to_end,
@@ -1207,6 +1212,25 @@ def _ewma_chart(daily: DataFrame) -> DataFrame:
     )
 
 
+def _order_baskets(op: DataFrame) -> DataFrame:
+    """(l_orderkey, ps): each order's part keys as a sorted distinct
+    array, from any (l_orderkey, l_partkey) relation in ONE orderkey
+    shuffle — collect_set dedups, so no pre-distinct pass. The basket
+    form every co-order graph and basket-mining key starts from; the
+    sorted array is what ``array_combinations`` expands map-side. The
+    explicit repartition keeps the byte-small basket relation at full
+    width under AQE's byte-based coalescing (the adamic_adar /
+    count_triangles device), so the CPU-heavy expansion after it does
+    not run on 1-2 tasks."""
+    dp = op.sparkSession.sparkContext.defaultParallelism
+    return (
+        op.select("l_orderkey", "l_partkey")
+        .repartition(dp, F.col("l_orderkey"))
+        .groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+    )
+
+
 def _co_order_edges(
     li: DataFrame,
     max_basket: int | None = None,
@@ -1218,47 +1242,25 @@ def _co_order_edges(
     graph family: an order with b distinct parts emits b(b-1) directed
     edges, so total volume is sum(basket²) and one hot order goes
     quadratic at a skewed 100× — orders beyond the cap are dropped
-    BEFORE the self-join (where the blowup would happen), not after.
-    The materialized edge list is eagerly checkpointed: every consumer
-    (BFS rounds, component rounds) reuses it instead of re-running the
-    per-order self-join (measured 12.2 s -> 6.0 s on bfs_hop_distance
-    when the build ran per-round)."""
-    # Basket form (one fact shuffle, map-side pairwise expansion) —
-    # the _capped_order_baskets plan shape: collect_set dedups (no
-    # pre-distinct pass) AND applies the basket cap as a size() filter
-    # (no separate count aggregate + semi-join), and the sorted array
-    # emits each unordered pair once (u < v), so the dedup/min_orders
-    # aggregate shuffles HALF the directed pair volume the old
-    # per-order self-join exchanged. Both orientations are mirrored
-    # map-side after the aggregate. The explicit repartitions keep the
-    # byte-small basket relation at full width under AQE's byte-based
-    # coalescing (the adamic_adar / count_triangles device) and leave
-    # the checkpointed edge relation keyed on src for the per-round
-    # frontier joins every consumer loop runs.
+    BEFORE the pairwise expansion (where the blowup would happen), not
+    after. The materialized edge list is eagerly checkpointed: every
+    consumer (BFS rounds, component rounds) reuses it instead of
+    re-running the build (measured 12.2 s -> 6.0 s on
+    bfs_hop_distance when the build ran per-round)."""
+    # Basket form (one fact shuffle, map-side pairwise expansion):
+    # size(ps) applies the basket cap (no separate count aggregate +
+    # semi-join), and the sorted array emits each unordered pair once
+    # (u < v), so the dedup/min_orders aggregate shuffles HALF the
+    # directed pair volume a per-order self-join exchanged. Both
+    # orientations are mirrored map-side after the aggregate, and the
+    # final repartition leaves the checkpointed edge relation keyed
+    # on src for the per-round frontier joins every consumer loop runs.
     dp = li.sparkSession.sparkContext.defaultParallelism
-    per_order = (
-        li.select("l_orderkey", "l_partkey")
-        .repartition(dp, F.col("l_orderkey"))
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") >= 2)
-    )
+    per_order = _order_baskets(li).filter(F.size("ps") >= 2)
     if max_basket is not None:
         per_order = per_order.filter(F.size("ps") <= max_basket)
     pairs = per_order.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ps"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("ps"), i + F.lit(2), F.size(F.col("ps"))
-                        ),
-                        lambda y: F.struct(x.alias("u"), y.alias("v")),
-                    ),
-                )
-            )
-        ).alias("e")
+        array_combinations("ps", "u", "v").alias("e")
     ).select("e.u", "e.v")
     if min_orders > 1:
         und = (
@@ -1268,11 +1270,9 @@ def _co_order_edges(
             .select("u", "v")
         )
     else:
-        und = pairs.distinct()
-    edges = und.select(
+        und = canonical_edges(pairs, "u", "v")
+    edges = both_orientations(und).select(
         F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionByName(
-        und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
     return edges.repartition(dp, "src").localCheckpoint(eager=True)
 
@@ -1331,6 +1331,7 @@ __all__ = [
     "scd2_audit",
     "_crossing_pick",
     "_ewma_chart",
+    "_order_baskets",
     "_co_order_edges",
     "_geo_points",
     "_PIP_POLYGONS",

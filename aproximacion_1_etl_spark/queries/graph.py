@@ -5,6 +5,10 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from aproximacion_1_etl_spark.operators.graph import (
+    array_combinations,
+    canonical_edges,
+)
 from aproximacion_1_etl_spark.sources.tables import load_table
 from .common import *  # noqa: F401,F403
 
@@ -179,37 +183,12 @@ def q_triangle_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-ordering optimization is semantics-preserving."""
     from aproximacion_1_etl_spark.operators.graph import count_triangles
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
     # Edges WITHOUT a fact-table self-join: group parts per order and
     # emit the pairwise combinations map-side (order baskets are
     # small, so the fan-out is bounded; one orderkey shuffle replaces
-    # the self-join's two). The explicit repartition keeps the basket
-    # aggregation wide under byte-based AQE coalescing.
-    per_order = (
-        li.repartition(
-            spark.sparkContext.defaultParallelism, F.col("l_orderkey")
-        )
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = per_order.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ps"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("ps"), i + F.lit(2), F.size(F.col("ps"))
-                        ),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
-        ).alias("e")
-    ).select("e.a", "e.b")
-    counts = count_triangles(edges)
+    # the self-join's two), then the canonical (u, v) distinct.
+    li = load_table(spark, sf_dir, "lineitem")
+    counts = count_triangles(_canon_co_order_edges(li))
     w = Window.orderBy(F.col("n_triangles").desc(), F.col("node").asc())
     return (
         counts.withColumn("rank", F.row_number().over(w))
@@ -239,26 +218,15 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_item")
     )
     freq = item_n.filter(F.col("n_item") >= min_sup)
-    # repartition before the basket aggregate so the pairwise explode
-    # + pair-count partial aggregation keep full width under AQE's
-    # byte-based coalescing (same device as frequent_triples)
-    baskets = (
+    # the shared basket build repartitions before its aggregate, so
+    # the pairwise explode + pair-count partial aggregation keep full
+    # width under AQE's byte-based coalescing
+    baskets = _order_baskets(
         items.join(F.broadcast(freq.select("l_partkey")), "l_partkey")
-        .repartition(
-            spark.sparkContext.defaultParallelism, F.col("l_orderkey")
-        )
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("its"))
     )
     pairs = baskets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(its, (x, i) ->"
-                " transform(slice(its, i + 2, size(its)),"
-                " y -> struct(x AS p1, y AS p2))))"
-            )
-        ).alias("pr")
-    ).select(F.col("pr.p1").alias("p1"), F.col("pr.p2").alias("p2"))
+        array_combinations("ps", "p1", "p2").alias("pr")
+    ).select("pr.p1", "pr.p2")
     pair_n = (
         pairs.groupBy("p1", "p2")
         .agg(F.count("*").cast("bigint").alias("n_pair"))
@@ -400,9 +368,7 @@ def q_bfs_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = p.filter(F.col("p_brand") == "Brand#11").select(
         F.col("p_partkey").alias("pk")
     )
-    # edges already materialized by _co_order_edges — don't pay a
-    # second checkpoint of the same relation
-    state = bfs_hops(edges, seeds, max_hops=3, materialize_edges=False)
+    state = bfs_hops(edges, seeds, max_hops=3)
     return state.select(
         F.col("pk").cast("bigint").alias("p_partkey"),
         F.col("dist").cast("int").alias("dist"),
@@ -410,18 +376,20 @@ def q_bfs_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 named connected components (generalizes the LSH-pair CC
-    inside dup_clusters to any edge relation —
-    operators/graph.py::connected_components): components of the
-    STRONG co-order graph (parts sharing >= 2 distinct orders, so an
-    edge means repeated association, not one-off co-purchase), each
-    node labeled with the minimum part key reachable from it.
+    """§2.10 named connected components
+    (operators/graph.py::connected_components, the one components
+    loop: dup_clusters labels its LSH pairs through it too):
+    components of the STRONG co-order graph (parts sharing >= 2
+    distinct orders, so an edge means repeated association, not
+    one-off co-purchase), each node labeled with the minimum part key
+    reachable from it.
 
     Plan: the shared _co_order_edges build (max_basket=64 wedge lever)
     feeds alternating min-label propagation with pointer jumping —
     per round ONE join + one aggregate + one |V| shortcut self-join,
-    eager lineage cut, bit-exact changed probe; rounds ~ log2(graph
-    diameter) instead of diameter. The oracle is the full min-label
+    a lineage cut whose one job is the bit-exact changed-count, loop
+    partitions sized to the edge count; rounds ~ log2(graph diameter)
+    instead of diameter. The oracle is the full min-label
     transitive closure (recursive CTE), so convergence — not just
     plausible labels — is what's value-checked."""
     from aproximacion_1_etl_spark.operators.graph import (
@@ -430,7 +398,7 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     edges = _co_order_edges(li, max_basket=64, min_orders=2)
-    labels = connected_components(edges, "src", "dst", max_iterations=20)
+    labels = connected_components(edges)
     return labels.select(
         F.col("node").cast("bigint").alias("p_partkey"),
         F.col("comp").cast("bigint").alias("component"),
@@ -558,35 +526,17 @@ def q_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nf") >= 3)
         .select("l_partkey")
     )
-    # explicit repartition between the frequent-item prune and the
-    # basket aggregate: the basket relation is byte-small, so AQE's
-    # byte-based coalescing would run the m'³ triple explode and its
-    # partial aggregation on 1-2 tasks (the adamic_adar device;
-    # measured 5.2 s -> 2.6 s for the count stage at sf0.1)
-    baskets = (
-        op.join(freq_items, "l_partkey")
-        .repartition(
-            spark.sparkContext.defaultParallelism, F.col("l_orderkey")
-        )
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("its"))
-        .filter(F.size("its") >= 3)
+    # the shared basket build repartitions between the frequent-item
+    # prune and the basket aggregate: the basket relation is
+    # byte-small, so AQE's byte-based coalescing would run the m'³
+    # triple explode and its partial aggregation on 1-2 tasks
+    # (measured 5.2 s -> 2.6 s for the count stage at sf0.1)
+    baskets = _order_baskets(op.join(freq_items, "l_partkey")).filter(
+        F.size("ps") >= 3
     )
     triples = baskets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(its, (x, i) ->"
-                " flatten(transform(slice(its, i + 2, size(its)),"
-                " (y, j) -> transform(slice(its, i + j + 3,"
-                " size(its)), z -> struct(x AS a, y AS b,"
-                " z AS c))))))"
-            )
-        ).alias("t")
-    ).select(
-        F.col("t.a").alias("a"),
-        F.col("t.b").alias("b"),
-        F.col("t.c").alias("c"),
-    )
+        array_combinations("ps", "a", "b", "c").alias("t")
+    ).select("t.a", "t.b", "t.c")
     counts = triples.groupBy("a", "b", "c").agg(
         F.count("*").cast("bigint").alias("support")
     )
@@ -618,13 +568,7 @@ def _canon_co_order_edges(op: DataFrame) -> DataFrame:
     _basket_edges pairwise expansion — one definition of the pair
     arithmetic for the flat-row (streaming) and basket (batch)
     paths."""
-    dp = op.sparkSession.sparkContext.defaultParallelism
-    per_order = (
-        op.repartition(dp, F.col("l_orderkey"))
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
-    return _basket_edges(per_order)
+    return _basket_edges(_order_baskets(op))
 
 
 def _capped_order_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -667,17 +611,12 @@ def _capped_order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r13 task 4)."""
 
     def build() -> DataFrame:
-        dp = spark.sparkContext.defaultParallelism
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
+        li = load_table(spark, sf_dir, "lineitem")
         o = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("l_orderkey"), "o_orderdate"
         )
         return (
-            li.repartition(dp, F.col("l_orderkey"))
-            .groupBy("l_orderkey")
-            .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+            _order_baskets(li)
             .filter((F.size("ps") <= 64) & (F.size("ps") >= 2))
             .join(o, "l_orderkey")
             .localCheckpoint(eager=True)
@@ -692,25 +631,8 @@ def _basket_edges(baskets: DataFrame) -> DataFrame:
     """Canonical (u < v) DISTINCT edges from sorted basket arrays —
     the map-side pairwise expansion (arrays are sorted, so x before y
     in ps gives u < v directly); one (u, v) shuffle for the distinct."""
-    return (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ps"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ps"), i + F.lit(2), F.size(F.col("ps"))
-                            ),
-                            lambda y: F.struct(x.alias("u"), y.alias("v")),
-                        ),
-                    )
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-    )
+    pairs = baskets.select(array_combinations("ps", "u", "v").alias("e"))
+    return canonical_edges(pairs.select("e.u", "e.v"), "u", "v")
 
 
 def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

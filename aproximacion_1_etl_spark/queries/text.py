@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from aproximacion_1_etl_spark.operators.graph import array_combinations
 from aproximacion_1_etl_spark.sources.tables import load_table
 from aproximacion_1_etl_spark.text.analysis import (
     fingerprint,
@@ -2950,14 +2951,8 @@ def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_set("source")).alias("ss")
     ).filter(F.size("ss") >= 2)
     pairs = tok_srcs.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ss, (x, i) ->"
-                " transform(slice(ss, i + 2, size(ss)),"
-                " y -> struct(x AS a, y AS b))))"
-            )
-        ).alias("pr")
-    ).select(F.col("pr.a").alias("src_a"), F.col("pr.b").alias("src_b"))
+        array_combinations("ss", "src_a", "src_b").alias("pr")
+    ).select("pr.src_a", "pr.src_b")
     inter = pairs.groupBy("src_a", "src_b").agg(
         F.count("*").cast("bigint").alias("n_common")
     )

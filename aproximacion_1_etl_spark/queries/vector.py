@@ -6,6 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from aproximacion_1_etl_spark.functions.concurrency import overlap
+from aproximacion_1_etl_spark.operators.graph import array_combinations
 from aproximacion_1_etl_spark.sources.tables import load_table
 from aproximacion_1_etl_spark.text.multimodal import (
     attach_media,
@@ -1066,30 +1067,9 @@ def q_item_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle_cooccurrence); the pair relation is symmetrized by a
     cheap union, so each part ranks all its neighbors. Item counts
     are |parts|-sized and broadcast onto the pair relation."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    per_order = (
-        li.repartition(
-            spark.sparkContext.defaultParallelism, F.col("l_orderkey")
-        )
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
+    per_order = _order_baskets(load_table(spark, sf_dir, "lineitem"))
     pairs = per_order.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ps"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("ps"), i + F.lit(2), F.size(F.col("ps"))
-                        ),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
-        ).alias("e")
+        array_combinations("ps", "a", "b").alias("e")
     ).select("e.a", "e.b")
     cab = pairs.groupBy("a", "b").agg(F.count("*").alias("c_ab"))
     item_n = per_order.select(

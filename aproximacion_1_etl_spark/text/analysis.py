@@ -13,6 +13,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from aproximacion_1_etl_spark.operators.graph import loop_partitions
+
 # Tiny per-language stopword markers for the n-gram/stopword heuristic.
 LANG_MARKERS: dict[str, list[str]] = {
     "es": ["el", "la", "de", "que", "los", "una"],
@@ -937,7 +939,8 @@ def bpe_train_merges(
       proceeds.
     - ``localCheckpoint`` truncates lineage each round — otherwise the
       fold nests ``n_merges`` lambdas deep and Catalyst re-derives
-      every prior round per job (same rule as ``dedup_clusters``).
+      every prior round per job (the ``connected_components`` loop
+      cuts its rounds the same way).
 
     Determinism: counts are exact integer sums; rank ties break on
     (count desc, p1 asc, p2 asc); the greedy fold is order-defined. The
@@ -960,19 +963,11 @@ def bpe_train_merges(
     )
     cur = wc.select(chars.alias("syms"), "cnt").localCheckpoint()
     # Size the training loop's partitioning to the VOCABULARY, not the
-    # cluster (same rule as dedup_clusters): the distinct-word relation
-    # is Zipf-small, and per-round task scheduling dominates when a few
-    # thousand words spread over defaultParallelism partitions. The
-    # count is ~free (cur was just checkpointed), coalesce is narrow,
-    # and at real vocab sizes n//50k returns full parallelism.
-    n_vocab = cur.count()
-    parts = max(
-        2,
-        min(
-            docs.sparkSession.sparkContext.defaultParallelism,
-            n_vocab // 50_000 + 1,
-        ),
-    )
+    # cluster (operators/graph.py::loop_partitions, the rule the
+    # connected-components loop sizes itself by): the distinct-word
+    # relation is Zipf-small. The count is ~free (cur was just
+    # checkpointed) and coalesce is narrow.
+    parts = loop_partitions(cur)
     cur = cur.coalesce(parts)
     merges: list[tuple[int, str, str, int]] = []
     for step in range(1, n_merges + 1):

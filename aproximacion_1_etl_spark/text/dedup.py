@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from aproximacion_1_etl_spark.operators.graph import connected_components
+
 DEFAULT_BANDS = 8
 
 # (bands, rows-per-band) ladder for the LSH banding planner
@@ -667,7 +669,6 @@ def dedup_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iters: int = 20,
 ) -> DataFrame:
     """Connected components over near-dup candidate pairs: every doc in
     a pair gets a ``cluster_id`` = the smallest doc id reachable through
@@ -677,85 +678,18 @@ def dedup_clusters(
     transitive closure matters because A~B and B~C must collapse to ONE
     kept doc even when A~C was never a candidate pair.
 
-    Iterative min-label propagation: each round every node adopts
-    ``min(own label, neighbour labels)``; converges in O(graph
-    diameter) rounds. Near-dup graphs are overwhelmingly tiny cliques
-    and short chains (diameter 2-4), so the loop exits after a handful
-    of rounds long before ``max_iters`` — checked per round with a
-    cheap ``changed == 0`` aggregate. Each round's labels are
-    ``localCheckpoint``-ed: the lineage would otherwise double per
-    round (label join re-derives all prior rounds), which at 100 TB
-    means re-running the whole LSH pipeline once per iteration. For
-    graphs with genuinely long chains, swap the propagation step for
-    the large-star/small-star algorithm (Kiveris et al., "Connected
-    Components in MapReduce") — same per-round join shape, O(log^2 n)
-    rounds.
-    """
-    default_par = pairs.sparkSession.sparkContext.defaultParallelism
-    sym = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-    sym = sym.localCheckpoint()
-    # Size the LOOP partitioning to the materialized graph, not the
-    # cluster: the edge relation is usually orders of magnitude smaller
-    # than the corpus (only docs with a near-dup candidate appear), and
-    # each round's jobs' task-scheduling overhead dominates when
-    # thousands of rows are spread over default_par partitions. The
-    # count is ~free (sym was just checkpointed). At 100 TB-scale
-    # graphs n//50k >= default_par, so this is a no-op exactly where
-    # full parallelism matters. The re-checkpoint pins the loop
-    # relation's partitioning to the per-round JOIN key (dst), so each
-    # round shuffles only the label vector, never the edge relation.
-    n_edges = sym.count()
-    parts = max(2, min(default_par, n_edges // 50_000 + 1))
-    sym = sym.repartition(parts, "dst").localCheckpoint()
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iters):
-        # ONE join + ONE aggregate per round (the connected_components
-        # fused form): each node's own label rides the union tagged in
-        # a second column, so min(label) over own ∪ neighbor rows is
-        # the propagation step and min(_own) recovers the previous
-        # label for the convergence probe — a narrow filter over the
-        # just-checkpointed relation, not a second join.
-        nbr = sym.join(labels, sym["dst"] == labels["id"]).select(
-            F.col("src").alias("id"),
-            F.col("label"),
-            F.lit(None).cast(labels.schema["label"].dataType).alias(
-                "_own"
-            ),
-        )
-        # LAZY checkpoint + a FULL count of changed rows as the round's
-        # single materializing action: the filter is narrow over the
-        # checkpoint-marked relation, so counting it computes (and
-        # persists) every partition — one job per round where the
-        # eager-checkpoint + limit(1) probe pair cost two, and the
-        # changed-count termination test is unchanged.
-        new_labels = (
-            labels.select("id", "label", F.col("label").alias("_own"))
-            .unionByName(nbr)
-            .groupBy("id")
-            .agg(
-                F.min("label").alias("label"),
-                F.min("_own").alias("_old"),
-            )
-            .coalesce(parts)
-            .localCheckpoint(eager=False)
-        )
-        labels = new_labels.select("id", "label")
-        if (
-            new_labels.filter(F.col("label") < F.col("_old")).count()
-            == 0
-        ):
-            break
-    return labels.select(
-        F.col("id").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("id") == F.col("label")).alias("keep"),
+    A projection over ``operators/graph.py::connected_components``:
+    min-label propagation with pointer jumping, so a long chain of
+    pairs converges in ~log2(diameter) rounds, each round's labels
+    lineage-cut, the loop sized to the pair count, and a
+    ``RuntimeError`` rather than unconverged labels when the round cap
+    runs out. A pair of a doc with itself links nothing and is
+    dropped."""
+    cc = connected_components(pairs, a_col, b_col)
+    return cc.select(
+        F.col("node").alias("doc_id"),
+        F.col("comp").alias("cluster_id"),
+        (F.col("node") == F.col("comp")).alias("keep"),
     )
 
 
@@ -764,7 +698,6 @@ def fold_dup_clusters(
     new_pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iters: int = 20,
 ) -> DataFrame:
     """INCREMENTAL dedup-cluster maintenance — the missing member of
     the maintained-state family (VERDICT r9 task 3), and the
@@ -788,8 +721,8 @@ def fold_dup_clusters(
     1. each pair endpoint adopts its ROOT — the store's cluster_id
        for known docs, its own id for store-absent docs (new docs and
        old singletons);
-    2. contracted edges (root_a != root_b) run the SAME bounded
-       min-label propagation as ``dedup_clusters`` — but over a
+    2. contracted edges (root_a != root_b) run the SAME connected
+       components as ``dedup_clusters`` — but over a
        relation bounded by the batch's pair count, never the corpus:
        a new doc bridging two 1M-doc clusters moves 1 contracted
        edge, not 2M rows;
@@ -826,10 +759,8 @@ def fold_dup_clusters(
         .select("root_a", F.coalesce("_root", "_b").alias("root_b"))
     )
     contracted = pa.filter(F.col("root_a") != F.col("root_b"))
-    labels = dedup_clusters(
-        contracted, a_col="root_a", b_col="root_b", max_iters=max_iters
-    ).select(
-        F.col("doc_id").alias("_node"), F.col("cluster_id").alias("_label")
+    labels = connected_components(contracted, "root_a", "root_b").select(
+        F.col("node").alias("_node"), F.col("comp").alias("_label")
     )
     # the remap / append relations are bounded by the batch's touched
     # roots — eager-cut so the relabel join doesn't re-run the loop
@@ -858,7 +789,6 @@ def forget_doc_clusters(
     sig_store: DataFrame,
     deleted_ids: DataFrame,
     min_matching_bands: int = 2,
-    max_iters: int = 20,
 ) -> DataFrame:
     """DELETION support for the maintained dedup-cluster store —
     the governance edge of the trio (VERDICT r10 task 6), pairing
@@ -877,7 +807,7 @@ def forget_doc_clusters(
        to exactly those members (components are CLOSED under the LSH
        pair relation — a pair can never cross a component boundary,
        so the restriction loses nothing vs a full rebuild), and
-       re-cluster with the same bounded min-label propagation;
+       re-cluster with the same connected components;
     3. a survivor left with NO surviving pair drops out of the store
        (the store holds only docs with >= 1 pair — exactly what a
        from-scratch build over the post-delete corpus produces);
@@ -927,9 +857,7 @@ def forget_doc_clusters(
     pairs = minhash_candidate_pairs(
         member_sigs, min_matching_bands=min_matching_bands
     )
-    relabeled = dedup_clusters(pairs, max_iters=max_iters).select(
-        "doc_id", "cluster_id"
-    )
+    relabeled = dedup_clusters(pairs).select("doc_id", "cluster_id")
     untouched = store.join(
         F.broadcast(affected), "cluster_id", "left_anti"
     ).select("doc_id", "cluster_id")
@@ -957,7 +885,7 @@ def cluster_safe_split(
 
     ``pairs`` is any near-dup candidate-pair relation (e.g.
     ``minhash_candidate_pairs`` output); components come from
-    ``dedup_clusters`` (iterative min-label propagation). Docs that
+    ``dedup_clusters`` (connected components). Docs that
     appear in no pair are their own singleton group (group key =
     doc id). Split assignment is ``split_column``'s md5-prefix range
     on the group key: pure per-row expression, no coordination, stable

@@ -6,6 +6,7 @@ plan to make them errors."""
 
 import os
 import pathlib
+import re
 import warnings
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "aproximacion_1_etl_spark"
@@ -175,6 +176,51 @@ def test_ann_primitives_are_defined_once():
         "train_ivf_centroids",
         "train_pq_codebooks",
     ]
+
+
+GRAPH_DIRS = ("operators", "text", "queries")
+# the sorted-array pair expansion written out: slice(xs, i + 2, ...)
+PAIR_EXPANSION = re.compile(
+    r"slice\(\s*[^,()]+(\([^()]*\))?\s*,\s*i\w*\s*\+\s*(F\.lit\()?2\b"
+)
+# a co-order basket: an order's parts collected into one array
+CO_ORDER_BASKET = re.compile(r'collect_set\(\s*"l_partkey"\s*\)')
+
+
+def test_graph_primitives_are_defined_once():
+    """The graph family has one connected-components loop
+    (``operators/graph.py::connected_components``, which
+    ``dedup_clusters`` projects), one pairwise basket expansion
+    (``array_combinations``, which builds the expression and writes no
+    ``slice(xs, i + 2, ...)`` out) and one co-order basket build
+    (``queries/common.py::_order_baskets``). A second min-label loop
+    (a loop that groups and takes a min), a hand-written pair
+    expansion or another ``collect_set("l_partkey")`` fails here."""
+    import ast
+
+    min_loops, pairs, baskets = [], [], []
+    for d in GRAPH_DIRS:
+        for path in sorted((PKG / d).glob("*.py")):
+            src = path.read_text(encoding="utf-8")
+            where = f"{d}/{path.name}"
+            pairs += [where for _ in PAIR_EXPANSION.finditer(src)]
+            baskets += [where for _ in CO_ORDER_BASKET.finditer(src)]
+            for top in ast.walk(ast.parse(src)):
+                if not isinstance(top, ast.FunctionDef):
+                    continue
+                for loop in ast.walk(top):
+                    if not isinstance(loop, (ast.For, ast.While)):
+                        continue
+                    called = {
+                        getattr(n.func, "attr", None)
+                        for n in ast.walk(loop)
+                        if isinstance(n, ast.Call)
+                    }
+                    if {"groupBy", "min"} <= called:
+                        min_loops.append(f"{where}::{top.name}")
+    assert min_loops == ["operators/graph.py::connected_components"]
+    assert pairs == []
+    assert baskets == ["queries/common.py"]
 
 
 def test_queries_md_is_the_generator_output():

@@ -120,8 +120,7 @@ def _reference_gate(landed):
     ).unionByName(unique_violations(landed, ["o_orderkey"], "orderkey_unique"))
     return (
         {r[0]: (r[1], r[2]) for r in meta.collect()},
-        # a sum over no rows is null: an empty table's row rules read 0
-        {r["rule"]: r["n_violations"] or 0 for r in dq.collect()},
+        {r["rule"]: r["n_violations"] for r in dq.collect()},
     )
 
 

@@ -59,3 +59,19 @@ def test_row_rules_are_one_scan(spark):
     assert "Union" not in plan and "Join" not in plan
     got = {r["rule"]: r["n_violations"] for r in out.collect()}
     assert got == {"a": 20, "b": 0, "c": 0}
+
+
+def test_row_rules_count_zero_on_an_empty_table(spark):
+    """No rows violate nothing: every rule reads 0, not null."""
+    df = spark.createDataFrame([], "id BIGINT, price DOUBLE")
+    got = {
+        r["rule"]: r["n_violations"]
+        for r in row_rule_violations(
+            df,
+            {
+                "id_not_null": F.col("id").isNull(),
+                "price_positive": F.col("price") <= 0,
+            },
+        ).collect()
+    }
+    assert got == {"id_not_null": 0, "price_positive": 0}

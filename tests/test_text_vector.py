@@ -170,18 +170,29 @@ def test_kmeans_ivf_training_reduces_error_deterministically(spark, sf_dir):
 def test_dedup_clusters_transitive_closure(spark):
     # chain A-B, B-C plus isolated pair D-E: A,B,C must share one
     # cluster (min id 0) with exactly one keeper, even though A-C was
-    # never a pair.
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (10, 11)], ["doc_a", "doc_b"]
-    )
+    # never a pair. A 41-doc chain of pairs (diameter 40) must
+    # converge too: every doc in cluster 0, only doc 0 kept — plain
+    # min-label propagation would need 40 rounds.
     from aproximacion_1_etl_spark.text.dedup import dedup_clusters
 
-    out = {r["doc_id"]: (r["cluster_id"], r["keep"])
-           for r in dedup_clusters(pairs).collect()}
-    assert out == {
-        0: (0, True), 1: (0, False), 2: (0, False),
-        10: (10, True), 11: (10, False),
-    }
+    cases = [
+        (
+            [(0, 1), (1, 2), (10, 11)],
+            {
+                0: (0, True), 1: (0, False), 2: (0, False),
+                10: (10, True), 11: (10, False),
+            },
+        ),
+        (
+            [(i, i + 1) for i in range(40)],
+            {i: (0, i == 0) for i in range(41)},
+        ),
+    ]
+    for pairs, want in cases:
+        df = spark.createDataFrame(pairs, ["doc_a", "doc_b"])
+        out = {r["doc_id"]: (r["cluster_id"], r["keep"])
+               for r in dedup_clusters(df).collect()}
+        assert out == want
 
 
 def test_hll_union_estimate_close_to_exact(spark, sf_dir):
